@@ -147,19 +147,19 @@ object SparkEntry {
     // unblocked oracle restricted to delivery probes
     "join_fuzzy_delta" -> ((s: SparkSession, d: String) =>
       FuzzyIndex.joinFuzzyDelta(s, d)),
-    // the signature store maintained from a delivery STREAM — the
-    // sixth appendOnce family; per-string signatures make the served
-    // matches micro-batch-boundary independent, so the key runs under
-    // join_fuzzy_delta's exact oracle — see streaming.FuzzyMaintain
+    // the signature store maintained from a delivery STREAM;
+    // per-string signatures make the served matches micro-batch-
+    // boundary independent, so the key runs under join_fuzzy_delta's
+    // exact oracle — see streaming.DeliveryStore.fuzzy
     "stream_fuzzy_delta" -> ((s: SparkSession, d: String) =>
-      streaming.FuzzyMaintain.joinFuzzyStream(s, d)),
+      streaming.DeliveryStore.fuzzy().drive(s, d)),
     // the signature store's FULL lifecycle: N-delivery chain +
     // compact (tags fold into the sidecar) + post-compaction replay
     // no-op, served from the compacted store — per-string exactness
     // keeps the content bit-equal, so the same exact oracle gates the
-    // whole lifecycle — see streaming.FuzzyMaintain.fuzzyCompactCheck
+    // whole lifecycle — see streaming.DeliveryStore.fuzzyCompactCheck
     "fuzzy_compact_check" -> ((s: SparkSession, d: String) =>
-      streaming.FuzzyMaintain.fuzzyCompactCheck(s, d)),
+      streaming.DeliveryStore.fuzzyCompactCheck(s, d)),
     "events_pruned" -> (graft.sources.Partitioned.eventsPruned _),
     "scan_zorder" -> (graft.sources.Layout.scanZorder _),
     "sample_hash" -> ((s: SparkSession, d: String) => Sampling.sampleHash(s, d)),
@@ -229,13 +229,12 @@ object SparkEntry {
     // TextQuality.vocabDriftCheck (the IndexDrift role for VocabStore)
     "vocab_drift_check" -> ((s: SparkSession, d: String) =>
       TextQuality.vocabDriftCheck(s, d)),
-    // the vocabulary-count store maintained from a delivery STREAM —
-    // the third appendOnce family (minhash, chunks, vocab); token
-    // counts are additive, so the served gauge panel is micro-batch-
-    // boundary independent and runs under vocab_drift_check's exact
-    // oracle — see streaming.VocabMaintain
+    // the vocabulary-count store maintained from a delivery STREAM;
+    // token counts are additive, so the served gauge panel is
+    // micro-batch-boundary independent and runs under
+    // vocab_drift_check's exact oracle — see streaming.DeliveryStore.vocab
     "stream_vocab_delta" -> ((s: SparkSession, d: String) =>
-      streaming.VocabMaintain.vocabDriftStream(s, d)),
+      streaming.DeliveryStore.vocab().drive(s, d)),
     // the gauge panel AFTER applying its own decision — the
     // index_retrain_apply shape for the vocabulary store
     "vocab_retrain_apply" -> ((s: SparkSession, d: String) =>
@@ -261,13 +260,12 @@ object SparkEntry {
     // base chunk-digest store — see query.ChunkIndex
     "dedup_chunks_delta" -> ((s: SparkSession, d: String) =>
       ChunkIndex.dedupChunksDelta(s, d)),
-    // the chunk-digest store maintained from a delivery STREAM
-    // (foreachBatch + appendOnce — the stream_index_delta pattern on a
-    // second store family); store content is micro-batch-boundary
-    // independent, so the key runs under dedup_chunks_delta's exact
-    // oracle — see streaming.ChunkMaintain
+    // the chunk-digest store maintained from a delivery STREAM; store
+    // content is micro-batch-boundary independent, so the key runs
+    // under dedup_chunks_delta's exact oracle — see
+    // streaming.DeliveryStore.chunk
     "stream_chunks_delta" -> ((s: SparkSession, d: String) =>
-      streaming.ChunkMaintain.dedupChunksStream(s, d)),
+      streaming.DeliveryStore.chunk().drive(s, d)),
     // --- event-time windows (B17–B18) ---
     "stream_tumbling" -> (Events.tumbling _),
     "stream_sliding" -> (Events.sliding _),
@@ -369,14 +367,13 @@ object SparkEntry {
     // store — output == the batch apply restricted to delta docs
     // (provably; the oracle states exactly that) — see SubstringIndex
     "dedup_substring_delta" -> ((s: SparkSession, d: String) => SubstringIndex.dedupSubstringDelta(s, d)),
-    // the gram store maintained from a delivery STREAM — the ninth
-    // appendOnce family; additive counts make the streamed chain
-    // boundary-independent and the served clean probes the same
-    // pre-delivery base table, so the key runs under
-    // dedup_substring_delta's exact oracle — see
-    // streaming.SubstringMaintain
+    // the gram store maintained from a delivery STREAM; additive
+    // counts make the streamed chain boundary-independent and the
+    // served clean probes the same pre-delivery base table, so the key
+    // runs under dedup_substring_delta's exact oracle — see
+    // streaming.DeliveryStore.substring
     "stream_substring_delta" -> ((s: SparkSession, d: String) =>
-      streaming.SubstringMaintain.dedupSubstringStream(s, d)),
+      streaming.DeliveryStore.substring().drive(s, d)),
     // per-source duplicated-token share derived from the spans — see
     // TextSim.corpusDupRate
     "corpus_dup_rate" -> ((s: SparkSession, d: String) => TextSim.corpusDupRate(s, d)),
@@ -416,14 +413,13 @@ object SparkEntry {
       EmbeddingIndex.dedupEmbeddingAnnDelta(s, d)),
     "dedup_embedding_ann_delta_recall" ->
       (Contracts.dedupEmbeddingAnnDeltaRecall _),
-    // the LSH bucket store maintained from a delivery STREAM — the
-    // fifth appendOnce family (minhash, chunks, vocab, phash, ANN);
+    // the LSH bucket store maintained from a delivery STREAM;
     // per-vector signatures make the served pairs micro-batch-
     // boundary independent and bit-equal to dedup_embedding_ann_delta
     // — rows-only; the recall contract below is its hash gate — see
-    // streaming.AnnMaintain
+    // streaming.DeliveryStore.ann
     "stream_ann_delta" -> ((s: SparkSession, d: String) =>
-      streaming.AnnMaintain.dedupAnnStream(s, d)),
+      streaming.DeliveryStore.ann().drive(s, d)),
     "stream_ann_delta_recall" -> (Contracts.streamAnnDeltaRecall _),
     "dedup_cluster" -> ((s: SparkSession, d: String) => Cluster.dedupCluster(s, d)),
     // the scale path: banded-minhash candidate edges (fan-out bounded
@@ -469,15 +465,15 @@ object SparkEntry {
     // (foreachBatch + SnapshotStore.appendOnce exactly-once appends);
     // final store content is chunking-independent, so the key runs
     // under dedup_minhash_delta's exact oracle — see
-    // streaming.IndexMaintain
+    // streaming.DeliveryStore.minhash
     "stream_index_delta" -> ((s: SparkSession, d: String) =>
-      streaming.IndexMaintain.dedupDelta(s, d)),
+      streaming.DeliveryStore.minhash().drive(s, d)),
     // store COMPACTION proven under the same exact oracle: append 4
     // deliveries, compact the chain to one commit, replay a delivery
     // (the _applied_tags sidecar must no-op it), serve the pairs —
-    // see IndexMaintain.dedupDeltaCompacted
+    // see streaming.DeliveryStore.indexCompactCheck
     "index_compact_check" -> ((s: SparkSession, d: String) =>
-      streaming.IndexMaintain.dedupDeltaCompacted(s, d)),
+      streaming.DeliveryStore.indexCompactCheck(s, d)),
     // --- contract keys: the approximate families' bound/recall/
     // completeness contracts as hash-gated booleans (see Contracts) ---
     "agg_approx_distinct_bound" -> (Contracts.approxDistinctBound _),
@@ -532,14 +528,14 @@ object SparkEntry {
     // gauge time) — see Phash.phashDriftCheck
     "phash_drift_check" -> ((s: SparkSession, d: String) =>
       graft.multimodal.Phash.phashDriftCheck(s, d)),
-    // the fingerprint store maintained from a delivery STREAM — the
-    // fourth appendOnce family; each micro-batch decodes ITS images
-    // only, the gauge serves from the persisted stores with zero
-    // decode, and per-item hashing makes the panel micro-batch-
-    // boundary independent: vocab_drift_check's licensing under
-    // phash_drift_check's exact oracle — see streaming.PhashMaintain
+    // the fingerprint store maintained from a delivery STREAM; each
+    // micro-batch decodes ITS images only, the gauge serves from the
+    // persisted stores with zero decode, and per-item hashing makes
+    // the panel micro-batch-boundary independent: vocab_drift_check's
+    // licensing under phash_drift_check's exact oracle — see
+    // streaming.DeliveryStore.phash
     "stream_phash_delta" -> ((s: SparkSession, d: String) =>
-      streaming.PhashMaintain.phashDriftStream(s, d)),
+      streaming.DeliveryStore.phash.drive(s, d)),
     // audio-fingerprint dedup through the REAL WAV roundtrip:
     // re-encoded-width/gain/DC-offset/upsampled twins share one
     // Haitsma–Kalker-style hash — see multimodal.AudioFp (chunk-LSH
@@ -552,12 +548,12 @@ object SparkEntry {
     // hash gate — see AudioFp.dedupAudioDelta
     "dedup_audio_delta" -> ((s: SparkSession, d: String) =>
       graft.multimodal.AudioFp.dedupAudioDelta(s, d)),
-    // the fingerprint store maintained from a delivery STREAM — the
-    // seventh appendOnce family; per-item hashes make the served
-    // pairs boundary-independent, so the key runs under
-    // dedup_audio_delta's exact oracle — see streaming.AudioMaintain
+    // the fingerprint store maintained from a delivery STREAM;
+    // per-item hashes make the served pairs boundary-independent, so
+    // the key runs under dedup_audio_delta's exact oracle — see
+    // streaming.DeliveryStore.audio
     "stream_audio_delta" -> ((s: SparkSession, d: String) =>
-      streaming.AudioMaintain.dedupAudioStream(s, d)),
+      streaming.DeliveryStore.audio().drive(s, d)),
     // the retrain gauge for the audio-fingerprint store (shared
     // bit-occupancy + novelty algebra — Phash.bitDriftOf)
     "audio_drift_check" -> ((s: SparkSession, d: String) =>
@@ -576,12 +572,12 @@ object SparkEntry {
     // VideoFp.dedupVideoDelta
     "dedup_video_delta" -> ((s: SparkSession, d: String) =>
       graft.multimodal.VideoFp.dedupVideoDelta(s, d)),
-    // the sequence store maintained from a delivery STREAM — the
-    // eighth appendOnce family; per-item sequences make the served
-    // pairs boundary-independent, so the key runs under
-    // dedup_video_delta's exact oracle — see streaming.VideoMaintain
+    // the sequence store maintained from a delivery STREAM; per-item
+    // sequences make the served pairs boundary-independent, so the key
+    // runs under dedup_video_delta's exact oracle — see
+    // streaming.DeliveryStore.video
     "stream_video_delta" -> ((s: SparkSession, d: String) =>
-      streaming.VideoMaintain.dedupVideoStream(s, d)),
+      streaming.DeliveryStore.video.drive(s, d)),
     // the retrain gauge for the video-sequence store (sequence-length
     // occupancy + novelty — see VideoFp.videoDriftCheck)
     "video_drift_check" -> ((s: SparkSession, d: String) =>

@@ -38,6 +38,21 @@ object Tables {
     loaded.get(spark)(new java.util.concurrent.ConcurrentHashMap())
       .computeIfAbsent((dir, name), _ => load0(spark, dir, name))
 
+  /** The delivery split every delta key shares: the newest ~20% of ids
+    * — those at or past `max(id) * 4 / 5 + 1` — are the delivery, the
+    * rest the base. Returns (cut, maxId) from ONE aggregation, for the
+    * stagers that also need the top of the id range. (The DuckDB
+    * oracles restate the rule in SQL on purpose: they are the
+    * independent reference.) */
+  def deltaSplit(df: DataFrame, idCol: String): (Long, Long) = {
+    val maxId = df.agg(F.max(F.col(idCol))).head().getLong(0)
+    (maxId * 4 / 5 + 1, maxId)
+  }
+
+  /** The delivery cut of [[deltaSplit]]. */
+  def deltaCutoff(df: DataFrame, idCol: String): Long =
+    deltaSplit(df, idCol)._1
+
   /** Fan a narrow scan out to the session's parallelism. A small table
     * in one parquet split runs every scan-side heavy stage (shingling,
     * tokenizing, hashing, the countDistinct expand) in ONE task — the

@@ -185,7 +185,7 @@ object AudioFp {
             graft.ingest.StoreBootstrap.chains(spark, "hashes" -> 2)) { b =>
           val store = new graft.ingest.SnapshotStore(s"$b/hashes")
           val ids = Tables.load(spark, dir, "documents").select("doc_id")
-          val cut = Phash.deltaCutoff(ids)
+          val cut = Tables.deltaCutoff(ids, "doc_id")
           store.overwrite(afpsOf(ids.filter(col("doc_id") < cut)))
           store.append(afpsOf(ids.filter(col("doc_id") >= cut)))
         }
@@ -202,8 +202,8 @@ object AudioFp {
     * so the key runs under the same full hash gate as `dedup_audio`. */
   def dedupAudioDelta(spark: SparkSession, dir: String,
       maxHamming: Int = 3): DataFrame = {
-    val cut = Phash.deltaCutoff(
-      Tables.load(spark, dir, "documents").select("doc_id"))
+    val cut = Tables.deltaCutoff(
+      Tables.load(spark, dir, "documents").select("doc_id"), "doc_id")
     Phash.chunkLshPairs(ensureIndex(spark, dir), "afp", Some(cut),
       maxHamming)
   }
@@ -216,8 +216,8 @@ object AudioFp {
     * Store-served: zero WAV decode at gauge time. */
   def audioDriftCheck(spark: SparkSession, dir: String): DataFrame = {
     val fps = ensureIndex(spark, dir)
-    val cut = Phash.deltaCutoff(
-      Tables.load(spark, dir, "documents").select("doc_id"))
+    val cut = Tables.deltaCutoff(
+      Tables.load(spark, dir, "documents").select("doc_id"), "doc_id")
     Phash.bitDriftOf(fps.filter(col("doc_id") < cut),
       fps.filter(col("doc_id") >= cut), "afp")
   }

@@ -126,7 +126,7 @@ object Phash {
     // delivery slice: there the round-robin exchange costs more than
     // the single-task codec work it spreads (r20 measured on
     // stream_phash_delta; callers gate on row count —
-    // PhashMaintain.FanRowThreshold — so a large delivery still fans).
+    // DeliveryStore.FanRowThreshold — so a large delivery still fans).
     val in = ids.select(col("doc_id"))
     (if (fan) Tables.fanOut(in) else in).as[Long]
       .mapPartitions(_.map { id =>
@@ -205,11 +205,6 @@ object Phash {
     graft.core.Caches.md5Tag(s"$dir|$LayoutVersion|" +
       Tables.fingerprint(spark, dir, "documents"))
 
-  /** The delta split point (the standard newest-20% delivery model —
-    * [[graft.query.MinhashIndex.deltaCutoff]]'s rule, restated here to
-    * keep package boundaries clean). */
-  private[graft] def deltaCutoff(docs: DataFrame): Long =
-    docs.agg(max(col("doc_id"))).head().getLong(0) * 4 / 5 + 1
 
   /** Build-or-load the persisted fingerprint store (base hashes v0,
     * the delivery's appended O(delta); single-publish across processes
@@ -225,7 +220,7 @@ object Phash {
             graft.ingest.StoreBootstrap.chains(spark, "hashes" -> 2)) { b =>
           val store = new graft.ingest.SnapshotStore(s"$b/hashes")
           val ids = Tables.load(spark, dir, "documents").select("doc_id")
-          val cut = deltaCutoff(ids)
+          val cut = Tables.deltaCutoff(ids, "doc_id")
           store.overwrite(phashesOf(ids.filter(col("doc_id") < cut)))
           store.append(phashesOf(ids.filter(col("doc_id") >= cut)))
         }
@@ -244,8 +239,8 @@ object Phash {
     * sweeps pairs with d2 past the cutoff). */
   def dedupPhashDelta(spark: SparkSession, dir: String,
       maxHamming: Int = 3): DataFrame = {
-    val cut = deltaCutoff(
-      Tables.load(spark, dir, "documents").select("doc_id"))
+    val cut = Tables.deltaCutoff(
+      Tables.load(spark, dir, "documents").select("doc_id"), "doc_id")
     chunkLshPairs(ensureIndex(spark, dir), "phash", Some(cut),
       maxHamming)
   }
@@ -273,8 +268,8 @@ object Phash {
     * rows. */
   def phashDriftCheck(spark: SparkSession, dir: String): DataFrame = {
     val fps = ensureIndex(spark, dir)
-    val cut = deltaCutoff(
-      Tables.load(spark, dir, "documents").select("doc_id"))
+    val cut = Tables.deltaCutoff(
+      Tables.load(spark, dir, "documents").select("doc_id"), "doc_id")
     phashDriftOf(fps.filter(col("doc_id") < cut),
       fps.filter(col("doc_id") >= cut))
   }

@@ -211,7 +211,7 @@ object VideoFp {
             graft.ingest.StoreBootstrap.chains(spark, "seqs" -> 2)) { b =>
           val store = new graft.ingest.SnapshotStore(s"$b/seqs")
           val ids = Tables.load(spark, dir, "documents").select("doc_id")
-          val cut = Phash.deltaCutoff(ids)
+          val cut = Tables.deltaCutoff(ids, "doc_id")
           store.overwrite(vfpsOf(ids.filter(col("doc_id") < cut)))
           store.append(vfpsOf(ids.filter(col("doc_id") >= cut)))
         }
@@ -226,8 +226,8 @@ object VideoFp {
     * the FULL persisted store; no base video is re-demuxed at query
     * time. Runs under the same full hash gate as `dedup_video`. */
   def dedupVideoDelta(spark: SparkSession, dir: String): DataFrame = {
-    val cut = Phash.deltaCutoff(
-      Tables.load(spark, dir, "documents").select("doc_id"))
+    val cut = Tables.deltaCutoff(
+      Tables.load(spark, dir, "documents").select("doc_id"), "doc_id")
     seqPairs(ensureIndex(spark, dir), Some(cut))
   }
 
@@ -243,8 +243,8 @@ object VideoFp {
     * gauge time. */
   def videoDriftCheck(spark: SparkSession, dir: String): DataFrame = {
     val seqs = ensureIndex(spark, dir)
-    val cut = Phash.deltaCutoff(
-      Tables.load(spark, dir, "documents").select("doc_id"))
+    val cut = Tables.deltaCutoff(
+      Tables.load(spark, dir, "documents").select("doc_id"), "doc_id")
     videoDriftOf(seqs.filter(col("doc_id") < cut),
       seqs.filter(col("doc_id") >= cut))
   }

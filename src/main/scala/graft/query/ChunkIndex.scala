@@ -53,7 +53,7 @@ object ChunkIndex {
     digestsOfChunks(Sampling.chunkOf(docs, win, stride))
 
   /** The digest-grain collapse over an already-chunked frame — shared
-    * with the STREAMING maintainer ([[graft.streaming.ChunkMaintain]]),
+    * with the STREAMING maintainer ([[graft.streaming.DeliveryStore.chunk]]),
     * which chunks each delivery once and feeds both its stores. */
   private[graft] def digestsOfChunks(chunks: DataFrame): DataFrame =
     chunks
@@ -79,7 +79,7 @@ object ChunkIndex {
             graft.ingest.StoreBootstrap.chains(spark, "chunks" -> 2)) { b =>
           val st = new graft.ingest.SnapshotStore(s"$b/chunks")
           val docs = Tables.load(spark, dir, "documents")
-          val cut = MinhashIndex.deltaCutoff(docs)
+          val cut = Tables.deltaCutoff(docs, "doc_id")
           st.overwrite(digestsOf(docs.filter(col("doc_id") < cut),
             win, stride))
           st.append(digestsOf(docs.filter(col("doc_id") >= cut),
@@ -106,7 +106,7 @@ object ChunkIndex {
   def dedupChunksDelta(spark: SparkSession, dir: String,
       win: Int = 64, stride: Int = 32): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val cut = MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     dupsAgainst(
       Sampling.chunkOf(docs.filter(col("doc_id") >= cut), win, stride),
       ensureStore(spark, dir, win, stride))

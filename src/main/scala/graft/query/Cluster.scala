@@ -125,14 +125,11 @@ object Cluster {
     // SETS, the convergence signature and the final star forest are
     // unchanged — ClusterSpec's property tests and the five consumer
     // hash gates pin that.
-    val aqeKey = "spark.sql.adaptive.enabled"
     val spKey = "spark.sql.shuffle.partitions"
-    val prevAqe = spark.conf.getOption(aqeKey)
-    val prevSp = spark.conf.getOption(spKey)
-    try {
-      spark.conf.set(aqeKey, "false")
+    graft.streaming.DriveSupport.withConfs(spark,
+        "spark.sql.adaptive.enabled" -> "false",
+        spKey -> loopPartitions(spark, sig._1).toString) {
       while (!converged && round < maxRounds) {
-        spark.conf.set(spKey, loopPartitions(spark, sig._1).toString)
         // ONE star round per materialization+signature. r20 measured the
         // tempting batching of TWO rounds per checkpoint (half the driver
         // round-trips) at ×1.15-1.36 SLOWER: both star ops reference
@@ -148,10 +145,8 @@ object Cluster {
         converged = next == sig
         sig = next
         round += 1
+        spark.conf.set(spKey, loopPartitions(spark, sig._1).toString)
       }
-    } finally {
-      prevAqe.fold(spark.conf.unset(aqeKey))(v => spark.conf.set(aqeKey, v))
-      prevSp.fold(spark.conf.unset(spKey))(v => spark.conf.set(spKey, v))
     }
     // log-round convergence means maxRounds=30 covers any real graph; a
     // silent non-fixpoint would break the transitive-closure contract

@@ -315,14 +315,14 @@ object Contracts {
     * micro-batch through `foreachBatch` + `appendOnce`, and every twin
     * must surface from the PERSISTED store — the hash gate the r18
     * ledger said this family couldn't have
-    * ([[graft.streaming.AnnMaintain]]). */
+    * ([[graft.streaming.DeliveryStore.ann]]). */
   def streamAnnDeltaRecall(spark: SparkSession, dir: String)
       : DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
     val originals = e.filter(col("vec_id") < 50)
     val twins = originals.select((col("vec_id") + 1000000L).as("vec_id"),
       col("embedding"), col("label"))
-    val found = graft.streaming.AnnMaintain
+    val found = graft.streaming.DeliveryStore
       .annStreamPairsOf(e.unionByName(twins))
       .select(col("v1"), col("v2"), lit(true).as("__hit"))
     originals

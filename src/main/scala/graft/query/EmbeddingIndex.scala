@@ -58,7 +58,7 @@ object EmbeddingIndex {
             graft.ingest.StoreBootstrap.chains(spark, "buckets" -> 2)) { b =>
           val store = new graft.ingest.SnapshotStore(s"$b/buckets")
           val e = Tables.load(spark, dir, "embeddings")
-          val cut = SemanticIndex.deltaCutoff(e)
+          val cut = Tables.deltaCutoff(e, "vec_id")
           store.overwrite(TextSim.annBuckets(
             e.filter(col("vec_id") < cut), nPlanes, nTables, seed))
           store.append(TextSim.annBuckets(
@@ -77,7 +77,7 @@ object EmbeddingIndex {
       nPlanes: Int = 8, nTables: Int = 8, maxBucket: Int = 10000,
       seed: Long = 7L): DataFrame =
     deltaPairs(TextSim.annBuckets(e, nPlanes, nTables, seed),
-      e, SemanticIndex.deltaCutoff(e), threshold, maxBucket)
+      e, Tables.deltaCutoff(e, "vec_id"), threshold, maxBucket)
 
   /** Driver key `dedup_embedding_ann_delta`. */
   def dedupEmbeddingAnnDelta(spark: SparkSession, dir: String,
@@ -85,11 +85,11 @@ object EmbeddingIndex {
       maxBucket: Int = 10000, seed: Long = 7L): DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
     deltaPairs(ensureIndex(spark, dir, nPlanes, nTables, seed),
-      e, SemanticIndex.deltaCutoff(e), threshold, maxBucket)
+      e, Tables.deltaCutoff(e, "vec_id"), threshold, maxBucket)
   }
 
   /** The delta-pair query over an explicit bucket table — shared with
-    * the STREAMED maintainer ([[graft.streaming.AnnMaintain]]), whose
+    * the STREAMED maintainer ([[graft.streaming.DeliveryStore.ann]]), whose
     * store content is bit-equal to [[ensureIndex]]'s by the per-vector
     * signature grain. */
   private[graft] def deltaPairs(buckets: DataFrame, e: DataFrame,

@@ -16,7 +16,7 @@ import graft.core.Tables
   * table (p_partkey, r_len, vh) — [[FuzzyJoin.signaturesOf]]'s exact
   * row shape. The base slice of `part` (p_partkey below the standard
   * 4/5-cutoff — the newest ~20 % of keys model the un-indexed weekly
-  * delivery, the [[MinhashIndex.deltaCutoff]] rule) is committed v0;
+  * delivery, the [[graft.core.Tables.deltaCutoff]] rule) is committed v0;
   * the delivery slice is appended as ONE O(delta) manifest commit via
   * [[graft.ingest.SnapshotStore.appendOnce]] (exactly-once per
   * delivery tag: a replayed delivery's signatures must not land twice
@@ -48,11 +48,6 @@ object FuzzyIndex {
       s"fuzzy|$dir|$k|$LayoutVersion|" +
       Tables.fingerprint(spark, dir, "part"))
 
-  /** The delta split point over `part` — the standard newest-~20 %
-    * delivery model (max·4/5 + 1, the [[MinhashIndex.deltaCutoff]]
-    * rule applied to p_partkey). */
-  private[graft] def deltaCutoff(parts: DataFrame): Long =
-    parts.agg(max(col("p_partkey"))).head().getLong(0) * 4 / 5 + 1
 
   /** The published index root for (dir, k) — exposed so the lifecycle
     * spec can scope its chain-shape assertions to THIS layout's store
@@ -77,7 +72,7 @@ object FuzzyIndex {
           val store = new graft.ingest.SnapshotStore(s"$b/sig")
           val parts = Tables.load(spark, dir, "part")
             .select(col("p_partkey"), col("p_name"))
-          val cut = deltaCutoff(parts)
+          val cut = Tables.deltaCutoff(parts, "p_partkey")
           store.overwrite(FuzzyJoin.signaturesOf(
             parts.filter(col("p_partkey") < cut), k))
           // the delivery: one exactly-once O(delta) append
@@ -100,7 +95,7 @@ object FuzzyIndex {
       : DataFrame = {
     val parts = Tables.load(spark, dir, "part")
       .select(col("p_partkey"), col("p_name"))
-    val cut = deltaCutoff(parts)
+    val cut = Tables.deltaCutoff(parts, "p_partkey")
     val probes = FuzzyJoin.probesOf(
       parts.filter(col("p_partkey") >= cut), 20)
     FuzzyJoin.matchProbes(probes, ensureIndex(spark, dir, k), parts, k)

@@ -85,7 +85,7 @@ object IndexDrift {
     * [[Ivf]]/[[SemanticIndex]] cutoff rule) of the embeddings table. */
   def indexDriftCheck(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
-    val cut = e.agg(max(col("vec_id"))).head().getLong(0) * 4 / 5 + 1
+    val cut = Tables.deltaCutoff(e, "vec_id")
     indexDriftOf(e.filter(col("vec_id") < cut),
       e.filter(col("vec_id") >= cut))
   }
@@ -102,7 +102,7 @@ object IndexDrift {
     * column algebra, so DuckDB recomputes the whole loop. */
   def indexRetrainApply(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
-    val cut = e.agg(max(col("vec_id"))).head().getLong(0) * 4 / 5 + 1
+    val cut = Tables.deltaCutoff(e, "vec_id")
     val base = e.filter(col("vec_id") < cut)
     val delta = e.filter(col("vec_id") >= cut)
     val retrained = indexDriftOf(base, delta)

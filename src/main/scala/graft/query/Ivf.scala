@@ -255,10 +255,6 @@ object Ivf {
   // mass approaches the training mass (IvfDeltaSpec measures the
   // identical-distribution gap at ~0 and the recall floors holding).
 
-  /** The delta split point: the newest ~20% of vec_ids model the
-    * un-indexed weekly delivery (deterministic, data-derived). */
-  private def deltaCutoff(e: DataFrame): Long =
-    e.agg(max(col("vec_id"))).head().getLong(0) * 4 / 5 + 1
 
   /** Build-or-load the INCREMENTALLY-MAINTAINED index: centroids
     * trained on the base slice only (vec_id < cutoff), base cells
@@ -284,7 +280,7 @@ object Ivf {
           val cellStore = new graft.ingest.SnapshotStore(
             s"$b/cells", partition = Some("cid"))
           val e = Tables.load(spark, dir, "embeddings")
-          val cutoff = deltaCutoff(e)
+          val cutoff = Tables.deltaCutoff(e, "vec_id")
           val cent = trainCentroids(
             e.filter(col("vec_id") < cutoff), nlist, iters, seed)
           centStore.overwrite(cent)
@@ -392,7 +388,7 @@ object Ivf {
           val cellStore = new graft.ingest.SnapshotStore(
             s"$b/cells", partition = Some("cid"))
           val e = Tables.load(spark, dir, "embeddings")
-          val cutoff = deltaCutoff(e)
+          val cutoff = Tables.deltaCutoff(e, "vec_id")
           val base = e.filter(col("vec_id") < cutoff)
           val delta = e.filter(col("vec_id") >= cutoff)
           if (driftDecision(base, delta)) {

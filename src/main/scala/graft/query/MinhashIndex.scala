@@ -46,11 +46,6 @@ object MinhashIndex {
   private val indexMemo = new graft.core.Caches.PerSession[
     scala.collection.mutable.Map[String, (DataFrame, DataFrame, DataFrame)]]
 
-  /** The delta split point: the newest ~20% of doc_ids model the
-    * un-indexed weekly delivery (deterministic, data-derived — the
-    * same rule as [[Ivf]]'s embedding delta). */
-  private[graft] def deltaCutoff(docs: DataFrame): Long =
-    docs.agg(max(col("doc_id"))).head().getLong(0) * 4 / 5 + 1
 
   /** Versions the on-disk shape; bumping it orphans old indexes
     * instead of misreading them. Tag includes the corpus fingerprint:
@@ -87,7 +82,7 @@ object MinhashIndex {
           val pStore = new graft.ingest.SnapshotStore(s"$b/postings")
           val cStore = new graft.ingest.SnapshotStore(s"$b/canon")
           val docs = Tables.load(spark, dir, "documents")
-          val cut = deltaCutoff(docs)
+          val cut = Tables.deltaCutoff(docs, "doc_id")
           val base = docs.filter(col("doc_id") < cut)
           val delta = docs.filter(col("doc_id") >= cut)
           def canonOf(d: DataFrame) = d.select(col("doc_id"),
@@ -164,7 +159,7 @@ object MinhashIndex {
       threshold: Double = 0.8, nHashes: Int = 32, bands: Int = 8)
       : DataFrame = {
     val (buckets, postings, _) = ensureIndex(spark, dir, nHashes, bands)
-    val cut = deltaCutoff(Tables.load(spark, dir, "documents"))
+    val cut = Tables.deltaCutoff(Tables.load(spark, dir, "documents"), "doc_id")
     val cand = buckets.filter(col("doc_id") >= cut).as("y")
       .join(buckets.as("x"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&

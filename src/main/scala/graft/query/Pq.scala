@@ -169,7 +169,7 @@ object Pq {
       cache.getOrElseUpdate(tag, {
         val e = Tables.load(spark, dir, "embeddings")
         val cutoff =
-          e.agg(max(col("vec_id"))).head().getLong(0) * 4 / 5 + 1
+          Tables.deltaCutoff(e, "vec_id")
         val baseSv = subVectors(e.filter(col("vec_id") < cutoff), m)
           .localCheckpoint()
         val cb = trainCodebooks(baseSv, m, ks, iters, seed)

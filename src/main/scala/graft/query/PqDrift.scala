@@ -91,7 +91,7 @@ object PqDrift {
     * for the standard delivery split of the embeddings table. */
   def pqDriftCheck(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
-    val cut = e.agg(max(col("vec_id"))).head().getLong(0) * 4 / 5 + 1
+    val cut = Tables.deltaCutoff(e, "vec_id")
     pqDriftOf(e.filter(col("vec_id") < cut),
       e.filter(col("vec_id") >= cut))
   }
@@ -105,7 +105,7 @@ object PqDrift {
     * recomputes the whole gauge → act → re-gauge loop. */
   def pqRetrainApply(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(spark, dir, "embeddings")
-    val cut = e.agg(max(col("vec_id"))).head().getLong(0) * 4 / 5 + 1
+    val cut = Tables.deltaCutoff(e, "vec_id")
     val base = e.filter(col("vec_id") < cut)
     val delta = e.filter(col("vec_id") >= cut)
     val retrained = pqDriftOf(base, delta)

@@ -48,10 +48,6 @@ object SemanticIndex {
   private val indexMemo = new graft.core.Caches.PerSession[
     scala.collection.mutable.Map[String, DataFrame]]
 
-  /** The delta split point: the newest ~20% of vec_ids model the
-    * un-indexed weekly delivery (the [[Ivf]]/[[MinhashIndex]] rule). */
-  private[graft] def deltaCutoff(e: DataFrame): Long =
-    e.agg(max(col("vec_id"))).head().getLong(0) * 4 / 5 + 1
 
   private val LayoutVersion = "D1"
   private def indexTag(spark: SparkSession, dir: String, k: Int,
@@ -66,7 +62,7 @@ object SemanticIndex {
     * centroids, base flags, delta flags against base ∪ delta. */
   def dedupSemanticDeltaOf(e: DataFrame, k: Int = 8, iters: Int = 3,
       threshold: Double = 0.35, seed: Long = 7L): DataFrame = {
-    val cut = deltaCutoff(e)
+    val cut = Tables.deltaCutoff(e, "vec_id")
     val cent = Ivf.trainCentroids(
       e.filter(col("vec_id") < cut), k, iters, seed)
     val baseCells = TextSim.assignCells(
@@ -103,7 +99,7 @@ object SemanticIndex {
             s"$b/cells", partition = Some("cid"))
           val flagStore = new graft.ingest.SnapshotStore(s"$b/flags")
           val e = Tables.load(spark, dir, "embeddings")
-          val cut = deltaCutoff(e)
+          val cut = Tables.deltaCutoff(e, "vec_id")
           val base = e.filter(col("vec_id") < cut)
           val cent = Ivf.trainCentroids(base, k, iters, seed)
           val baseCells = TextSim.assignCells(base, cent)
@@ -155,7 +151,7 @@ object SemanticIndex {
     * fired ⇒ bit-identical to the one-shot full refit. */
   def retrainIfDrifted(e: DataFrame, k: Int = 8, iters: Int = 3,
       threshold: Double = 0.35): (DataFrame, Boolean) = {
-    val cut = deltaCutoff(e)
+    val cut = Tables.deltaCutoff(e, "vec_id")
     val retrained = Ivf.driftDecision(
       e.filter(col("vec_id") < cut), e.filter(col("vec_id") >= cut))
     if (retrained)
@@ -188,7 +184,7 @@ object SemanticIndex {
             s"$b/cells", partition = Some("cid"))
           val flagStore = new graft.ingest.SnapshotStore(s"$b/flags")
           val e = Tables.load(spark, dir, "embeddings")
-          val cut = deltaCutoff(e)
+          val cut = Tables.deltaCutoff(e, "vec_id")
           val base = e.filter(col("vec_id") < cut)
           val delta = e.filter(col("vec_id") >= cut)
           if (Ivf.driftDecision(base, delta)) {

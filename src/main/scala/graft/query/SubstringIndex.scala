@@ -150,7 +150,7 @@ object SubstringIndex {
             graft.ingest.StoreBootstrap.chains(spark, "grams" -> 2)) { b =>
           val st = new graft.ingest.SnapshotStore(s"$b/grams")
           val docs = Tables.load(spark, dir, "documents")
-          val cut = MinhashIndex.deltaCutoff(docs)
+          val cut = Tables.deltaCutoff(docs, "doc_id")
           def counts(d: DataFrame) = gramsOf(d, gramLen)
             .groupBy("gh").agg(count(lit(1)).as("occ"))
           st.overwrite(counts(docs.filter(col("doc_id") < cut)))
@@ -184,7 +184,7 @@ object SubstringIndex {
   def dedupSubstringDelta(spark: SparkSession, dir: String,
       gramLen: Int = 5): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val cut = MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     cleanDeltaAgainst(docs.filter(col("doc_id") >= cut),
       ensureStore(spark, dir, gramLen), gramLen)
   }

@@ -292,7 +292,7 @@ object TextQuality {
   }
 
   /** The weekly delivery curated INCREMENTALLY (curate_delta): the
-    * delta docs (newest ~20% of doc_ids, [[MinhashIndex.deltaCutoff]])
+    * delta docs (newest ~20% of doc_ids, [[graft.core.Tables.deltaCutoff]])
     * flow through the whole curation pipeline WITHOUT re-processing
     * the base corpus —
     *   1. canonical first-wins: a delta doc is dropped if its
@@ -315,7 +315,7 @@ object TextQuality {
   def curateDelta(spark: SparkSession, dir: String,
       capacity: Int = 2048): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val cut = MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     val canonKept = canonKeptDelta(spark, dir, docs, cut)
     // stage 2: the index's verified delta pairs; the newer side yields
     val dupNewer = MinhashIndex.dedupMinhashDelta(spark, dir)
@@ -339,7 +339,7 @@ object TextQuality {
   def curateScrubDelta(spark: SparkSession, dir: String,
       capacity: Int = 2048): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val cut = MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     val canonKept = canonKeptDelta(spark, dir, docs, cut)
     val dupNewer = MinhashIndex.dedupMinhashDelta(spark, dir)
       .select(col("d2").as("doc_id")).distinct()
@@ -859,7 +859,7 @@ object TextQuality {
   def vocabDriftCheck(spark: SparkSession, dir: String,
       topV: Int = 32): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val cut = graft.query.MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     vocabDriftOf(docs.filter(col("doc_id") < cut),
       docs.filter(col("doc_id") >= cut), topV)
   }
@@ -879,7 +879,7 @@ object TextQuality {
   def vocabRetrainApply(spark: SparkSession, dir: String,
       topV: Int = 32): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val cut = graft.query.MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     val base = docs.filter(col("doc_id") < cut)
     val delta = docs.filter(col("doc_id") >= cut)
     val retrained = vocabDriftOf(base, delta, topV)
@@ -904,7 +904,7 @@ object TextQuality {
 
   /** The gauge panel from an already-built per-token count table
     * (w, n_base, n_delta) — the stage the STREAMED vocabulary
-    * maintainer ([[graft.streaming.VocabMaintain]]) serves from its
+    * maintainer ([[graft.streaming.DeliveryStore.vocab]]) serves from its
     * persisted stores; [[vocabDriftOf]] is this over one
     * tokenize-and-count pass. */
   def vocabDriftFromCounts(counts: DataFrame, topV: Int = 32)

@@ -49,7 +49,7 @@ object VocabStore {
 
   /** Build-or-load the persisted per-delivery count store and return
     * the MERGED (w, n) frame. Base/delta split is the standard
-    * newest-20% delivery model ([[MinhashIndex.deltaCutoff]]);
+    * newest-20% delivery model ([[graft.core.Tables.deltaCutoff]]);
     * single-publish across processes via
     * [[graft.ingest.StoreBootstrap]] (stage-then-rename — a crashed or
     * racing builder can never publish a half-built or double-appended
@@ -65,7 +65,7 @@ object VocabStore {
             graft.ingest.StoreBootstrap.chains(spark, "counts" -> 2)) { b =>
           val store = new graft.ingest.SnapshotStore(s"$b/counts")
           val docs = Tables.load(spark, dir, "documents")
-          val cut = MinhashIndex.deltaCutoff(docs)
+          val cut = Tables.deltaCutoff(docs, "doc_id")
           store.overwrite(countsOf(docs.filter(col("doc_id") < cut)))
           // the delivery: count ONLY the delta's text
           store.append(countsOf(docs.filter(col("doc_id") >= cut)))

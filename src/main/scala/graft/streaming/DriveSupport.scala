@@ -3,7 +3,8 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Shared scaffolding for the SF-scaled streaming drives (the keys
@@ -173,20 +174,24 @@ private[graft] object DriveSupport {
     * With no explicit `provider`, [[envProvider]] applies. */
   def withStreamConfs[T](spark: SparkSession, partitions: String = "4",
       provider: Option[String] = DriveSupport.envProvider)(body: => T)
-      : T = {
-    val spKey = "spark.sql.shuffle.partitions"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevSp = spark.conf.get(spKey)
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(spKey, partitions)
-    provider.foreach(spark.conf.set(provKey, _))
+      : T =
+    withConfs(spark, Seq("spark.sql.shuffle.partitions" -> partitions) ++
+      provider.map("spark.sql.streaming.stateStore.providerClass" -> _)
+      : _*)(body)
+
+  /** Set `confs` on `spark` for `body`'s duration, then restore each
+    * key's previous value — or unset it if it had none. The one
+    * save/set/restore scope behind every conf wrapper here. Session
+    * confs are session-global: callers must not plan other queries on
+    * the same session concurrently with `body`. */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(
+      body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
-    finally {
-      spark.conf.set(spKey, prevSp)
-      if (provider.isDefined) prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -195,25 +200,26 @@ private[graft] object DriveSupport {
     try body finally q.stop()
 
   /** The id span of one staged delivery chunk — ONE formula shared by
-    * every streamed-store maintainer's stager AND by the consumers
-    * that re-derive a staged chunk's id range (IndexMaintain's chain
-    * builder / replay probe): the two must agree on chunk boundaries
-    * or a "replayed delivery" would not be the batch it claims. */
+    * the stager AND by the consumers that re-derive a staged chunk's id
+    * range ([[DeliveryStore]]'s compact checks and its chain builder):
+    * the two must agree on chunk boundaries or a "replayed delivery"
+    * would not be the batch it claims. */
   def deliverySpan(maxId: Long, cut: Long, chunks: Int): Long =
     math.max(1L, (maxId - cut) / chunks + 1L)
 
+  /** Delivery chunk `c`'s id range, [cut + c·span, cut + (c+1)·span). */
+  def deliveryRange(idCol: String, cut: Long, span: Long, c: Int): Column =
+    col(idCol) >= cut + c * span && col(idCol) < cut + (c + 1) * span
+
   /** Stage the `idCol ≥ cut` delivery slice of `df` as `chunks`
     * id-range parquet files under `inDir` — one file per trigger =
-    * one delivery per micro-batch: the shared stager of every
-    * streamed-store maintainer (minhash/chunks/vocab/phash/ann/
-    * fuzzy); previously six hand-synced copies of the same loop. */
+    * one delivery per micro-batch: the stager of every
+    * [[DeliveryStore]] family. */
   def stageIdRangeDeliveries(df: DataFrame, idCol: String, cut: Long,
       maxId: Long, chunks: Int, inDir: String): Unit = {
-    import org.apache.spark.sql.functions.col
     val span = deliverySpan(maxId, cut, chunks)
     (0 until chunks).foreach { c =>
-      df.filter(col(idCol) >= cut + c * span &&
-          col(idCol) < cut + (c + 1) * span)
+      df.filter(deliveryRange(idCol, cut, span, c))
         .coalesce(1).write.mode("append").parquet(inDir)
     }
   }
@@ -225,18 +231,12 @@ private[graft] object DriveSupport {
     * window — ~720 groups of a-few-KB buffers each — so the fallback
     * was sorting the full exploded input by window before aggregating;
     * hash aggregation is the right regime by orders of magnitude.
-    * Set around the drive, restored after (the [[withStreamConfs]]
-    * discipline), so the knob never leaks into other keys' plans. */
-  def withHashAggHeadroom[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "8192")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+    * Set around the drive, restored after ([[withConfs]]), so the
+    * knob never leaks into other keys' plans. */
+  def withHashAggHeadroom[T](spark: SparkSession)(body: => T): T =
+    withConfs(spark,
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "8192"
+    )(body)
 
   /** The fuzzy serve's post-shuffle rows are far heavier as WORK than
     * as BYTES (compact signature strings that explode into
@@ -246,18 +246,12 @@ private[graft] object DriveSupport {
     * stages keep the core count; at scale the floor never binds
     * (post-shuffle partitions are advisory-sized well above it), so
     * this is small-byte-stage parallelism insurance, not a cluster
-    * knob. Set around the drive's serve, restored after (the
-    * [[withStreamConfs]] discipline). */
-  def withServeCoalesceFloor[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "64k")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+    * knob. Set around the drive's serve, restored after
+    * ([[withConfs]]). */
+  def withServeCoalesceFloor[T](spark: SparkSession)(body: => T): T =
+    withConfs(spark,
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k"
+    )(body)
 
   /** Largest result `pin` will materialize. The biggest legitimate
     * drive result is the full events table at the benched SF (100k rows

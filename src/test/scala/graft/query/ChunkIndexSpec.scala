@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.functions._
 import graft.{SparkSuite, TestSpark}
+import graft.core.Tables
 
 /** O(delta) chunk dedup ([[ChunkIndex]]): the load-bearing claim is
   * that probing the delivery's chunks against the base DIGEST table
@@ -70,14 +71,14 @@ class ChunkIndexSpec extends SparkSuite {
 
   test("fixture: index form == batch form on the delta slice") {
     val docs = graft.core.Tables.load(spark, TestSpark.sfDir, "documents")
-    val cut = MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     assert(rows(deltaViaIndex(docs, cut)) ===
       rows(deltaViaBatch(docs, cut)))
   }
 
   test("driver key: store-backed form == batch form on the fixture") {
     val docs = graft.core.Tables.load(spark, TestSpark.sfDir, "documents")
-    val cut = MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     assert(rows(ChunkIndex.dedupChunksDelta(spark, TestSpark.sfDir)) ===
       rows(deltaViaBatch(docs, cut)))
   }

@@ -3,6 +3,7 @@ package graft.query
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSuite, TestSpark}
+import graft.core.Tables
 
 /** Incremental curation of the weekly delivery (curate_delta): the
   * delta-only pipeline must admit exactly the docs the from-scratch
@@ -18,7 +19,7 @@ class CurateDeltaSpec extends SparkSuite {
 
   test("fixture: delta-only output, near-dup newer members excluded") {
     val docs = graft.core.Tables.load(spark, dir, "documents")
-    val cut = MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     val out = TextQuality.curateDelta(spark, dir)
     val ids = out.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids.nonEmpty, "vacuous: empty delivery shard")
@@ -37,7 +38,7 @@ class CurateDeltaSpec extends SparkSuite {
   test("stage 1 via the persisted canon store == full-corpus rank-1") {
     import org.apache.spark.sql.expressions.Window
     val docs = graft.core.Tables.load(spark, dir, "documents")
-    val cut = MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     val viaStore = TextQuality.canonKeptDelta(spark, dir, docs, cut)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val w = Window.partitionBy("canon_md5").orderBy(col("doc_id").asc)
@@ -54,7 +55,7 @@ class CurateDeltaSpec extends SparkSuite {
       "delta-pruned, the corpus side is the canon posting store") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val docs = graft.core.Tables.load(spark, dir, "documents")
-    val cut = MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     val stage1 = TextQuality.canonKeptDelta(spark, dir, docs, cut)
     stage1.collect()
     val scans = graft.PlanNodes.all(stage1)
@@ -102,7 +103,7 @@ class CurateDeltaSpec extends SparkSuite {
     try {
       docs.coalesce(1).write.parquet(s"$tmp/documents.parquet")
       // cut = 11*4/5+1 = 9: the delivery is {9, 10, 11}
-      assert(MinhashIndex.deltaCutoff(docs) === 9L)
+      assert(Tables.deltaCutoff(docs, "doc_id") === 9L)
       // attribution preconditions: 9 is NOT a banded pair member...
       val pairs = TextSim.dedupMinhash(spark, tmp, threshold = 0.8)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

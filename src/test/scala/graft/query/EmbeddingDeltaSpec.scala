@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.functions._
 import graft.{SparkSuite, TestSpark}
+import graft.core.Tables
 
 /** O(delta) hyperplane-LSH dedup ([[EmbeddingIndex]]): per-vector
   * signatures make incremental maintenance EXACT, so the delta query
@@ -16,7 +17,7 @@ class EmbeddingDeltaSpec extends SparkSuite {
 
   test("delta form == one-shot pairs with the newer side in the delta") {
     val e = graft.core.Tables.load(spark, dir, "embeddings")
-    val cut = SemanticIndex.deltaCutoff(e)
+    val cut = Tables.deltaCutoff(e, "vec_id")
     val viaDelta = rows(EmbeddingIndex.dedupEmbeddingAnnDeltaOf(e))
     val viaOneShot = rows(TextSim.dedupEmbeddingAnnOf(e)
       .filter(col("v2") >= cut))
@@ -32,10 +33,10 @@ class EmbeddingDeltaSpec extends SparkSuite {
   test("recall contract: every planted twin is found from the delta " +
       "probe (ids land above the cutoff by construction)") {
     val e = graft.core.Tables.load(spark, dir, "embeddings")
-    val cut = SemanticIndex.deltaCutoff(
+    val cut = Tables.deltaCutoff(
       e.unionByName(e.filter(col("vec_id") < 50)
         .select((col("vec_id") + 1000000L).as("vec_id"),
-          col("embedding"), col("label"))))
+          col("embedding"), col("label"))), "vec_id")
     assert(cut > e.agg(max("vec_id")).head().getLong(0),
       "twins not all in the delta slice — the contract would stop " +
       "exercising the incremental path")

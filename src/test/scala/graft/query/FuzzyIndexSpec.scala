@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.functions._
 import graft.{SparkSuite, TestSpark}
+import graft.core.Tables
 
 /** The persisted deletion-signature index ([[FuzzyIndex]]) — the r18
   * verdict's top task made code: the load-bearing claims are
@@ -20,7 +21,7 @@ class FuzzyIndexSpec extends SparkSuite {
 
   test("index-served delta join == inline-built, pair for pair") {
     val p = parts
-    val cut = FuzzyIndex.deltaCutoff(p)
+    val cut = Tables.deltaCutoff(p, "p_partkey")
     val probes = FuzzyJoin.probesOf(p.filter(col("p_partkey") >= cut), 20)
     val inline = FuzzyJoin.matchProbes(
         probes, FuzzyJoin.signaturesOf(p, 2), p, 2)
@@ -34,7 +35,7 @@ class FuzzyIndexSpec extends SparkSuite {
   test("index-served delta join == unblocked brute force on the " +
       "delivery probes") {
     val p = parts
-    val cut = FuzzyIndex.deltaCutoff(p)
+    val cut = Tables.deltaCutoff(p, "p_partkey")
     val truth = FuzzyJoin.probesOf(p.filter(col("p_partkey") >= cut), 20)
       .crossJoin(p)
       .withColumn("dist",
@@ -71,7 +72,7 @@ class FuzzyIndexSpec extends SparkSuite {
     assert(store.read(spark).get.count() === before)
     // density guard: the delta probe rule must cover the delivery
     val p = parts
-    val cut = FuzzyIndex.deltaCutoff(p)
+    val cut = Tables.deltaCutoff(p, "p_partkey")
     val nProbes = p.filter(
       col("p_partkey") >= cut && col("p_partkey") % 20 === 0).count()
     assert(nProbes > 0, "fixture yields no delivery probes")

@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.functions._
 import graft.{SparkSuite, TestSpark}
+import graft.core.Tables
 
 /** O(delta) semantic dedup ([[SemanticIndex]] — r14 verdict gap #1).
   * The load-bearing claim is EXACTNESS of incremental maintenance:
@@ -18,7 +19,7 @@ class SemanticDeltaSpec extends SparkSuite {
   test("incremental == full frozen-model run over base ∪ delta") {
     val e = graft.core.Tables.load(spark, dir, "embeddings")
     val incremental = SemanticIndex.dedupSemanticDeltaOf(e)
-    val cut = SemanticIndex.deltaCutoff(e)
+    val cut = Tables.deltaCutoff(e, "vec_id")
     val cent = Ivf.trainCentroids(
       e.filter(col("vec_id") < cut), 8, 3, 7L)
     val all = TextSim.assignCells(e, cent)
@@ -40,10 +41,10 @@ class SemanticDeltaSpec extends SparkSuite {
   test("delta mass is genuinely flagged by the incremental path: " +
       "every planted twin lands above the cutoff and is caught") {
     val e = graft.core.Tables.load(spark, dir, "embeddings")
-    val cut = SemanticIndex.deltaCutoff(
+    val cut = Tables.deltaCutoff(
       e.unionByName(e.filter(col("vec_id") < 50)
         .select((col("vec_id") + 1000000L).as("vec_id"),
-          col("embedding"), col("label"))))
+          col("embedding"), col("label"))), "vec_id")
     assert(cut > e.agg(max("vec_id")).head().getLong(0),
       "twins do not all land in the delta slice — the contract " +
       "would no longer exercise the incremental path")

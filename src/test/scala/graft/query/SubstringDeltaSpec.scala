@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.functions._
 import graft.{SparkSuite, TestSpark}
+import graft.core.Tables
 
 /** O(delta) substring dedup ([[SubstringIndex]]): the load-bearing
   * claim is that cleaning the delivery against the base GRAM table
@@ -83,7 +84,7 @@ class SubstringDeltaSpec extends SparkSuite {
 
   test("fixture: index form == batch form on the delta slice") {
     val docs = graft.core.Tables.load(spark, TestSpark.sfDir, "documents")
-    val cut = MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     assert(rows(deltaViaIndex(docs, cut)) ===
       rows(deltaViaBatch(docs, cut)))
   }
@@ -91,7 +92,7 @@ class SubstringDeltaSpec extends SparkSuite {
   test("persisted store serves the same delta cleaning") {
     val dir = TestSpark.sfDir
     val docs = graft.core.Tables.load(spark, dir, "documents")
-    val cut = MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     val served = rows(SubstringIndex.dedupSubstringDelta(spark, dir))
     assert(served === rows(deltaViaBatch(docs, cut)))
     assert(served.nonEmpty)

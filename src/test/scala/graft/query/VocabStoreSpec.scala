@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.functions._
 import graft.{SparkSuite, TestSpark}
+import graft.core.Tables
 
 /** Persisted, incrementally-maintained tokenizer vocabulary
   * ([[VocabStore]] — r14 verdict gap #2). The exactness argument is
@@ -17,7 +18,7 @@ class VocabStoreSpec extends SparkSuite {
 
   test("two-delivery count merge == full-corpus counts (additivity)") {
     val docs = graft.core.Tables.load(spark, dir, "documents")
-    val cut = MinhashIndex.deltaCutoff(docs)
+    val cut = Tables.deltaCutoff(docs, "doc_id")
     val merged = VocabStore.countsOf(docs.filter(col("doc_id") < cut))
       .unionByName(VocabStore.countsOf(docs.filter(col("doc_id") >= cut)))
       .groupBy("w").agg(sum("n").as("n"))

@@ -2,48 +2,27 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSuite, TestSpark}
-import graft.ingest.SnapshotStore
-import graft.query.{EmbeddingIndex, SemanticIndex, TextSim}
+import graft.TestSpark
+import graft.query.EmbeddingIndex
 
 /** Streaming maintenance of the persisted embedding-LSH bucket store
-  * ([[AnnMaintain]]): replay safety via appendOnce — duplicated bucket
-  * rows would silently inflate the mass the `maxBucket` skew cap reads
+  * ([[DeliveryStore.ann]]): replay safety via appendOnce — duplicated
+  * bucket rows would silently inflate the mass the `maxBucket` skew cap reads
   * — plus micro-batch boundary independence and streamed == batch of
   * the served delta pairs, and the planted-twin recall contract
   * through the STREAMED path. */
-class AnnMaintainSpec extends SparkSuite {
+class AnnMaintainSpec extends DeliveryStoreSpec(DeliveryStore.ann(),
+    "the bucket store") {
 
   private val dir = TestSpark.sfDir
-
-  test("a replayed delivery leaves the bucket store bit-unchanged") {
-    withTmpDir { tmp =>
-      val e = graft.core.Tables.load(spark, dir, "embeddings")
-      val cut = SemanticIndex.deltaCutoff(e)
-      val store = new SnapshotStore(tmp.resolve("b").toString)
-      store.overwrite(TextSim.annBuckets(
-        e.filter(col("vec_id") < cut), 8, 8, 7L))
-      val delivery = e.filter(col("vec_id") >= cut)
-      AnnMaintain.appendDelivery(delivery, store, batchId = 0L)
-      val want = store.read(spark).get.count()
-      assert(want > 0)
-      // the at-least-once replay: the SAME batch body, verbatim — a
-      // blind append would double every delivery bucket row here
-      AnnMaintain.appendDelivery(delivery, store, batchId = 0L)
-      assert(store.read(spark).get.count() === want,
-        "replay doubled the delivery's bucket rows")
-      assert(store.versions(spark).size === 2,
-        "replay must not add a manifest commit")
-    }
-  }
 
   test("streamed maintenance == the batch-built delta operator, and " +
       "boundaries do not matter") {
     val batch = EmbeddingIndex.dedupEmbeddingAnnDelta(spark, dir)
       .collect().map(_.toString).sorted.toSeq
-    val two = AnnMaintain.dedupAnnStream(spark, dir, chunks = 2)
+    val two = DeliveryStore.ann().drive(spark, dir, chunks = 2)
       .collect().map(_.toString).sorted.toSeq
-    val four = AnnMaintain.dedupAnnStream(spark, dir, chunks = 4)
+    val four = DeliveryStore.ann().drive(spark, dir, chunks = 4)
       .collect().map(_.toString).sorted.toSeq
     assert(two === batch,
       "stream-maintained ANN delta diverges from the batch form")

@@ -1,45 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
-
-import graft.{SparkSuite, TestSpark}
-import graft.ingest.SnapshotStore
+import graft.TestSpark
 import graft.multimodal.AudioFp
 
 /** Streaming maintenance of the persisted audio-fingerprint store
-  * ([[AudioMaintain]]): replay safety via appendOnce (a replayed
+  * ([[DeliveryStore.audio]]): replay safety via appendOnce (a replayed
   * delivery would duplicate its doc_ids and double-count every pair
   * they anchor) and boundary independence / streamed == batch of the
   * served near-dup pairs. */
-class AudioMaintainSpec extends SparkSuite {
+class AudioMaintainSpec extends DeliveryStoreSpec(DeliveryStore.audio(),
+    "the fingerprint store", oneRowPerItem = true) {
 
   private val dir = TestSpark.sfDir
-
-  test("a replayed delivery leaves the fingerprint store bit-unchanged") {
-    withTmpDir { tmp =>
-      val ids = graft.core.Tables.load(spark, dir, "documents")
-        .select("doc_id")
-      val cut = ids.agg(max(col("doc_id"))).head().getLong(0) * 4 / 5 + 1
-      val store = new SnapshotStore(tmp.resolve("hashes").toString)
-      store.overwrite(AudioFp.afpsOf(ids.filter(col("doc_id") < cut)))
-      val delivery = ids.filter(col("doc_id") >= cut)
-      AudioMaintain.appendDelivery(delivery, store, batchId = 0L)
-      val want = store.read(spark).get.count()
-      assert(want === ids.count(), "store must cover base + delivery")
-      // the at-least-once replay: the SAME batch body, verbatim
-      AudioMaintain.appendDelivery(delivery, store, batchId = 0L)
-      assert(store.read(spark).get.count() === want,
-        "replay double-appended fingerprints")
-    }
-  }
 
   test("streamed maintenance == the batch delta pairs, and " +
       "boundaries do not matter") {
     val batch = AudioFp.dedupAudioDelta(spark, dir)
       .collect().map(_.toString).sorted.toSeq
-    val two = AudioMaintain.dedupAudioStream(spark, dir, chunks = 2)
+    val two = DeliveryStore.audio().drive(spark, dir, chunks = 2)
       .collect().map(_.toString).sorted.toSeq
-    val four = AudioMaintain.dedupAudioStream(spark, dir, chunks = 4)
+    val four = DeliveryStore.audio().drive(spark, dir, chunks = 4)
       .collect().map(_.toString).sorted.toSeq
     assert(batch.nonEmpty, "vacuous: the delivery introduced no pairs")
     assert(two === batch,

@@ -1,46 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
-
-import graft.{SparkSuite, TestSpark}
-import graft.ingest.SnapshotStore
+import graft.TestSpark
 
 /** Streaming maintenance of the persisted chunk-digest store
-  * ([[ChunkMaintain]]): replay safety via appendOnce and
-  * micro-batch-boundary independence — the IndexMaintainSpec contract
-  * on the second store family. */
-class ChunkMaintainSpec extends SparkSuite {
+  * ([[DeliveryStore.chunk]]): replay safety via appendOnce (both stores
+  * and the served dups) and micro-batch-boundary independence. */
+class ChunkMaintainSpec extends DeliveryStoreSpec(DeliveryStore.chunk(),
+    "both stores", served = true) {
 
   private val dir = TestSpark.sfDir
 
-  test("a replayed delivery leaves both stores bit-unchanged") {
-    withTmpDir { tmp =>
-      val docs = graft.core.Tables.load(spark, dir, "documents")
-      val cut = docs.agg(max(col("doc_id"))).head().getLong(0) * 4 / 5 + 1
-      val dS = new SnapshotStore(tmp.resolve("d").toString)
-      val oS = new SnapshotStore(tmp.resolve("o").toString)
-      dS.overwrite(graft.query.ChunkIndex.digestsOfFrame(
-        docs.filter(col("doc_id") < cut)))
-      val delivery = docs.filter(col("doc_id") >= cut)
-      ChunkMaintain.appendDelivery(delivery, dS, oS, batchId = 0L)
-      val wantD = dS.read(spark).get.count()
-      val wantO = oS.read(spark).get.count()
-      val wantDups = ChunkMaintain.dupsFromStores(spark, dS, oS)
-        .collect().map(_.toString).sorted.toSeq
-      // the at-least-once replay: the SAME batch body, verbatim
-      ChunkMaintain.appendDelivery(delivery, dS, oS, batchId = 0L)
-      assert(dS.read(spark).get.count() === wantD,
-        "replay double-appended digests")
-      assert(oS.read(spark).get.count() === wantO,
-        "replay double-appended occurrences")
-      assert(ChunkMaintain.dupsFromStores(spark, dS, oS)
-        .collect().map(_.toString).sorted.toSeq === wantDups)
-      assert(wantDups.nonEmpty, "vacuous: no delta chunk dups on fixture")
-    }
-  }
-
   test("streamed maintenance == the batch-built delta operator") {
-    val streamed = ChunkMaintain.dedupChunksStream(spark, dir)
+    val streamed = DeliveryStore.chunk().drive(spark, dir)
       .collect().map(_.toString).toSet
     val batch = graft.query.ChunkIndex.dedupChunksDelta(spark, dir)
       .collect().map(_.toString).toSet
@@ -50,9 +21,9 @@ class ChunkMaintainSpec extends SparkSuite {
   }
 
   test("micro-batch boundaries do not change the served result") {
-    val two = ChunkMaintain.dedupChunksStream(spark, dir, chunks = 2)
+    val two = DeliveryStore.chunk().drive(spark, dir, chunks = 2)
       .collect().map(_.toString).toSet
-    val four = ChunkMaintain.dedupChunksStream(spark, dir, chunks = 4)
+    val four = DeliveryStore.chunk().drive(spark, dir, chunks = 4)
       .collect().map(_.toString).toSet
     assert(two === four)
   }

@@ -2,47 +2,27 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSuite, TestSpark}
-import graft.ingest.SnapshotStore
+import graft.TestSpark
+import graft.core.Tables
 import graft.query.{FuzzyIndex, FuzzyJoin}
 
 /** Streaming maintenance of the persisted deletion-signature store
-  * ([[FuzzyMaintain]]): replay safety via appendOnce — duplicated
+  * ([[DeliveryStore.fuzzy]]): replay safety via appendOnce — duplicated
   * signature rows silently inflate the candidate mass the equality
   * join pays — and micro-batch boundary independence / streamed ==
   * batch of the served fuzzy matches. */
-class FuzzyMaintainSpec extends SparkSuite {
+class FuzzyMaintainSpec extends DeliveryStoreSpec(DeliveryStore.fuzzy(),
+    "the signature store") {
 
   private val dir = TestSpark.sfDir
-
-  test("a replayed delivery leaves the signature store bit-unchanged") {
-    withTmpDir { tmp =>
-      val parts = graft.core.Tables.load(spark, dir, "part")
-        .select(col("p_partkey"), col("p_name"))
-      val cut = FuzzyIndex.deltaCutoff(parts)
-      val store = new SnapshotStore(tmp.resolve("sig").toString)
-      store.overwrite(FuzzyJoin.signaturesOf(
-        parts.filter(col("p_partkey") < cut), 2))
-      val delivery = parts.filter(col("p_partkey") >= cut)
-      FuzzyMaintain.appendDelivery(delivery, store, batchId = 0L)
-      val want = store.read(spark).get.count()
-      assert(want > 0)
-      // the at-least-once replay: the SAME batch body, verbatim
-      FuzzyMaintain.appendDelivery(delivery, store, batchId = 0L)
-      assert(store.read(spark).get.count() === want,
-        "replay doubled the delivery's signature rows")
-      assert(store.versions(spark).size === 2,
-        "replay must not add a manifest commit")
-    }
-  }
 
   test("streamed maintenance == the batch-built index's delta join, " +
       "and boundaries do not matter") {
     val batch = FuzzyIndex.joinFuzzyDelta(spark, dir)
       .collect().map(_.toString).sorted.toSeq
-    val two = FuzzyMaintain.joinFuzzyStream(spark, dir, chunks = 2)
+    val two = DeliveryStore.fuzzy().drive(spark, dir, chunks = 2)
       .collect().map(_.toString).sorted.toSeq
-    val four = FuzzyMaintain.joinFuzzyStream(spark, dir, chunks = 4)
+    val four = DeliveryStore.fuzzy().drive(spark, dir, chunks = 4)
       .collect().map(_.toString).sorted.toSeq
     assert(batch.nonEmpty, "vacuous: no delivery probes matched")
     assert(two === batch,
@@ -54,7 +34,7 @@ class FuzzyMaintainSpec extends SparkSuite {
       "the same matches as the one-shot index") {
     val batch = FuzzyIndex.joinFuzzyDelta(spark, dir)
       .collect().map(_.toString).sorted.toSeq
-    val lifecycle = FuzzyMaintain.fuzzyCompactCheck(spark, dir)
+    val lifecycle = DeliveryStore.fuzzyCompactCheck(spark, dir)
       .collect().map(_.toString).sorted.toSeq
     assert(batch.nonEmpty, "vacuous: no delivery probes matched")
     assert(lifecycle === batch,
@@ -68,19 +48,21 @@ class FuzzyMaintainSpec extends SparkSuite {
     withTmpDir { tmp =>
       val parts = graft.core.Tables.load(spark, dir, "part")
         .select(col("p_partkey"), col("p_name"))
-      val cut = FuzzyIndex.deltaCutoff(parts)
-      val store = new SnapshotStore(tmp.resolve("sig").toString)
+      val cut = Tables.deltaCutoff(parts, "p_partkey")
+      val f = DeliveryStore.fuzzy()
+      val run = DeliveryStore.Run(spark, f.storesAt(tmp), cut, "", parts)
+      val store = run("sig")
       store.overwrite(FuzzyJoin.signaturesOf(
         parts.filter(col("p_partkey") < cut), 2))
       val maxId = parts.agg(max(col("p_partkey"))).head().getLong(0)
       val span = DriveSupport.deliverySpan(maxId, cut, 4)
       (0 until 4).foreach { c =>
-        FuzzyMaintain.appendDelivery(parts.filter(
+        f.append(run, parts.filter(
           col("p_partkey") >= cut + c * span &&
-          col("p_partkey") < cut + (c + 1) * span), store, c.toLong)
+          col("p_partkey") < cut + (c + 1) * span), c.toLong)
       }
       def liveDirs(): Int = store.read(spark).get.inputFiles
-        .map(f => f.substring(0, f.lastIndexOf('/'))).distinct.length
+        .map(p => p.substring(0, p.lastIndexOf('/'))).distinct.length
       assert(liveDirs() === 5,
         "expected a base + four-delivery dir chain")
       val want = store.read(spark).get.count()
@@ -91,9 +73,9 @@ class FuzzyMaintainSpec extends SparkSuite {
         "compaction must be content-preserving")
       // every delivery's tag survived the dir collapse via the sidecar
       (0 until 4).foreach { c =>
-        FuzzyMaintain.appendDelivery(parts.filter(
+        f.append(run, parts.filter(
           col("p_partkey") >= cut + c * span &&
-          col("p_partkey") < cut + (c + 1) * span), store, c.toLong)
+          col("p_partkey") < cut + (c + 1) * span), c.toLong)
       }
       assert(store.read(spark).get.count() === want,
         "a post-compaction replay re-appended its signatures")

@@ -2,15 +2,17 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSuite, TestSpark}
+import graft.TestSpark
 import graft.ingest.SnapshotStore
 
 /** Streaming maintenance of the persisted minhash index
-  * ([[IndexMaintain]]): the foreachBatch replay-safety that
-  * [[SnapshotStore.appendOnce]] exists for, and the
+  * ([[DeliveryStore.minhash]]): the foreachBatch replay-safety that
+  * [[SnapshotStore.appendOnce]] exists for (the shared replay test
+  * checks the stores and the served pairs), and the
   * chunking-independence that makes the drive's result bit-equal to
   * the batch-built index's. */
-class IndexMaintainSpec extends SparkSuite {
+class IndexMaintainSpec extends DeliveryStoreSpec(DeliveryStore.minhash(),
+    "the index", served = true) {
 
   import spark.implicits._
 
@@ -56,36 +58,8 @@ class IndexMaintainSpec extends SparkSuite {
     }
   }
 
-  test("a replayed delivery leaves the index bit-unchanged") {
-    withTmpDir { tmp =>
-      val docs = graft.core.Tables.load(spark, dir, "documents")
-      val cut = docs.agg(max(col("doc_id"))).head().getLong(0) * 4 / 5 + 1
-      val bS = new SnapshotStore(tmp.resolve("b").toString)
-      val pS = new SnapshotStore(tmp.resolve("p").toString)
-      val baseSh = graft.query.TextSim.shingleHashesOf(
-        docs.filter(col("doc_id") < cut))
-      bS.overwrite(graft.query.TextSim.bandBucketsOf(baseSh, 32, 8))
-      pS.overwrite(baseSh)
-      val delivery = docs.filter(col("doc_id") >= cut)
-      IndexMaintain.appendDelivery(delivery, bS, pS, batchId = 0L)
-      val want = pS.read(spark).get.count()
-      val wantPairs = IndexMaintain
-        .pairsFromStores(spark, bS, pS, cut, 0.8)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      // the at-least-once replay: the SAME batch body, verbatim
-      IndexMaintain.appendDelivery(delivery, bS, pS, batchId = 0L)
-      assert(pS.read(spark).get.count() === want,
-        "replay double-appended postings")
-      val gotPairs = IndexMaintain
-        .pairsFromStores(spark, bS, pS, cut, 0.8)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(gotPairs === wantPairs)
-      assert(wantPairs.nonEmpty, "vacuous: no delta pairs on fixture")
-    }
-  }
-
   test("streamed maintenance == the batch-built delta operator") {
-    val streamed = IndexMaintain.dedupDelta(spark, dir)
+    val streamed = DeliveryStore.minhash().drive(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
     val batch = graft.query.MinhashIndex.dedupMinhashDelta(spark, dir)
@@ -100,8 +74,9 @@ class IndexMaintainSpec extends SparkSuite {
     withTmpDir { tmp =>
       val docs = graft.core.Tables.load(spark, dir, "documents")
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) * 4 / 5 + 1
-      val bS = new SnapshotStore(tmp.resolve("b").toString)
-      val pS = new SnapshotStore(tmp.resolve("p").toString)
+      val f = DeliveryStore.minhash()
+      val run = DeliveryStore.Run(spark, f.storesAt(tmp), cut, "", docs)
+      val (bS, pS) = (run("buckets"), run("postings"))
       bS.overwrite(graft.query.TextSim.bandBucketsOf(
         graft.query.TextSim.shingleHashesOf(
           docs.filter(col("doc_id") < cut)), 32, 8))
@@ -111,10 +86,8 @@ class IndexMaintainSpec extends SparkSuite {
       val ids = delta.select("doc_id").collect().map(_.getLong(0)).sorted
       val (lo, hi) = (ids.head, ids.last)
       val mid = lo + (hi - lo) / 2
-      IndexMaintain.appendDelivery(
-        delta.filter(col("doc_id") <= mid), bS, pS, 0L)
-      IndexMaintain.appendDelivery(
-        delta.filter(col("doc_id") > mid), bS, pS, 1L)
+      f.append(run, delta.filter(col("doc_id") <= mid), 0L)
+      f.append(run, delta.filter(col("doc_id") > mid), 1L)
       // the LIVE manifest references base + one dir PER delivery (the
       // O(delta) append shape); retention keeps live + previous
       // manifests only, so count dirs, not retained versions
@@ -214,7 +187,7 @@ class IndexMaintainSpec extends SparkSuite {
 
   test("driver key flow: compacted stores serve the exact delta " +
       "pairs and the post-compact replay does not double-count") {
-    val got = IndexMaintain.dedupDeltaCompacted(spark, dir)
+    val got = DeliveryStore.indexCompactCheck(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = graft.query.MinhashIndex.dedupMinhashDelta(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

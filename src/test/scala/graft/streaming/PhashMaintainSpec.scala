@@ -1,51 +1,24 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
-
-import graft.{SparkSuite, TestSpark}
-import graft.ingest.SnapshotStore
+import graft.TestSpark
 
 /** Streaming maintenance of the persisted perceptual-fingerprint
-  * store ([[PhashMaintain]]): replay safety via appendOnce (a
+  * store ([[DeliveryStore.phash]]): replay safety via appendOnce (a
   * replayed delivery would double its items' store rows and skew
-  * every occupancy numerator) and boundary independence of the
-  * served gauge panel. */
-class PhashMaintainSpec extends SparkSuite {
+  * every occupancy numerator; the shared replay test checks the panel
+  * too) and boundary independence of the served gauge panel. */
+class PhashMaintainSpec extends DeliveryStoreSpec(DeliveryStore.phash,
+    "the store and the panel", served = true) {
 
   private val dir = TestSpark.sfDir
-
-  test("a replayed delivery leaves the store and the panel " +
-      "bit-unchanged") {
-    withTmpDir { tmp =>
-      val ids = graft.core.Tables.load(spark, dir, "documents")
-        .select("doc_id")
-      val cut = ids.agg(max(col("doc_id"))).head().getLong(0) * 4 / 5 + 1
-      val bS = new SnapshotStore(tmp.resolve("b").toString)
-      val dS = new SnapshotStore(tmp.resolve("d").toString)
-      bS.overwrite(graft.multimodal.Phash.phashesOf(
-        ids.filter(col("doc_id") < cut)))
-      val delivery = ids.filter(col("doc_id") >= cut)
-      PhashMaintain.appendDelivery(delivery, dS, batchId = 0L)
-      val want = dS.read(spark).get.count()
-      val wantPanel = PhashMaintain.panelFromStores(spark, bS, dS)
-        .collect().map(_.toString).sorted.toSeq
-      // the at-least-once replay: the SAME batch body, verbatim
-      PhashMaintain.appendDelivery(delivery, dS, batchId = 0L)
-      assert(dS.read(spark).get.count() === want,
-        "replay double-appended fingerprints")
-      assert(PhashMaintain.panelFromStores(spark, bS, dS)
-        .collect().map(_.toString).sorted.toSeq === wantPanel)
-      assert(wantPanel.nonEmpty)
-    }
-  }
 
   test("streamed maintenance == the batch gauge, and boundaries " +
       "do not matter") {
     val batch = graft.multimodal.Phash.phashDriftCheck(spark, dir)
       .collect().map(_.toString).sorted.toSeq
-    val two = PhashMaintain.phashDriftStream(spark, dir, chunks = 2)
+    val two = DeliveryStore.phash.drive(spark, dir, chunks = 2)
       .collect().map(_.toString).sorted.toSeq
-    val four = PhashMaintain.phashDriftStream(spark, dir, chunks = 4)
+    val four = DeliveryStore.phash.drive(spark, dir, chunks = 4)
       .collect().map(_.toString).sorted.toSeq
     assert(two === batch,
       "stream-maintained fingerprint gauge diverges from the batch form")

@@ -2,62 +2,45 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSuite, TestSpark}
-import graft.ingest.SnapshotStore
+import graft.TestSpark
+import graft.core.Tables
 import graft.query.SubstringIndex
 
 /** Streaming maintenance of the persisted substring gram store
-  * ([[SubstringMaintain]]): replay safety via appendOnce (replayed
+  * ([[DeliveryStore.substring]]): replay safety via appendOnce (replayed
   * counts double and silently flip the next delivery's
   * primary-occurrence rule), additivity of the streamed chain
   * (streamed counts == the batch chain's delta commit at any
   * boundary choice), and streamed == batch of the served clean. */
-class SubstringMaintainSpec extends SparkSuite {
+class SubstringMaintainSpec extends DeliveryStoreSpec(
+    DeliveryStore.substring(), "the gram store") {
 
   private val dir = TestSpark.sfDir
-
-  test("a replayed delivery leaves the gram store bit-unchanged") {
-    withTmpDir { tmp =>
-      val docs = graft.core.Tables.load(spark, dir, "documents")
-        .select("doc_id", "text")
-      val cut = graft.query.MinhashIndex.deltaCutoff(docs)
-      val store = new SnapshotStore(tmp.resolve("grams").toString)
-      val delivery = docs.filter(col("doc_id") >= cut)
-      SubstringMaintain.appendDelivery(delivery, store, batchId = 0L)
-      val want = store.read(spark).get
-        .collect().map(_.toString).sorted.toSeq
-      assert(want.nonEmpty)
-      // the at-least-once replay: the SAME batch body, verbatim
-      SubstringMaintain.appendDelivery(delivery, store, batchId = 0L)
-      assert(store.read(spark).get
-        .collect().map(_.toString).sorted.toSeq === want,
-        "replay double-appended gram counts")
-    }
-  }
 
   test("the streamed chain's total counts == the batch one-shot " +
       "counts at any boundary choice (additivity)") {
     withTmpDir { tmp =>
       val docs = graft.core.Tables.load(spark, dir, "documents")
         .select("doc_id", "text")
-      val cut = graft.query.MinhashIndex.deltaCutoff(docs)
+      val cut = Tables.deltaCutoff(docs, "doc_id")
       val delivery = docs.filter(col("doc_id") >= cut)
       val oneShot = SubstringIndex.gramsOf(delivery, 5)
         .groupBy("gh").agg(count(lit(1)).as("occ"))
         .collect().map(_.toString).sorted.toSeq
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
       for (chunks <- Seq(2, 4)) {
-        val store = new SnapshotStore(
-          tmp.resolve(s"grams-$chunks").toString)
+        val f = DeliveryStore.substring()
+        val run = DeliveryStore.Run(spark,
+          f.storesAt(tmp.resolve(s"chain-$chunks")), cut, "", docs)
         val span = DriveSupport.deliverySpan(maxId, cut, chunks)
         (0 until chunks).foreach { c =>
-          SubstringMaintain.appendDelivery(delivery.filter(
+          f.append(run, delivery.filter(
             col("doc_id") >= cut + c * span &&
-            col("doc_id") < cut + (c + 1) * span), store, c.toLong)
+            col("doc_id") < cut + (c + 1) * span), c.toLong)
         }
         // counts are additive at gram grain: summing the chain's
         // per-delivery rows must reproduce the one-shot counts
-        val chained = store.read(spark).get
+        val chained = run.read("grams").get
           .groupBy("gh").agg(sum(col("occ")).as("occ"))
           .collect().map(_.toString).sorted.toSeq
         assert(chained === oneShot,
@@ -70,10 +53,10 @@ class SubstringMaintainSpec extends SparkSuite {
       "boundaries do not matter") {
     val batch = SubstringIndex.dedupSubstringDelta(spark, dir)
       .collect().map(_.toString).sorted.toSeq
-    val two = SubstringMaintain.dedupSubstringStream(spark, dir,
-        chunks = 2).collect().map(_.toString).sorted.toSeq
-    val four = SubstringMaintain.dedupSubstringStream(spark, dir,
-        chunks = 4).collect().map(_.toString).sorted.toSeq
+    val two = DeliveryStore.substring().drive(spark, dir, chunks = 2)
+      .collect().map(_.toString).sorted.toSeq
+    val four = DeliveryStore.substring().drive(spark, dir, chunks = 4)
+      .collect().map(_.toString).sorted.toSeq
     assert(batch.nonEmpty, "vacuous: empty delivery clean")
     assert(two === batch,
       "stream-maintained substring clean diverges from the batch form")

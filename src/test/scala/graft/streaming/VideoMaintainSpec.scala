@@ -1,45 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
-
-import graft.{SparkSuite, TestSpark}
-import graft.ingest.SnapshotStore
+import graft.TestSpark
 import graft.multimodal.VideoFp
 
 /** Streaming maintenance of the persisted video-sequence store
-  * ([[VideoMaintain]]): replay safety via appendOnce (a replayed
+  * ([[DeliveryStore.video]]): replay safety via appendOnce (a replayed
   * delivery would duplicate its doc_ids and double-count every
   * exact-match pair they anchor) and boundary independence /
   * streamed == batch of the served duplicate-footage pairs. */
-class VideoMaintainSpec extends SparkSuite {
+class VideoMaintainSpec extends DeliveryStoreSpec(DeliveryStore.video,
+    "the sequence store", oneRowPerItem = true) {
 
   private val dir = TestSpark.sfDir
-
-  test("a replayed delivery leaves the sequence store bit-unchanged") {
-    withTmpDir { tmp =>
-      val ids = graft.core.Tables.load(spark, dir, "documents")
-        .select("doc_id")
-      val cut = ids.agg(max(col("doc_id"))).head().getLong(0) * 4 / 5 + 1
-      val store = new SnapshotStore(tmp.resolve("seqs").toString)
-      store.overwrite(VideoFp.vfpsOf(ids.filter(col("doc_id") < cut)))
-      val delivery = ids.filter(col("doc_id") >= cut)
-      VideoMaintain.appendDelivery(delivery, store, batchId = 0L)
-      val want = store.read(spark).get.count()
-      assert(want === ids.count(), "store must cover base + delivery")
-      // the at-least-once replay: the SAME batch body, verbatim
-      VideoMaintain.appendDelivery(delivery, store, batchId = 0L)
-      assert(store.read(spark).get.count() === want,
-        "replay double-appended sequences")
-    }
-  }
 
   test("streamed maintenance == the batch delta pairs, and " +
       "boundaries do not matter") {
     val batch = VideoFp.dedupVideoDelta(spark, dir)
       .collect().map(_.toString).sorted.toSeq
-    val two = VideoMaintain.dedupVideoStream(spark, dir, chunks = 2)
+    val two = DeliveryStore.video.drive(spark, dir, chunks = 2)
       .collect().map(_.toString).sorted.toSeq
-    val four = VideoMaintain.dedupVideoStream(spark, dir, chunks = 4)
+    val four = DeliveryStore.video.drive(spark, dir, chunks = 4)
       .collect().map(_.toString).sorted.toSeq
     assert(batch.nonEmpty, "vacuous: the delivery introduced no pairs")
     assert(two === batch,

@@ -1,52 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
-
-import graft.{SparkSuite, TestSpark}
-import graft.ingest.SnapshotStore
+import graft.TestSpark
 
 /** Streaming maintenance of the persisted vocabulary-count store
-  * ([[VocabMaintain]]): replay safety via appendOnce — additive
+  * ([[DeliveryStore.vocab]]): replay safety via appendOnce — additive
   * counts are exactly where an at-least-once replay corrupts
-  * SILENTLY (numbers wrong, structure fine) — and micro-batch
-  * boundary independence of the served gauge panel. */
-class VocabMaintainSpec extends SparkSuite {
+  * SILENTLY (numbers wrong, structure fine), so the shared replay test
+  * checks the served panel too — and micro-batch boundary independence
+  * of the served gauge panel. */
+class VocabMaintainSpec extends DeliveryStoreSpec(DeliveryStore.vocab(),
+    "the counts and the panel", served = true) {
 
   private val dir = TestSpark.sfDir
-
-  test("a replayed delivery leaves the counts and the panel " +
-      "bit-unchanged") {
-    withTmpDir { tmp =>
-      val docs = graft.core.Tables.load(spark, dir, "documents")
-      val cut = docs.agg(max(col("doc_id"))).head().getLong(0) * 4 / 5 + 1
-      val bS = new SnapshotStore(tmp.resolve("b").toString)
-      val dS = new SnapshotStore(tmp.resolve("d").toString)
-      bS.overwrite(docs.filter(col("doc_id") < cut)
-        .select(explode(graft.query.TextSim.tokens(col("text"))).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("n")))
-      val delivery = docs.filter(col("doc_id") >= cut)
-      VocabMaintain.appendDelivery(delivery, dS, batchId = 0L)
-      val wantMass = dS.read(spark).get.agg(sum("n")).head().getLong(0)
-      val wantPanel = VocabMaintain.panelFromStores(spark, bS, dS)
-        .collect().map(_.toString).sorted.toSeq
-      // the at-least-once replay: the SAME batch body, verbatim — a
-      // blind append would DOUBLE every delta count here
-      VocabMaintain.appendDelivery(delivery, dS, batchId = 0L)
-      assert(dS.read(spark).get.agg(sum("n")).head().getLong(0)
-        === wantMass, "replay doubled the delta token mass")
-      assert(VocabMaintain.panelFromStores(spark, bS, dS)
-        .collect().map(_.toString).sorted.toSeq === wantPanel)
-      assert(wantPanel.nonEmpty)
-    }
-  }
 
   test("streamed maintenance == the batch gauge, and boundaries " +
       "do not matter") {
     val batch = graft.query.TextQuality.vocabDriftCheck(spark, dir)
       .collect().map(_.toString).sorted.toSeq
-    val two = VocabMaintain.vocabDriftStream(spark, dir, chunks = 2)
+    val two = DeliveryStore.vocab().drive(spark, dir, chunks = 2)
       .collect().map(_.toString).sorted.toSeq
-    val four = VocabMaintain.vocabDriftStream(spark, dir, chunks = 4)
+    val four = DeliveryStore.vocab().drive(spark, dir, chunks = 4)
       .collect().map(_.toString).sorted.toSeq
     assert(two === batch,
       "stream-maintained vocabulary gauge diverges from the batch form")
