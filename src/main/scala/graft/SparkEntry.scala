@@ -280,20 +280,20 @@ object SparkEntry {
     "events_anomaly" -> (Events.anomalyDaily _),
     "variant_funcs" -> (Events.variantExtract _),
     "variant_safe" -> (Events.variantSafe _),
-    "stream_ivj_inner" -> (streaming.IntervalJoinDrive.inner _),
-    "stream_ivj_left" -> (streaming.IntervalJoinDrive.left _),
-    "stream_ivj_full" -> (streaming.IntervalJoinDrive.full _),
-    "stream_tws_totals" -> (streaming.TwsDrive.totals _),
-    "stream_session_window" -> (streaming.SessionDrive.sessions _),
-    "stream_session_window_restart" -> (streaming.SessionDrive.sessionsRestart _),
-    "stream_dedup_drive" -> (streaming.DedupDrive.dedup _),
-    "stream_topk_window" -> (streaming.TopKDrive.topk _),
-    // the MG sketch inside streaming window state — see HeavyHitterDrive
-    "stream_heavy_hitters" -> ((s: SparkSession, d: String) => streaming.HeavyHitterDrive.heavy(s, d)),
+    "stream_ivj_inner" -> ((s: SparkSession, d: String) => streaming.EventDrives.intervalJoin(s, d, "inner")),
+    "stream_ivj_left" -> ((s: SparkSession, d: String) => streaming.EventDrives.intervalJoin(s, d, "left")),
+    "stream_ivj_full" -> ((s: SparkSession, d: String) => streaming.EventDrives.intervalJoin(s, d, "full")),
+    "stream_tws_totals" -> (streaming.EventDrives.twsTotals _),
+    "stream_session_window" -> (streaming.EventDrives.sessions _),
+    "stream_session_window_restart" -> (streaming.EventDrives.sessionsRestart _),
+    "stream_dedup_drive" -> (streaming.EventDrives.dedup _),
+    "stream_topk_window" -> (streaming.EventDrives.topk _),
+    // the MG sketch inside streaming window state — see EventDrives.heavyHitters
+    "stream_heavy_hitters" -> ((s: SparkSession, d: String) => streaming.EventDrives.heavyHitters(s, d)),
     // online near-dup detection: MinHash-LSH dedup as a per-bucket
     // state machine, batch-equal by construction — see MinhashStream
     "stream_dedup_minhash" -> ((s: SparkSession, d: String) => streaming.MinhashStream.dedup(s, d)),
-    "stream_session_tracker" -> (streaming.TrackerDrive.sessions _),
+    "stream_session_tracker" -> (streaming.EventDrives.tracker _),
     "doc_tokens_pos" -> (TextSim.docTokensPos _),
     "corpus_melt" -> ((s: SparkSession, d: String) => TextQuality.corpusMelt(s, d)),
     "window_rank_stats" -> (Relational.windowRankStats _),
@@ -2447,7 +2447,7 @@ object SparkEntry {
     // the native session_window drive AND the custom fMGWS tracker
     // drive must both reproduce the gaps-and-islands sessions exactly
     // (no 30-min boundary ties exist in the fixture at any SF — see
-    // SessionDrive scaladoc); three implementations, one oracle
+    // EventDrives.sessions scaladoc); three implementations, one oracle
     "stream_session_window" -> sessionOracleSql,
     // the checkpoint-stop/restart drive must reproduce the SAME
     // sessions — recovery as a driver-gated property, not a spec-only

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr, lit, max}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Shared scaffolding for the SF-scaled streaming drives (the keys
@@ -12,8 +12,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * throwaway workspace lifecycle, the 4-partition state pin
   * (captured/restored around the query — the fixture cost is state
   * store instances per partition per micro-batch, see PERF.md r7),
-  * unique memory-sink names, and result pinning off the sink before
-  * the workspace the plan reads from is deleted. */
+  * unique memory-sink names, the window-closing sentinel, and result
+  * pinning off the sink before the workspace the plan reads from is
+  * deleted. [[memoryDrive]] composes these into the one skeleton every
+  * memory-sink drive runs through, so a change to how the drives
+  * trigger or sink lands in one place. */
 private[graft] object DriveSupport {
 
   /** Run `body` with a fresh workspace under target/ (relative to the
@@ -56,6 +59,71 @@ private[graft] object DriveSupport {
   /** Unique memory-sink query name. */
   def sinkName(tag: String): String =
     s"t_${tag}_" + java.util.UUID.randomUUID().toString.replace("-", "")
+
+  /** Run one streaming drive through a memory sink and serve its
+    * result. Owns the skeleton every memory-sink drive shares: a fresh
+    * workspace (`graft-<tag>`), a unique sink name, the stream confs
+    * ([[withStreamConfs]]: `partitions`, `provider`) held for the
+    * query's lifetime, a checkpoint under the workspace, and a query
+    * stopped (then confs restored, workspace deleted) even when
+    * `deliver` or `serve` throws.
+    *
+    * The contract the drives rely on:
+    *  - single-trigger arrival: every input file is staged before
+    *    `start()`, so the first trigger sees all real rows at the
+    *    watermark floor — no row can be late (a drive that needs more
+    *    triggers says so itself: the MinHash stream meters its files,
+    *    the dedup drive re-delivers in its own `deliver`);
+    *  - the sentinel flush: append-mode machines stage a far-future
+    *    [[sentinel]] with the input, batch #1's commit advances the
+    *    watermark past every real window and the engine's no-data
+    *    batch emits them, all inside the default `deliver`
+    *    (`processAllAvailable`);
+    *  - a unique sink per run: drives and measured passes never read
+    *    each other's rows;
+    *  - `serve` reads the sink and must [[pin]] whatever it returns
+    *    before this call ends — the workspace its plan reads from is
+    *    deleted on the way out.
+    *
+    * `stream` gets the workspace (for per-run staging, as the dedup
+    * drive's re-delivery needs); so does `deliver`, which defaults to
+    * one `processAllAvailable`. */
+  def memoryDrive(spark: SparkSession, tag: String, mode: String,
+      partitions: String = "4",
+      provider: Option[String] = DriveSupport.envProvider,
+      deliver: (StreamingQuery, Path) => Unit =
+        (q, _) => q.processAllAvailable())(
+      stream: Path => DataFrame)(serve: DataFrame => DataFrame)
+      : DataFrame =
+    withWorkspace(s"graft-$tag") { ws =>
+      val name = sinkName(tag)
+      withStreamConfs(spark, partitions, provider) {
+        val q = stream(ws).writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", ws.resolve("ckpt").toString)
+          .outputMode(mode).start()
+        draining(q) {
+          deliver(q, ws)
+          serve(spark.table(name))
+        }
+      }
+    }
+
+  /** The one-row window-closing sentinel for a staged event stream:
+    * `row(ts)` builds its columns (a `-1` id the serve filters out,
+    * the staged schema's remaining fields) around
+    * `ts` = max(`events`.ts) + 366 days. Staged WITH the input, not
+    * appended mid-drive (r17): batch #1 sees every real row at the
+    * watermark floor, its commit advances the watermark past every
+    * real window, session or join range, and the engine's no-data
+    * micro-batch emits (or null-extends, or times out) them — one data
+    * batch, no second delivery. Whatever the sentinel itself yields
+    * (an open window or session, a self-matched join row) carries the
+    * `-1` id, which every serve filters out. */
+  def sentinel(events: DataFrame)(row: Column => Seq[Column]): DataFrame = {
+    val maxTs = events.agg(max(col("ts"))).head().getAs[Any](0)
+    events.sparkSession.range(1).select(row(
+      lit(maxTs).cast("timestamp") + expr("INTERVAL 366 days")): _*)
+  }
 
   private val stageMemo = new graft.core.Caches.PerSession[
     java.util.concurrent.ConcurrentHashMap[String, StagedSlot]]
@@ -123,7 +191,7 @@ private[graft] object DriveSupport {
     * `build` writes its files under a fresh target/ dir (swept by a
     * JVM shutdown hook, one per key per process) and returns whatever
     * handles the drive needs (dirs, schemas, scalars). Do NOT use for
-    * drives that append mid-drive (DedupDrive's re-delivery, the
+    * drives that append mid-drive (EventDrives.dedup's re-delivery, the
     * restart flows) — their staging mutates and must stay per-run. */
   def stagedOnce[T](spark: org.apache.spark.sql.SparkSession,
       key: String)(build: Path => T)(
@@ -147,25 +215,34 @@ private[graft] object DriveSupport {
     slot.value.asInstanceOf[T]
   }
 
+  /** The RocksDB state store provider: what transformWithState
+    * requires, and the production store. */
+  val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** SPARK_GRAFT_STATE_PROVIDER=rocksdb|hdfs overrides the state store
-    * provider for every drive that doesn't pin one itself (mirrors
-    * StreamScale's switch) — this is how the bench records the drive
-    * keys on the RocksDB production store (PERF.md r11) without code
-    * changes. Drives that REQUIRE RocksDB (transformWithState) pass it
-    * explicitly and are unaffected. Lazy: a strict val would surface an
-    * invalid env value as ExceptionInInitializerError at first object
-    * touch (real message buried in the cause) and NoClassDefFoundError
-    * after; lazy defers to first use, so the sys.error IS the primary
-    * exception (r11 advice). */
-  private lazy val envProvider: Option[String] =
+    * provider for every drive that doesn't pin one itself — this is
+    * how the bench records the drive keys on the RocksDB production
+    * store (PERF.md r11) without code changes — and for every
+    * StreamScale machine. Drives that REQUIRE RocksDB
+    * (transformWithState) pass it explicitly and are unaffected. Lazy:
+    * a strict val would surface an invalid env value as
+    * ExceptionInInitializerError at first object touch (real message
+    * buried in the cause) and NoClassDefFoundError after; lazy defers
+    * to first use, so the sys.error IS the primary exception (r11
+    * advice). */
+  private[graft] lazy val envProviderName: Option[String] =
     sys.env.get("SPARK_GRAFT_STATE_PROVIDER").map(_.trim).map {
-      case "rocksdb" => "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider"
-      case "hdfs" => "org.apache.spark.sql.execution.streaming." +
-        "state.HDFSBackedStateStoreProvider"
+      case p @ ("rocksdb" | "hdfs") => p
       case other => sys.error("SPARK_GRAFT_STATE_PROVIDER: expected " +
         s"'rocksdb' or 'hdfs', got '$other'")
     }
+
+  private lazy val envProvider: Option[String] = envProviderName.map {
+    case "rocksdb" => RocksDbProvider
+    case _ => "org.apache.spark.sql.execution.streaming." +
+      "state.HDFSBackedStateStoreProvider"
+  }
 
   /** Pin `spark.sql.shuffle.partitions` (and optionally the state
     * store provider) for a streaming query's lifetime: both confs are

@@ -8,6 +8,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
   ValueState}
 
+import graft.core.Tables.moneySum
+
 /** True streaming forms of the event-time window operators (SURVEY.md §2
   * B17/B18). The batch-equivalent, oracle-checked forms live in
   * graft.query.Events — the window SEMANTICS are identical Spark
@@ -58,8 +60,9 @@ object EventStreams {
                 v.view_ts > p.ts - INTERVAL 30 MINUTES AND
                 v.view_ts <= p.ts"""))
     // `keyed` adds both event ids so the output carries a total order —
-    // what the oracle-checked SF-scaled drive (IntervalJoinDrive) needs;
-    // the plain form keeps the original 5-column shape the specs pin.
+    // what the oracle-checked SF-scaled drive (EventDrives.intervalJoin)
+    // needs; the plain form keeps the original 5-column shape the specs
+    // pin.
     if (keyed) j.select(col("p.user_id"),
       col("p.event_id").as("purchase_id"), col("p.ts"),
       col("p.value").as("purchase_value"),
@@ -196,7 +199,7 @@ object EventStreams {
     // Epoch MICROS as the state clock — `getTime` alone (millis) would
     // truncate: the synthetic events carry sub-millisecond timestamps
     // on ~every row, so session bounds kept in millis disagree with any
-    // µs-accurate consumer (caught by the TrackerDrive oracle). Local
+    // µs-accurate consumer (caught by the tracker drive's oracle). Local
     // defs: the update closure must not capture the EventStreams object
     // (NotSerializableException on the executor otherwise).
     def usOf(t: Timestamp): Long =
@@ -310,14 +313,19 @@ object EventStreams {
 
   /** Session windows with a 30-minute inactivity gap, per user — the
     * native `session_window` stateful operator (the streaming twin of
-    * Events.sessionize's gaps-and-islands batch form). */
+    * Events.sessionize's gaps-and-islands batch form). The aggregate
+    * mirrors the batch form — first/last event ts, count, exact-decimal
+    * money sum — so the output has the batch key's schema;
+    * `session_window.start/end` (last event + gap) are window
+    * bookkeeping, not the oracle's session_end. */
   def sessions(events: DataFrame, gap: String = "30 minutes",
       watermark: String = "1 hour"): DataFrame =
     events.withWatermark("ts", watermark)
       .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("session_value"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
+      .agg(min(col("ts")).as("session_start"),
+        max(col("ts")).as("session_end"),
+        count(lit(1)).as("n_events"),
+        moneySum(col("value")).as("session_value"))
+      .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), col("session_value"))
 }

@@ -116,13 +116,6 @@ object MinhashStream {
         col("bh"), col("sh"))
   }
 
-  /** Oracle-checked drive (stream_dedup_minhash): stage the banded
-    * docs into FOUR doc_id-range files, stream them one file per
-    * trigger (state must carry buckets across micro-batches), distinct
-    * the per-bucket emissions batch-side, and return the verified
-    * pair set — equal to the batch operator's, so the oracle is the
-    * full exact-Jaccard ≥ 0.8 pair sweep (the same
-    * banding-completeness license as dedup_cluster_minhash). */
   /** Stage the banded arrival files once per (session, dir) — the
     * shingle+band pass and the staged files are immutable, so only
     * the STREAM belongs in the measured path
@@ -140,27 +133,25 @@ object MinhashStream {
       (inDir, rows.schema)
     }
 
+  /** Oracle-checked drive (stream_dedup_minhash): stage the banded
+    * docs into FOUR doc_id-range files, stream them one file per
+    * trigger (state must carry buckets across micro-batches), distinct
+    * the per-bucket emissions batch-side, and return the verified
+    * pair set — equal to the batch operator's, so the oracle is the
+    * full exact-Jaccard ≥ 0.8 pair sweep (the same
+    * banding-completeness license as dedup_cluster_minhash). */
   def dedup(spark: SparkSession, dir: String, threshold: Double = 0.8)
-      : DataFrame =
-    DriveSupport.withWorkspace("graft-mhstream") { ws =>
-      import spark.implicits._
-      val name = DriveSupport.sinkName("mh_dedup")
-      val (inDir, schema) = stagedArrivals(spark, dir)
-
-      DriveSupport.withStreamConfs(spark) {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir)
-        val q = machine(stream.as[BandArrival], threshold)
-          .toDF()
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ws.resolve("ckpt").toString)
-          .outputMode("append").start()
-        DriveSupport.draining(q) {
-          q.processAllAvailable()
-          DriveSupport.pin(spark,
-            spark.table(name).select("d1", "d2", "jaccard").distinct()
-              .orderBy("d1", "d2"))
-        }
-      }
+      : DataFrame = {
+    import spark.implicits._
+    val (inDir, schema) = stagedArrivals(spark, dir)
+    DriveSupport.memoryDrive(spark, "mhstream", "append") { _ =>
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(inDir)
+      machine(stream.as[BandArrival], threshold).toDF()
+    } { sink =>
+      DriveSupport.pin(spark,
+        sink.select("d1", "d2", "jaccard").distinct()
+          .orderBy("d1", "d2"))
     }
+  }
 }

@@ -19,8 +19,8 @@ import graft.core.Tables
   * reproduce the batch output bit-for-bit).
   *
   * State design (transformWithState, the arbitrary-state V2 API —
-  * RocksDB-backed like [[TwsDrive]]): one key per (delivery,
-  * col_idx) holding
+  * RocksDB-backed like [[EventDrives.twsTotals]]): one key per
+  * (delivery, col_idx) holding
   *  - a ValueState (n, nn, n_distinct, updates) — O(1) counters; the
   *    distinct count is maintained INCREMENTALLY on map insertion, so
   *    no emission ever iterates the map;
@@ -134,10 +134,6 @@ object ProfileStream {
       .select(col("delivery"), col("c.*"))
   }
 
-  /** The `stream_profile_drift` key: stream the orders table one
-    * delivery (year) per micro-batch through [[machine]], take each
-    * key's final profile, apply the SAME drift-flag algebra as the
-    * batch key — compared against the identical oracle SQL. */
   /** Stage the reshaped delivery cells once per (session, dir) — the
     * reshape and the staged files are immutable, so only the STREAM
     * belongs in the measured path ([[DriveSupport.stagedOnce]]).
@@ -158,42 +154,35 @@ object ProfileStream {
       (inDir, cells.schema)
     }
 
-  def drift(spark: SparkSession, dir: String): DataFrame =
-    DriveSupport.withWorkspace("graft-profstream") { ws =>
-      val t = Tables.load(spark, dir, "orders")
-      val (inDir, cellSchema) = stagedCells(spark, dir)
-      val numericByName = t.schema.fields.map(f =>
-        f.name -> isNumeric(f.dataType)).toMap
+  /** The `stream_profile_drift` key: stream the orders table's
+    * deliveries (one per year) through [[machine]], take each
+    * key's final profile, apply the SAME drift-flag algebra as the
+    * batch key — compared against the identical oracle SQL. */
+  def drift(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val t = Tables.load(spark, dir, "orders")
+    val (inDir, cellSchema) = stagedCells(spark, dir)
+    val numericByName = t.schema.fields.map(f =>
+      f.name -> isNumeric(f.dataType)).toMap
 
-      // full session parallelism for the state shuffle (the 4-partition
-      // drive pin exists for machines whose EMISSIONS depend on batch
-      // grouping; profile state is key-local and partition-independent)
-      // and all deliveries in one trigger — one state commit, the
-      // TwsDrive precedent. Per-delivery triggering and restart are the
-      // SPEC's business (ProfileStreamSpec drives maxFilesPerTrigger=1
-      // across a kill/resume); the gate key proves the semantics.
-      DriveSupport.withStreamConfs(spark,
+    // full session parallelism for the state shuffle (the 4-partition
+    // drive pin exists for machines whose EMISSIONS depend on batch
+    // grouping; profile state is key-local and partition-independent)
+    // and all deliveries in one trigger — one state commit, the
+    // twsTotals precedent. Per-delivery triggering and restart are the
+    // SPEC's business (ProfileStreamSpec drives maxFilesPerTrigger=1
+    // across a kill/resume); the gate key proves the semantics.
+    DriveSupport.memoryDrive(spark, "profstream", "update",
         partitions = spark.sparkContext.defaultParallelism.toString,
-        provider = Some(
-          "org.apache.spark.sql.execution.streaming." +
-            "state.RocksDBStateStoreProvider")) {
-        import spark.implicits._
-        val stream = spark.readStream.schema(cellSchema)
-          .parquet(inDir)
-          .as[ProfileCell]
-        val name = DriveSupport.sinkName("profile_stream")
-        val q = machine(stream).toDF().writeStream
-          .format("memory").queryName(name)
-          .option("checkpointLocation", ws.resolve("ckpt").toString)
-          .outputMode("update").start()
-        DriveSupport.draining(q) {
-          q.processAllAvailable()
-          DriveSupport.pin(spark,
-            driftFlags(finalProfiles(spark.table(name)), numericByName))
-            .orderBy("delivery", "col_name")
-        }
-      }
+        provider = Some(DriveSupport.RocksDbProvider)) { _ =>
+      machine(spark.readStream.schema(cellSchema).parquet(inDir)
+        .as[ProfileCell]).toDF()
+    } { sink =>
+      DriveSupport.pin(spark,
+        driftFlags(finalProfiles(sink), numericByName))
+        .orderBy("delivery", "col_name")
     }
+  }
 
   /** Last emission per (delivery, col_name) from an update-mode sink. */
   private[graft] def finalProfiles(sink: DataFrame): DataFrame =

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.core.Tables.moneySum
 
 /** Scaling experiment for the STREAMING state machines — the SCALE.md
   * treatment the batch heavies already have: drive each machine at
@@ -58,23 +57,14 @@ object StreamScale {
 
   private val Chunks = 8
 
-  private val RocksProvider = "org.apache.spark.sql.execution." +
-    "streaming.state.RocksDBStateStoreProvider"
-
-  /** SPARK_GRAFT_STATE_PROVIDER=rocksdb runs EVERY machine on the
-    * RocksDB store (the production provider) instead of the default
-    * HDFS-backed one, so the curves can be recorded on both; tws
-    * always uses RocksDB (transformWithState requires it). */
-  private val providerEnv: Option[String] =
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER").map(_.trim).map {
-      case p @ ("rocksdb" | "hdfs") => p
-      case other => sys.error("SPARK_GRAFT_STATE_PROVIDER: expected " +
-        s"'rocksdb' or 'hdfs', got '$other'")
-    }
-
+  /** The provider each machine's JSON line records: tws always runs
+    * on RocksDB (transformWithState requires it); every other machine
+    * runs on the SPARK_GRAFT_STATE_PROVIDER store
+    * ([[DriveSupport.envProviderName]]), the default HDFS-backed one
+    * when unset — so the curves can be recorded on both. */
   private def providerFor(machine: String): String =
     if (machine.startsWith("tws")) "rocksdb"
-    else providerEnv.getOrElse("hdfs")
+    else DriveSupport.envProviderName.getOrElse("hdfs")
 
   /** Wall-clock pacing for the TTL eviction curve: state TTL is
     * processing-time-based, so the tws_ttl machine sleeps this long
@@ -151,17 +141,19 @@ object StreamScale {
       machine: String): Seq[Trigger] =
     DriveSupport.withWorkspace(s"graft-sscale-$machine") { ws =>
       val provider =
-        if (providerFor(machine) == "rocksdb") Some(RocksProvider)
+        if (providerFor(machine) == "rocksdb")
+          Some(DriveSupport.RocksDbProvider)
         else None
+      // tws_ttl's throttled trigger emits ~2 progress entries/second
+      // for the run's full wall; the default 100-entry retention would
+      // silently drop the earliest triggers from both the polling sum
+      // and the recorded curve
+      val retention =
+        if (machine == "tws_ttl")
+          Seq("spark.sql.streaming.numRecentProgressUpdates" -> "1000")
+        else Nil
       DriveSupport.withStreamConfs(spark, "4", provider) {
-        // tws_ttl's throttled trigger emits ~2 progress entries/second
-        // for the run's full wall; the default 100-entry retention
-        // would silently drop the earliest triggers from both the
-        // polling sum and the recorded curve
-        val retKey = "spark.sql.streaming.numRecentProgressUpdates"
-        val prevRet = spark.conf.get(retKey)
-        if (machine == "tws_ttl") spark.conf.set(retKey, "1000")
-        try {
+      DriveSupport.withConfs(spark, retention: _*) {
         // the file source checks path existence when the stream frame
         // is built, so the (initially empty) feed dirs go first
         val eDir = java.nio.file.Files
@@ -200,13 +192,7 @@ object StreamScale {
               .as[EventStreams.UserEvent]).toDF(),
             "append", Seq("events" -> eDir))
           case "session_window" => (
-            stream(eDir, "events").withWatermark("ts", "1 hour")
-              .groupBy(session_window(col("ts"), "30 minutes"),
-                col("user_id"))
-              .agg(min(col("ts")).as("session_start"),
-                max(col("ts")).as("session_end"),
-                count(lit(1)).as("n_events"),
-                moneySum(col("value")).as("session_value")),
+            EventStreams.sessions(stream(eDir, "events")),
             "append", Seq("events" -> eDir))
           case "dedup" => (
             EventStreams.dedup(stream(eDir, "events")),
@@ -297,7 +283,7 @@ object StreamScale {
               p.stateOperators.map(_.memoryUsedBytes).sum)
           }
         }
-        } finally spark.conf.set(retKey, prevRet)
+      }
       }
     }
 

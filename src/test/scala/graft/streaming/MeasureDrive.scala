@@ -27,9 +27,9 @@ object MeasureDrive {
 
     // current form (two sentinel passes)
     time("hh warm") {
-      HeavyHitterDrive.heavy(spark, dir).count() }
+      EventDrives.heavyHitters(spark, dir).count() }
     val base = time("hh current") {
-      HeavyHitterDrive.heavy(spark, dir)
+      EventDrives.heavyHitters(spark, dir)
         .collect().map(_.toString).sorted.toSeq }
 
     // one-sentinel variant, inline: same plan, ONE sentinel append —

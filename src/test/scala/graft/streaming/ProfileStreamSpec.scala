@@ -13,7 +13,7 @@ import graft.SparkSuite
   * exercises every flag and null handling (the fixture corpus carries
   * no nulls), and across a checkpoint restart. RocksDB-only: the
   * transformWithState operator requires the RocksDB provider (the
-  * [[TwsDrive]] constraint). */
+  * [[EventDrives.twsTotals]] constraint). */
 class ProfileStreamSpec extends SparkSuite {
 
   private val rocks = Some("org.apache.spark.sql.execution.streaming." +

@@ -160,7 +160,7 @@ class RestartRecoverySpec extends SparkSuite {
           incarnation(joined, ckpt, buf)(_.processAllAvailable())
           // incarnation #2 from the SAME checkpoint: the post-cut
           // halves + (outer modes) sentinel nudges to flush the held
-          // null-extensions, exactly as IntervalJoinDrive does
+          // null-extensions, exactly as EventDrives.intervalJoin does
           incarnation(joined, ckpt, buf) { q =>
             p.filter(col("ts") > lit(cut)).coalesce(1)
               .write.mode("append").parquet(pDir)
@@ -276,7 +276,7 @@ class RestartRecoverySpec extends SparkSuite {
 
   test("fMGWS session tracker recovers open sessions across a restart") {
     import spark.implicits._
-    // cents staging + /100 on the way out: the TrackerDrive determinism
+    // cents staging + /100 on the way out: the tracker drive's determinism
     // contract (integer-valued doubles add exactly in any order)
     val staged = Tables.load(spark, dir, "events")
       .select(col("user_id"), col("event_type"),

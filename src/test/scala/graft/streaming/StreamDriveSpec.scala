@@ -67,7 +67,7 @@ class StreamDriveSpec extends SparkSuite {
   }
 
   test("session_window drive == batch gaps-and-islands sessions, row for row") {
-    val streamed = SessionDrive.sessions(spark, dir)
+    val streamed = EventDrives.sessions(spark, dir)
     val batch = graft.query.Events.sessionize(spark, dir)
     assert(streamed.count() === batch.count())
     assert(streamed.exceptAll(batch).count() === 0 &&
@@ -79,7 +79,7 @@ class StreamDriveSpec extends SparkSuite {
     // the oracle-key form of RestartRecoverySpec's session test: stop
     // mid-stream at a data-derived cut, restart from the checkpoint,
     // and the union of emissions must still be the batch sessions
-    val streamed = SessionDrive.sessionsRestart(spark, dir)
+    val streamed = EventDrives.sessionsRestart(spark, dir)
     val batch = graft.query.Events.sessionize(spark, dir)
     assert(streamed.count() === batch.count())
     assert(streamed.exceptAll(batch).count() === 0 &&
@@ -113,6 +113,32 @@ class StreamDriveSpec extends SparkSuite {
     }
     assert(!java.nio.file.Files.exists(leaked),
       "workspace must be deleted even when the drive fails")
+    // the same three guarantees through the drive primitive, with the
+    // query running when its serve throws
+    var driveWs: java.nio.file.Path = null
+    val e = intercept[RuntimeException] {
+      DriveSupport.memoryDrive(spark, "test_fail", "append", "7") { ws =>
+        driveWs = ws
+        val in = ws.resolve("in").toString
+        spark.range(3).toDF("id").write.parquet(in)
+        spark.readStream.schema("id LONG").parquet(in)
+      } { sink =>
+        assert(spark.conf.get(spKey) === "7")
+        assert(spark.streams.active.nonEmpty)
+        assert(sink.count() === 3)
+        throw new RuntimeException("boom")
+      }
+    }
+    // a failed assert inside the drive is a RuntimeException too
+    assert(e.getMessage === "boom")
+    assert(spark.conf.get(spKey) === spBefore,
+      "partition pin must be restored when a drive fails")
+    assert(spark.conf.getOption(provKey) === provBefore,
+      "provider conf must be restored when a drive fails")
+    assert(!java.nio.file.Files.exists(driveWs),
+      "drive workspace must be deleted when the drive fails")
+    assert(spark.streams.active.isEmpty,
+      "drive query must be stopped when the drive fails")
   }
 
   test("DriveSupport.pin refuses an oversized result") {
@@ -161,7 +187,7 @@ class StreamDriveSpec extends SparkSuite {
     // three session implementations, one truth: the custom state
     // machine must agree with both the native operator's drive and the
     // batch form (value scaled: tracker outputs exact cents / 100)
-    val tracker = TrackerDrive.sessions(spark, dir)
+    val tracker = EventDrives.tracker(spark, dir)
     val batch = graft.query.Events.sessionize(spark, dir)
     assert(tracker.count() === batch.count())
     assert(tracker.exceptAll(batch).count() === 0 &&
@@ -171,7 +197,7 @@ class StreamDriveSpec extends SparkSuite {
 
   test("windowed top-k drive == batch window row_number, row for row") {
     import org.apache.spark.sql.expressions.Window
-    val streamed = TopKDrive.topk(spark, dir)
+    val streamed = EventDrives.topk(spark, dir)
     val w = Window.partitionBy("window_start")
       .orderBy(col("value").desc, col("event_id").asc)
     val batch = Tables.load(spark, dir, "events")
@@ -189,7 +215,7 @@ class StreamDriveSpec extends SparkSuite {
 
   test("heavy-hitters drive: every per-window exact heavy hitter " +
       "survives the state-store MG sketch") {
-    val streamed = HeavyHitterDrive.heavy(spark, dir)
+    val streamed = EventDrives.heavyHitters(spark, dir)
     // exact side recomputed directly (the oracle's half)
     val exact = Tables.load(spark, dir, "events")
       .select(date_trunc("hour", col("ts")).cast("timestamp_ntz")
@@ -218,7 +244,7 @@ class StreamDriveSpec extends SparkSuite {
   }
 
   test("dedup drive absorbs a full cross-batch re-delivery exactly") {
-    val streamed = DedupDrive.dedup(spark, dir)
+    val streamed = EventDrives.dedup(spark, dir)
     val original = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts"), col("value"))
@@ -229,7 +255,7 @@ class StreamDriveSpec extends SparkSuite {
   }
 
   test("transformWithState drive == batch GROUP BY, row for row") {
-    val streamed = TwsDrive.totals(spark, dir)
+    val streamed = EventDrives.twsTotals(spark, dir)
     val batch = Tables.load(spark, dir, "events")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
@@ -242,7 +268,7 @@ class StreamDriveSpec extends SparkSuite {
 
   for (mode <- Seq("inner", "left", "full"))
     test(s"$mode streaming drive == batch join, row for row") {
-      val streamed = IntervalJoinDrive.run(spark, dir, mode)
+      val streamed = EventDrives.intervalJoin(spark, dir, mode)
       val batch = batchTwin(mode)
       assert(streamed.count() === batch.count(),
         s"$mode row counts diverge")
