@@ -73,9 +73,22 @@ object Bench {
       ("calibration_fixed_work" -> calibration) +
       ("calibration_shuffle_work" -> calibrationShuffle)
     require(benched.size > 1, "SPARK_GRAFT_BENCH_ONLY matched no keys")
-    // untimed warmup pass: compiles every plan's codegen + fills caches
-    benched.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    // a failing key's cause: printed to stderr and kept (the first per
+    // key) for the artifact's `causes` map, so a key that throws is
+    // diagnosable from bench.json alone
+    val causes = scala.collection.mutable.Map[String, String]()
+    def failed(phase: String, name: String, e: Throwable): Unit = {
+      val cause = s"$phase: ${e.getClass.getName}: ${e.getMessage}"
+      System.err.println(s"[bench] $name failed in $cause")
+      if (!causes.contains(name)) causes(name) = cause
+    }
+    // untimed warmup pass: JIT, parquet footer caches and the codegen
+    // cache — which holds 100 generated classes (the static
+    // spark.sql.codegen.cache.maxEntries default), fewer than the
+    // benched plans need, so the timed passes still compile some plans
+    benched.foreach { case (name, fn) =>
+      try fn(spark, sfDir).count()
+      catch { case e: Throwable => failed("warmup", name, e) }
     }
     // three timed passes, MEDIAN per query: single-run numbers on a
     // shared box swing up to 3× on transient load/GC (the r4→r5 "drift"
@@ -88,7 +101,7 @@ object Bench {
       benched.map { case (name, fn) =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch { case e: Throwable => failed("timed", name, e); false }
         name -> (if (ok) Some((System.nanoTime() - t0) / 1e9) else None)
       }.toMap
     val passes = Seq.fill(3)(timedPass())
@@ -113,6 +126,9 @@ object Bench {
     }.mkString("{", ",", "}")
     val errors = results.collect { case (k, None) => s"\"" + k + "\"" }
       .mkString("[", ",", "]")
+    val causesJson = causes.toSeq.sortBy(_._1)
+      .map { case (k, c) => s"\"$k\":${Verify.jsonString(c)}" }
+      .mkString("{", ",", "}")
     val total = results.flatMap(_._2).sum
     // provider metadata: the streaming drive keys' timings depend on the
     // state-store provider (PERF.md r11: RocksDB ×1.13 total vs HDFS).
@@ -122,7 +138,7 @@ object Bench {
     val provider = sys.env.get("SPARK_GRAFT_STATE_PROVIDER")
       .map(_.trim).filter(_.nonEmpty).getOrElse("hdfs")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","provider":"$provider","queries":$qs,"passes":$spread,"errors":$errors,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","provider":"$provider","queries":$qs,"passes":$spread,"errors":$errors,"sf":"$sfDir","causes":$causesJson}"""
     println(json)
     // ALSO write the artifact to a file: the driver captures stdout,
     // which has been observed truncated to a 2,000-char tail (BENCH_r07

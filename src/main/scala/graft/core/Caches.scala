@@ -34,6 +34,18 @@ object Caches {
     }
   }
 
+  /** A per-session keyed memo: each (session, key) value is built once
+    * by `mk`, under the session map's lock, so two threads of one
+    * session never build the same key twice. */
+  final class Keyed[K, V] {
+    private val maps = new PerSession[scala.collection.mutable.Map[K, V]]
+
+    def get(spark: SparkSession, key: K)(mk: => V): V = {
+      val m = maps.get(spark)(scala.collection.mutable.Map.empty[K, V])
+      m.synchronized(m.getOrElseUpdate(key, mk))
+    }
+  }
+
   /** Hex md5 prefix of `s` — the collision-safe, recomputable tag every
     * derived artifact (bucketed tables, IVF index, z-order layout,
     * scaled copies) keys on. */

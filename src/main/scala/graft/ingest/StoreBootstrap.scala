@@ -4,10 +4,10 @@ import org.apache.hadoop.fs.{FileContext, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Single-publish bootstrap for the build-or-load delta indexes — the
-  * ONE shared code path for the two-commit (base overwrite + delta
-  * append) sequence that VocabStore, SubstringIndex, SemanticIndex,
-  * EmbeddingIndex, MinhashIndex, Ivf, Phash, AudioFp and VideoFp all
-  * run the first time a (corpus, params) tag is seen.
+  * publish step of [[PersistedIndex]], which every persisted index
+  * builds through the first time a (corpus, params) tag is seen: one
+  * shared code path for their multi-commit (base overwrite + delta
+  * append) sequences.
   *
   * Why it exists: each [[SnapshotStore]] COMMIT is atomic (tmp
   * manifest + rename-to-fresh-name), but a build is a SEQUENCE of

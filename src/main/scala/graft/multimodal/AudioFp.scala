@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.ingest.PersistedIndex
 
 /** Audio-fingerprint dedup (`dedup_audio`) — the WAV sibling of
   * [[Phash]]: find recordings that are the same SIGNAL under container-
@@ -163,36 +164,15 @@ object AudioFp {
   // own recordings only, and the delta query joins the delivery's
   // chunk buckets against the full store.
 
-  private val indexMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, DataFrame]]
-
-  private val LayoutVersion = "A1"
-  private def indexTag(spark: SparkSession, dir: String): String =
-    graft.core.Caches.md5Tag(s"$dir|$LayoutVersion|" +
-      Tables.fingerprint(spark, dir, "documents"))
+  private val Index = new PersistedIndex[DataFrame]("afp", "A1",
+    "documents", "doc_id", PersistedIndex.Store("hashes", 2))
 
   /** Build-or-load the persisted fingerprint store (base hashes v0,
-    * the delivery's appended O(delta); single-publish across processes
-    * via [[graft.ingest.StoreBootstrap]]). */
-  def ensureIndex(spark: SparkSession, dir: String): DataFrame = {
-    val tag = indexTag(spark, dir)
-    val memo = indexMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, DataFrame])
-    memo.synchronized {
-      memo.getOrElseUpdate(tag, {
-        val root = s"target/graft-afp/$tag"
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark, "hashes" -> 2)) { b =>
-          val store = new graft.ingest.SnapshotStore(s"$b/hashes")
-          val ids = Tables.load(spark, dir, "documents").select("doc_id")
-          val cut = Tables.deltaCutoff(ids, "doc_id")
-          store.overwrite(afpsOf(ids.filter(col("doc_id") < cut)))
-          store.append(afpsOf(ids.filter(col("doc_id") >= cut)))
-        }
-        new graft.ingest.SnapshotStore(s"$root/hashes").read(spark).get
-      })
-    }
-  }
+    * the delivery's appended O(delta); one [[PersistedIndex]]). */
+  def ensureIndex(spark: SparkSession, dir: String): DataFrame =
+    Index.ensure(spark, dir)(
+      _.baseDelivery(_.select("doc_id"))(d => Seq(afpsOf(d))))(
+      _.read("hashes"))
 
   /** Driver key `dedup_audio_delta`: the near-dup recording pairs a
     * delivery introduces — hamming ≤ `maxHamming` pairs with the newer

@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.ingest.PersistedIndex
 
 /** Perceptual-hash IMAGE dedup (`dedup_phash`) — the multimodal and
   * dedup surfaces joined: find images that are the same PICTURE under
@@ -197,37 +198,15 @@ object Phash {
   // serves the audio/video fingerprint siblings verbatim (their
   // signatures are per-item too).
 
-  private val indexMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, DataFrame]]
-
-  private val LayoutVersion = "P1"
-  private def indexTag(spark: SparkSession, dir: String): String =
-    graft.core.Caches.md5Tag(s"$dir|$LayoutVersion|" +
-      Tables.fingerprint(spark, dir, "documents"))
-
+  private val Index = new PersistedIndex[DataFrame]("phash", "P1",
+    "documents", "doc_id", PersistedIndex.Store("hashes", 2))
 
   /** Build-or-load the persisted fingerprint store (base hashes v0,
-    * the delivery's appended O(delta); single-publish across processes
-    * via [[graft.ingest.StoreBootstrap]]). */
-  def ensureIndex(spark: SparkSession, dir: String): DataFrame = {
-    val tag = indexTag(spark, dir)
-    val memo = indexMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, DataFrame])
-    memo.synchronized {
-      memo.getOrElseUpdate(tag, {
-        val root = s"target/graft-phash/$tag"
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark, "hashes" -> 2)) { b =>
-          val store = new graft.ingest.SnapshotStore(s"$b/hashes")
-          val ids = Tables.load(spark, dir, "documents").select("doc_id")
-          val cut = Tables.deltaCutoff(ids, "doc_id")
-          store.overwrite(phashesOf(ids.filter(col("doc_id") < cut)))
-          store.append(phashesOf(ids.filter(col("doc_id") >= cut)))
-        }
-        new graft.ingest.SnapshotStore(s"$root/hashes").read(spark).get
-      })
-    }
-  }
+    * the delivery's appended O(delta); one [[PersistedIndex]]). */
+  def ensureIndex(spark: SparkSession, dir: String): DataFrame =
+    Index.ensure(spark, dir)(
+      _.baseDelivery(_.select("doc_id"))(d => Seq(phashesOf(d))))(
+      _.read("hashes"))
 
   /** Driver key `dedup_phash_delta`: the near-dup image pairs a
     * delivery introduces — hamming ≤ `maxHamming` pairs with the newer

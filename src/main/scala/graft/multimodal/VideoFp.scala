@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.ingest.PersistedIndex
 
 /** Perceptual VIDEO dedup (`dedup_video`) — completes the multimodal
   * dedup triad beside [[Phash]] (image) and [[AudioFp]] (audio): find
@@ -189,36 +190,15 @@ object VideoFp {
   // and the delta query equality-joins the delivery's sequences
   // against the full store.
 
-  private val indexMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, DataFrame]]
-
-  private val LayoutVersion = "V1"
-  private def indexTag(spark: SparkSession, dir: String): String =
-    graft.core.Caches.md5Tag(s"$dir|$LayoutVersion|" +
-      Tables.fingerprint(spark, dir, "documents"))
+  private val Index = new PersistedIndex[DataFrame]("vfp", "V1",
+    "documents", "doc_id", PersistedIndex.Store("seqs", 2))
 
   /** Build-or-load the persisted fingerprint store (base sequences v0,
-    * the delivery's appended O(delta); single-publish across processes
-    * via [[graft.ingest.StoreBootstrap]]). */
-  def ensureIndex(spark: SparkSession, dir: String): DataFrame = {
-    val tag = indexTag(spark, dir)
-    val memo = indexMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, DataFrame])
-    memo.synchronized {
-      memo.getOrElseUpdate(tag, {
-        val root = s"target/graft-vfp/$tag"
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark, "seqs" -> 2)) { b =>
-          val store = new graft.ingest.SnapshotStore(s"$b/seqs")
-          val ids = Tables.load(spark, dir, "documents").select("doc_id")
-          val cut = Tables.deltaCutoff(ids, "doc_id")
-          store.overwrite(vfpsOf(ids.filter(col("doc_id") < cut)))
-          store.append(vfpsOf(ids.filter(col("doc_id") >= cut)))
-        }
-        new graft.ingest.SnapshotStore(s"$root/seqs").read(spark).get
-      })
-    }
-  }
+    * the delivery's appended O(delta); one [[PersistedIndex]]). */
+  def ensureIndex(spark: SparkSession, dir: String): DataFrame =
+    Index.ensure(spark, dir)(
+      _.baseDelivery(_.select("doc_id"))(d => Seq(vfpsOf(d))))(
+      _.read("seqs"))
 
   /** Driver key `dedup_video_delta`: the duplicate-footage pairs a
     * delivery introduces — exact collapsed-sequence matches with the

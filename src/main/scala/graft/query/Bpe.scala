@@ -52,8 +52,8 @@ object Bpe {
     * symbols `<`,`/`,`w`,`>`). */
   val EndOfWord = "</W>"
 
-  private val mergesMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, Seq[(String, String)]]]
+  private val mergesMemo =
+    new graft.core.Caches.Keyed[String, Seq[(String, String)]]
 
   /** The learned merge table for `dir`'s documents corpus, memoized
     * per session: ordered (left, right) pairs, rank = position. The
@@ -65,16 +65,10 @@ object Bpe {
     * (VocabStoreSpec), which is what keeps tokenize_bpe_contract
     * hash-green through the store. */
   def merges(spark: SparkSession, dir: String, numMerges: Int = 200,
-      maxVocab: Int = 10000): Seq[(String, String)] = {
-    val memo = mergesMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, Seq[(String, String)]])
-    memo.synchronized {
-      memo.getOrElseUpdate(s"$dir|$numMerges|$maxVocab", {
-        trainMergesFromVocab(
-          VocabStore.cappedVocab(spark, dir, maxVocab), numMerges)
-      })
-    }
-  }
+      maxVocab: Int = 10000): Seq[(String, String)] =
+    mergesMemo.get(spark, s"$dir|$numMerges|$maxVocab")(
+      trainMergesFromVocab(
+        VocabStore.cappedVocab(spark, dir, maxVocab), numMerges))
 
   /** Train on any frame with a `text` column. The distributed part is
     * the word count; the loop is model-grain driver arithmetic. */

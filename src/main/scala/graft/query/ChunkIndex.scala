@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.ingest.PersistedIndex
 
 /** Incrementally-maintained CHUNK-dedup index — the delta form of
   * [[Sampling.dedupChunks]], extending the delta family (minhash, IVF,
@@ -37,19 +38,15 @@ import graft.core.Tables
   * No base text is read; no Window operators anywhere. */
 object ChunkIndex {
 
-  private val indexMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, DataFrame]]
-
-  private val LayoutVersion = "C1"
-  private def tag(spark: SparkSession, dir: String, win: Int,
-      stride: Int): String =
-    graft.core.Caches.md5Tag(s"$dir|$win|$stride|$LayoutVersion|" +
-      Tables.fingerprint(spark, dir, "documents"))
+  private val Index = new PersistedIndex[DataFrame]("chunks", "C1",
+    "documents", "doc_id", PersistedIndex.Store("chunks", 2))
 
   /** Per-digest corpus-first occurrence of a docs frame — the
-    * [[Sampling.dedupChunks]] canonical stage at digest grain. */
-  private def digestsOf(docs: DataFrame, win: Int, stride: Int)
-      : DataFrame =
+    * [[Sampling.dedupChunks]] canonical stage at digest grain; also
+    * the streamed maintainer's base commit and the spec's store-free
+    * equivalence harness. */
+  private[graft] def digestsOf(docs: DataFrame, win: Int = 64,
+      stride: Int = 32): DataFrame =
     digestsOfChunks(Sampling.chunkOf(docs, win, stride))
 
   /** The digest-grain collapse over an already-chunked frame — shared
@@ -68,35 +65,16 @@ object ChunkIndex {
     * re-minimized per digest (a digest first seen in an older commit
     * wins — min of firsts is the first). */
   private def ensureStore(spark: SparkSession, dir: String, win: Int,
-      stride: Int): DataFrame = {
-    val t = tag(spark, dir, win, stride)
-    val memo = indexMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, DataFrame])
-    memo.synchronized {
-      memo.getOrElseUpdate(t, {
-        val root = s"target/graft-chunks/$t"
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark, "chunks" -> 2)) { b =>
-          val st = new graft.ingest.SnapshotStore(s"$b/chunks")
-          val docs = Tables.load(spark, dir, "documents")
-          val cut = Tables.deltaCutoff(docs, "doc_id")
-          st.overwrite(digestsOf(docs.filter(col("doc_id") < cut),
-            win, stride))
-          st.append(digestsOf(docs.filter(col("doc_id") >= cut),
-            win, stride))
-        }
-        val store = new graft.ingest.SnapshotStore(s"$root/chunks")
-        val vs = store.versions(spark)
-        store.readAt(spark, vs(vs.size - 2)).get
-          .groupBy("chunk_md5")
-          .agg(min(struct(col("canon_doc_id"), col("canon_chunk_idx")))
-            .as("c"))
-          .select(col("chunk_md5"), col("c.canon_doc_id"),
-            col("c.canon_chunk_idx"))
-          .localCheckpoint()
-      })
-    }
-  }
+      stride: Int): DataFrame =
+    Index.ensure(spark, dir, win, stride)(
+      _.baseDelivery()(d => Seq(digestsOf(d, win, stride))))(
+      _.previous("chunks")
+        .groupBy("chunk_md5")
+        .agg(min(struct(col("canon_doc_id"), col("canon_chunk_idx")))
+          .as("c"))
+        .select(col("chunk_md5"), col("c.canon_doc_id"),
+          col("c.canon_chunk_idx"))
+        .localCheckpoint())
 
   /** Driver key `dedup_chunks_delta`: every DELIVERY chunk (doc_id ≥
     * the standard cutoff) that duplicates an earlier chunk in
@@ -137,9 +115,4 @@ object ChunkIndex {
         "canon_chunk_idx")
       .orderBy("doc_id", "chunk_idx")
   }
-
-  /** Frame-level digest table, exposed for the spec's store-free
-    * equivalence harness and the streaming maintainer's bootstrap. */
-  private[graft] def digestsOfFrame(docs: DataFrame, win: Int = 64,
-      stride: Int = 32): DataFrame = digestsOf(docs, win, stride)
 }

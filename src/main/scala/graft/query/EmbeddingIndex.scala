@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.ingest.PersistedIndex
 import graft.functions.cosine_sim
 
 /** Incrementally-maintained hyperplane-LSH bucket index — the delta
@@ -33,41 +34,18 @@ import graft.functions.cosine_sim
   * found against their base original. */
 object EmbeddingIndex {
 
-  private val indexMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, DataFrame]]
-
-  private val LayoutVersion = "A1"
-  private def indexTag(spark: SparkSession, dir: String, nPlanes: Int,
-      nTables: Int, seed: Long): String =
-    graft.core.Caches.md5Tag(
-      s"$dir|$nPlanes|$nTables|$seed|$LayoutVersion|" +
-      Tables.fingerprint(spark, dir, "embeddings"))
+  private val Index = new PersistedIndex[DataFrame]("annlsh", "A1",
+    "embeddings", "vec_id", PersistedIndex.Store("buckets", 2))
 
   /** Build-or-load the incrementally-maintained bucket table over
-    * base ∪ delta (base commit + one O(delta) append; single-publish
-    * across processes via [[graft.ingest.StoreBootstrap]]). */
+    * base ∪ delta (base commit + one O(delta) append; one
+    * [[PersistedIndex]]). */
   def ensureIndex(spark: SparkSession, dir: String, nPlanes: Int = 8,
-      nTables: Int = 8, seed: Long = 7L): DataFrame = {
-    val tag = indexTag(spark, dir, nPlanes, nTables, seed)
-    val memo = indexMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, DataFrame])
-    memo.synchronized {
-      memo.getOrElseUpdate(tag, {
-        val root = s"target/graft-annlsh/$tag"
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark, "buckets" -> 2)) { b =>
-          val store = new graft.ingest.SnapshotStore(s"$b/buckets")
-          val e = Tables.load(spark, dir, "embeddings")
-          val cut = Tables.deltaCutoff(e, "vec_id")
-          store.overwrite(TextSim.annBuckets(
-            e.filter(col("vec_id") < cut), nPlanes, nTables, seed))
-          store.append(TextSim.annBuckets(
-            e.filter(col("vec_id") >= cut), nPlanes, nTables, seed))
-        }
-        new graft.ingest.SnapshotStore(s"$root/buckets").read(spark).get
-      })
-    }
-  }
+      nTables: Int = 8, seed: Long = 7L): DataFrame =
+    Index.ensure(spark, dir, nPlanes, nTables, seed)(
+      _.baseDelivery()(e =>
+        Seq(TextSim.annBuckets(e, nPlanes, nTables, seed))))(
+      _.read("buckets"))
 
   /** Store-free core over any (vec_id, embedding) frame — the
     * contract/spec path (twin-augmented corpora are not a loadable

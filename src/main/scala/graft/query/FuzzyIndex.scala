@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.ingest.PersistedIndex
 
 /** Persisted FastSS deletion-signature index for the fuzzy join — the
   * store [[FuzzyJoin]]'s scaladoc promised and r18 shipped as prose
@@ -23,7 +24,7 @@ import graft.core.Tables
   * — a duplicated signature row cannot change the match, the verify
   * is exact, but it doubles the candidate mass the join pays for).
   * Build is single-publish across processes via
-  * [[graft.ingest.StoreBootstrap]].
+  * [[graft.ingest.PersistedIndex]].
   *
   * Maintenance is EXACT forever (the minhash argument, not the IVF
   * one): a deletion neighborhood is a PER-STRING computation, so the
@@ -37,17 +38,8 @@ import graft.core.Tables
   * pair-for-pair and the replay no-op. */
 object FuzzyIndex {
 
-  private val indexMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, DataFrame]]
-
-  /** Versions the on-disk shape; the tag carries the corpus
-    * fingerprint so a regenerated fixture misses the old index. */
-  private val LayoutVersion = "Z1"
-  private def indexTag(spark: SparkSession, dir: String, k: Int): String =
-    graft.core.Caches.md5Tag(
-      s"fuzzy|$dir|$k|$LayoutVersion|" +
-      Tables.fingerprint(spark, dir, "part"))
-
+  private val Index = new PersistedIndex[DataFrame]("fuzzy", "Z1",
+    "part", "p_partkey", PersistedIndex.Store("sig", 2))
 
   /** The published index root for (dir, k) — exposed so the lifecycle
     * spec can scope its chain-shape assertions to THIS layout's store
@@ -55,34 +47,18 @@ object FuzzyIndex {
     * fixture dir) left under target/graft-fuzzy. */
   private[graft] def indexRoot(spark: SparkSession, dir: String,
       k: Int = 2): String =
-    s"target/graft-fuzzy/${indexTag(spark, dir, k)}"
+    Index.root(spark, dir, k)
 
   /** Build-or-load the maintained signature index over base ∪ delta
     * (base commit + one exactly-once O(delta) append). Disk-persistent
     * across JVMs, memoized within a session. */
   def ensureIndex(spark: SparkSession, dir: String, k: Int = 2)
-      : DataFrame = {
-    val root = indexRoot(spark, dir, k)
-    val memo = indexMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, DataFrame])
-    memo.synchronized {
-      memo.getOrElseUpdate(root, {
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark, "sig" -> 2)) { b =>
-          val store = new graft.ingest.SnapshotStore(s"$b/sig")
-          val parts = Tables.load(spark, dir, "part")
-            .select(col("p_partkey"), col("p_name"))
-          val cut = Tables.deltaCutoff(parts, "p_partkey")
-          store.overwrite(FuzzyJoin.signaturesOf(
-            parts.filter(col("p_partkey") < cut), k))
-          // the delivery: one exactly-once O(delta) append
-          store.appendOnce(FuzzyJoin.signaturesOf(
-            parts.filter(col("p_partkey") >= cut), k), "delivery-1")
-        }
-        new graft.ingest.SnapshotStore(s"$root/sig").read(spark).get
-      })
-    }
-  }
+      : DataFrame =
+    Index.ensure(spark, dir, k)(
+      _.baseDelivery(_.select(col("p_partkey"), col("p_name")),
+        deliveryTag = Some("delivery-1"))(
+        p => Seq(FuzzyJoin.signaturesOf(p, k))))(
+      _.read("sig"))
 
   /** Driver key `join_fuzzy_delta`: the weekly regime — dirty probes
     * derived from the DELIVERY slice only (every 20th delivery part's

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 import graft.core.Tables
+import graft.ingest.PersistedIndex
 import graft.functions.cosine_sim
 
 /** IVF-style approximate nearest neighbor: the classic inverted-file
@@ -116,53 +117,38 @@ object Ivf {
   // so a concurrently-built index is bit-identical and a lost commit
   // race simply reads the winner's copy.
 
-  private val indexMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, (DataFrame, DataFrame)]]
+  /** The three IVF indexes' stores: the centroid model and the
+    * inverted file, committing `cellVersions` versions. `L2` = cells
+    * partitioned by cid + schema sidecar: the inverted file is
+    * PHYSICALLY laid out by cell, one cid ↔ one partition directory, so
+    * a probe touches nprobe dirs' files instead of scanning the corpus
+    * — the on-disk form of the scaladoc's 100 TB story (IvfLayoutSpec
+    * proves file-level pruning; the schema sidecar keeps cid a
+    * LongType on re-read). */
+  private def ivfIndex[V](name: String, cellVersions: Int) =
+    new PersistedIndex[V](name, "L2", "embeddings", "vec_id",
+      PersistedIndex.Store("centroids", 1),
+      PersistedIndex.Store("cells", cellVersions, partition = Some("cid")))
 
-  /** Tag includes the corpus fingerprint ([[Tables.fingerprint]]): a
-    * regenerated fixture at the same path must miss the old index.
-    * `layout` versions the ON-DISK shape (L2 = cells partitioned by
-    * cid + schema sidecar): bumping it orphans pre-layout indexes
-    * instead of misreading them. */
-  private val LayoutVersion = "L2"
-  private def indexTag(spark: SparkSession, dir: String, nlist: Int,
-      iters: Int, seed: Long, variant: String = ""): String =
-    graft.core.Caches.md5Tag(
-      s"$dir|$nlist|$iters|$seed|$LayoutVersion|$variant|" +
-      Tables.fingerprint(spark, dir, "embeddings"))
+  private val FullIndex = ivfIndex[(DataFrame, DataFrame)]("ivf", 1)
+  private val DeltaIndex = ivfIndex[(DataFrame, DataFrame)]("ivf-delta", 2)
+  private val RetrainIndex =
+    ivfIndex[(DataFrame, DataFrame, Boolean)]("ivf-retrain", 1)
+
+  private def readModel(st: PersistedIndex.Stores): (DataFrame, DataFrame) =
+    (st.read("centroids"), st.read("cells"))
 
   /** Build-or-load the IVF index for (dir, params): returns
     * (centroids, cell assignments). Disk-persistent across JVMs,
     * memoized within a session. */
   def ensureIndex(spark: SparkSession, dir: String, nlist: Int = 16,
-      iters: Int = 2, seed: Long = 7L): (DataFrame, DataFrame) = {
-    val tag = indexTag(spark, dir, nlist, iters, seed)
-    val memo = indexMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, (DataFrame, DataFrame)])
-    memo.synchronized {
-      memo.getOrElseUpdate(tag, {
-        val root = s"target/graft-ivf/$tag"
-        // the inverted file is PHYSICALLY laid out by cell: one cid ↔
-        // one partition directory, so a probe touches nprobe dirs'
-        // files instead of scanning the corpus — the on-disk form of
-        // the scaladoc's 100 TB story (IvfLayoutSpec proves file-level
-        // pruning; the schema sidecar keeps cid a LongType on re-read)
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark,
-              "centroids" -> 1, "cells" -> 1)) { b =>
-          val e = Tables.load(spark, dir, "embeddings")
-          val cent = trainCentroids(e, nlist, iters, seed)
-          new graft.ingest.SnapshotStore(s"$b/centroids").overwrite(cent)
-          new graft.ingest.SnapshotStore(s"$b/cells",
-            partition = Some("cid")).overwrite(assign(e, cent))
-        }
-        (new graft.ingest.SnapshotStore(s"$root/centroids")
-            .read(spark).get,
-          new graft.ingest.SnapshotStore(s"$root/cells",
-            partition = Some("cid")).read(spark).get)
-      })
-    }
-  }
+      iters: Int = 2, seed: Long = 7L): (DataFrame, DataFrame) =
+    FullIndex.ensure(spark, dir, nlist, iters, seed) { st =>
+      val e = st.source
+      val cent = trainCentroids(e, nlist, iters, seed)
+      st("centroids").overwrite(cent)
+      st("cells").overwrite(assign(e, cent))
+    }(readModel)
 
   /** ANN top-k for the fixed query set (vec_id < 10), probing the
     * `nprobe` nearest cells per query against the PERSISTED index
@@ -260,41 +246,25 @@ object Ivf {
     * trained on the base slice only (vec_id < cutoff), base cells
     * committed as v0, the delta ASSIGNED (not retrained) and appended
     * as an O(delta) manifest commit. Returns (centroids, merged
-    * cells). Single-publish across processes via
-    * [[graft.ingest.StoreBootstrap]]: the two-commit build stages
-    * under one root and renames into place atomically, so a crashed or
-    * racing builder can never publish a base-only index or a
-    * double-appended delta. */
+    * cells). One [[PersistedIndex]]: the two-commit build stages under
+    * one root and publishes atomically, so a crashed or racing builder
+    * can never publish a base-only index or a double-appended delta. */
   def ensureDeltaIndex(spark: SparkSession, dir: String, nlist: Int = 16,
-      iters: Int = 2, seed: Long = 7L): (DataFrame, DataFrame) = {
-    val tag = indexTag(spark, dir, nlist, iters, seed, variant = "delta")
-    val memo = indexMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, (DataFrame, DataFrame)])
-    memo.synchronized {
-      memo.getOrElseUpdate(tag, {
-        val root = s"target/graft-ivf/$tag"
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark,
-              "centroids" -> 1, "cells" -> 2)) { b =>
-          val centStore = new graft.ingest.SnapshotStore(s"$b/centroids")
-          val cellStore = new graft.ingest.SnapshotStore(
-            s"$b/cells", partition = Some("cid"))
-          val e = Tables.load(spark, dir, "embeddings")
-          val cutoff = Tables.deltaCutoff(e, "vec_id")
-          val cent = trainCentroids(
-            e.filter(col("vec_id") < cutoff), nlist, iters, seed)
-          centStore.overwrite(cent)
-          cellStore.overwrite(
-            assign(e.filter(col("vec_id") < cutoff), cent))
-          cellStore.append(
-            assign(e.filter(col("vec_id") >= cutoff), cent))
-        }
-        (new graft.ingest.SnapshotStore(s"$root/centroids")
-            .read(spark).get,
-          new graft.ingest.SnapshotStore(s"$root/cells",
-            partition = Some("cid")).read(spark).get)
-      })
-    }
+      iters: Int = 2, seed: Long = 7L): (DataFrame, DataFrame) =
+    DeltaIndex.ensure(spark, dir, nlist, iters, seed) { st =>
+      val (base, delta) = st.split(st.source)
+      buildDelta(st, base, delta, nlist, iters, seed)
+    }(readModel)
+
+  /** The frozen delta chain: centroids trained on `base`, base cells
+    * committed, the delta assigned under the frozen model and
+    * appended. */
+  private def buildDelta(st: PersistedIndex.Stores, base: DataFrame,
+      delta: DataFrame, nlist: Int, iters: Int, seed: Long): Unit = {
+    val cent = trainCentroids(base, nlist, iters, seed)
+    st("centroids").overwrite(cent)
+    st("cells").overwrite(assign(base, cent))
+    st("cells").append(assign(delta, cent))
   }
 
   /** ANN top-k over the incrementally-maintained index
@@ -360,9 +330,6 @@ object Ivf {
     (cent, assign(base, cent).unionByName(assign(delta, cent)))
   }
 
-  private val retrainMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, (DataFrame, DataFrame, Boolean)]]
-
   /** Store-backed retrain-on-drift serving state for the standard
     * delivery split: the build evaluates the gauge once and publishes
     * either the frozen two-commit chain (quiet — identical to
@@ -370,47 +337,23 @@ object Ivf {
     * RESET (fired). The chain length IS the durable record of the
     * decision: 2 versions = frozen delta chain, 1 version = retrained
     * reset — so a reloading session recovers `retrained` without
-    * re-running the gauge. Single-publish via
-    * [[graft.ingest.StoreBootstrap]] like every index store. */
+    * re-running the gauge. One [[PersistedIndex]] like every index
+    * store. */
   def ensureRetrainedIndex(spark: SparkSession, dir: String,
       nlist: Int = 16, iters: Int = 2, seed: Long = 7L)
-      : (DataFrame, DataFrame, Boolean) = {
-    val tag = indexTag(spark, dir, nlist, iters, seed, variant = "retrain")
-    val memo = retrainMemo.get(spark)(scala.collection.mutable.Map
-      .empty[String, (DataFrame, DataFrame, Boolean)])
-    memo.synchronized {
-      memo.getOrElseUpdate(tag, {
-        val root = s"target/graft-ivf/$tag"
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark,
-              "centroids" -> 1, "cells" -> 1)) { b =>
-          val centStore = new graft.ingest.SnapshotStore(s"$b/centroids")
-          val cellStore = new graft.ingest.SnapshotStore(
-            s"$b/cells", partition = Some("cid"))
-          val e = Tables.load(spark, dir, "embeddings")
-          val cutoff = Tables.deltaCutoff(e, "vec_id")
-          val base = e.filter(col("vec_id") < cutoff)
-          val delta = e.filter(col("vec_id") >= cutoff)
-          if (driftDecision(base, delta)) {
-            val cent = trainCentroids(e, nlist, iters, seed)
-            centStore.overwrite(cent)
-            cellStore.overwrite(assign(e, cent))
-          } else {
-            val cent = trainCentroids(base, nlist, iters, seed)
-            centStore.overwrite(cent)
-            cellStore.overwrite(assign(base, cent))
-            cellStore.append(assign(delta, cent))
-          }
-        }
-        val cellStore = new graft.ingest.SnapshotStore(
-          s"$root/cells", partition = Some("cid"))
-        (new graft.ingest.SnapshotStore(s"$root/centroids")
-            .read(spark).get,
-          cellStore.read(spark).get,
-          cellStore.versions(spark).size == 1)
-      })
+      : (DataFrame, DataFrame, Boolean) =
+    RetrainIndex.ensure(spark, dir, nlist, iters, seed) { st =>
+      val e = st.source
+      val (base, delta) = st.split(e)
+      if (driftDecision(base, delta)) {
+        val cent = trainCentroids(e, nlist, iters, seed)
+        st("centroids").overwrite(cent)
+        st("cells").overwrite(assign(e, cent))
+      } else buildDelta(st, base, delta, nlist, iters, seed)
+    } { st =>
+      val (cent, cells) = readModel(st)
+      (cent, cells, st("cells").versions(spark).size == 1)
     }
-  }
 
   /** ANN top-k over the retrain-on-drift serving state — identical to
     * [[similarityIvfDelta]] when the gauge is quiet (same model, same

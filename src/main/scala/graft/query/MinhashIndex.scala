@@ -3,6 +3,7 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.ingest.PersistedIndex
 
 /** Incrementally-maintained MinHash-LSH dedup index — the weekly-
   * delivery regime (the reference's own cadence, README.md:19-20)
@@ -43,66 +44,28 @@ import graft.core.Tables
   */
 object MinhashIndex {
 
-  private val indexMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, (DataFrame, DataFrame, DataFrame)]]
-
-
-  /** Versions the on-disk shape; bumping it orphans old indexes
-    * instead of misreading them. Tag includes the corpus fingerprint:
-    * a regenerated fixture at the same path must miss the old index.
-    * M2 added the canonical-md5 posting store (curate_delta stage 1). */
-  private val LayoutVersion = "M2"
-  private def indexTag(spark: SparkSession, dir: String, nHashes: Int,
-      bands: Int): String =
-    graft.core.Caches.md5Tag(
-      s"$dir|$nHashes|$bands|$LayoutVersion|" +
-      Tables.fingerprint(spark, dir, "documents"))
+  /** Layout M2 added the canonical-md5 posting store (curate_delta
+    * stage 1). */
+  private val Index = new PersistedIndex[(DataFrame, DataFrame, DataFrame)](
+    "minhash", "M2", "documents", "doc_id",
+    PersistedIndex.Store("buckets", 2), PersistedIndex.Store("postings", 2),
+    PersistedIndex.Store("canon", 2))
 
   /** Build-or-load the incrementally-maintained index: base docs'
     * buckets+postings+canon committed as v0, the delta's appended as
     * one O(delta) manifest commit each. Returns (buckets, postings,
-    * canon) over base∪delta. Single-publish across processes via
-    * [[graft.ingest.StoreBootstrap]] — the three-store build stages
-    * under one root and renames into place atomically, so a crashed or
-    * racing builder can never publish a base-only index or a
-    * double-appended delta. Disk-persistent across JVMs, memoized
-    * within a session. */
+    * canon) over base∪delta. One [[PersistedIndex]] — the three-store
+    * build stages under one root and publishes atomically, so a
+    * crashed or racing builder can never publish a base-only index or
+    * a double-appended delta. */
   def ensureIndex(spark: SparkSession, dir: String, nHashes: Int = 32,
-      bands: Int = 8): (DataFrame, DataFrame, DataFrame) = {
-    val tag = indexTag(spark, dir, nHashes, bands)
-    val memo = indexMemo.get(spark)(scala.collection.mutable.Map
-      .empty[String, (DataFrame, DataFrame, DataFrame)])
-    memo.synchronized {
-      memo.getOrElseUpdate(tag, {
-        val root = s"target/graft-minhash/$tag"
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark,
-              "buckets" -> 2, "postings" -> 2, "canon" -> 2)) { b =>
-          val bStore = new graft.ingest.SnapshotStore(s"$b/buckets")
-          val pStore = new graft.ingest.SnapshotStore(s"$b/postings")
-          val cStore = new graft.ingest.SnapshotStore(s"$b/canon")
-          val docs = Tables.load(spark, dir, "documents")
-          val cut = Tables.deltaCutoff(docs, "doc_id")
-          val base = docs.filter(col("doc_id") < cut)
-          val delta = docs.filter(col("doc_id") >= cut)
-          def canonOf(d: DataFrame) = d.select(col("doc_id"),
-            TextSim.canonicalMd5(col("text")).as("canon_md5"))
-          val baseSh = TextSim.shingleHashesOf(base)
-          val deltaSh = TextSim.shingleHashesOf(delta)
-          bStore.overwrite(TextSim.bandBucketsOf(baseSh, nHashes, bands))
-          pStore.overwrite(baseSh)
-          cStore.overwrite(canonOf(base))
-          // the delivery: one O(delta) append per store
-          bStore.append(TextSim.bandBucketsOf(deltaSh, nHashes, bands))
-          pStore.append(deltaSh)
-          cStore.append(canonOf(delta))
-        }
-        (new graft.ingest.SnapshotStore(s"$root/buckets").read(spark).get,
-          new graft.ingest.SnapshotStore(s"$root/postings").read(spark).get,
-          new graft.ingest.SnapshotStore(s"$root/canon").read(spark).get)
-      })
-    }
-  }
+      bands: Int = 8): (DataFrame, DataFrame, DataFrame) =
+    Index.ensure(spark, dir, nHashes, bands)(_.baseDelivery() { d =>
+      val sh = TextSim.shingleHashesOf(d)
+      Seq(TextSim.bandBucketsOf(sh, nHashes, bands), sh,
+        d.select(col("doc_id"),
+          TextSim.canonicalMd5(col("text")).as("canon_md5")))
+    })(st => (st.read("buckets"), st.read("postings"), st.read("canon")))
 
   /** The persisted (doc_id, canon_md5) postings — curate_delta's
     * stage-1 store: a delivery's canonical first-wins check becomes a

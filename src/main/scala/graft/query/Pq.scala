@@ -124,28 +124,22 @@ object Pq {
       .select(col("vec_id"), col("sub"), col("m.cid").as("cid"),
         col("m.svec").as("svec"))
 
-  private val memo =
-    new Caches.PerSession[scala.collection.mutable.Map[String, (DataFrame, DataFrame)]]
+  private val memo = new Caches.Keyed[String, (DataFrame, DataFrame)]
 
   /** (codebooks, codes) for a corpus dir — trained once per session
     * per (dir, params); codes = (vec_id, sub, cid), the 10-byte-per-
     * vector surrogate corpus (default m=16 subspaces × 5-bit codes —
     * see [[M]]/[[Ks]]). Both localCheckpointed: the model is
-    * the reusable index (persisting it to disk would follow
-    * [[Ivf.ensureIndex]]'s SnapshotStore layout verbatim; in-session
+    * the reusable index (persisting it to disk would be one more
+    * [[graft.ingest.PersistedIndex]] declaration; in-session
     * memoization is the same contract minus cross-session reuse). */
   def ensureIndex(spark: SparkSession, dir: String, m: Int = M,
       ks: Int = Ks, iters: Int = Iters, seed: Long = Seed)
-      : (DataFrame, DataFrame) = {
-    val tag = Caches.md5Tag(
-      s"pq|$dir|$m|$ks|$iters|$seed|${Tables.fingerprint(spark, dir, "embeddings")}")
-    val cache = memo.get(spark)(scala.collection.mutable.Map.empty)
-    cache.synchronized {
-      cache.getOrElseUpdate(tag,
-        buildIndexOf(Tables.load(spark, dir, "embeddings"), m, ks,
-          iters, seed))
-    }
-  }
+      : (DataFrame, DataFrame) =
+    memo.get(spark, Caches.md5Tag(
+      s"pq|$dir|$m|$ks|$iters|$seed|${Tables.fingerprint(spark, dir, "embeddings")}"))(
+      buildIndexOf(Tables.load(spark, dir, "embeddings"), m, ks, iters,
+        seed))
 
   /** Incrementally-maintained PQ (the weekly-delivery regime of
     * [[Ivf.ensureDeltaIndex]] applied to the codes index): codebooks
@@ -156,32 +150,27 @@ object Pq {
     * codebooks mis-code the delta only as far as its distribution
     * departs from the base; the fixture delta is iid, and
     * `similarity_pq_delta_recall_q` pins the post-delivery serving
-    * floors. Disk persistence would follow [[Ivf.ensureDeltaIndex]]'s
-    * two-commit SnapshotStore recipe verbatim; the in-session memo is
-    * the same contract minus cross-session reuse. */
+    * floors. Disk persistence would be one more
+    * [[graft.ingest.PersistedIndex]] declaration (the
+    * [[Ivf.ensureDeltaIndex]] base + delivery build); the in-session
+    * memo is the same contract minus cross-session reuse. */
   def ensureDeltaIndex(spark: SparkSession, dir: String, m: Int = M,
       ks: Int = Ks, iters: Int = Iters, seed: Long = Seed)
-      : (DataFrame, DataFrame) = {
-    val tag = Caches.md5Tag(
-      s"pqdelta|$dir|$m|$ks|$iters|$seed|${Tables.fingerprint(spark, dir, "embeddings")}")
-    val cache = memo.get(spark)(scala.collection.mutable.Map.empty)
-    cache.synchronized {
-      cache.getOrElseUpdate(tag, {
-        val e = Tables.load(spark, dir, "embeddings")
-        val cutoff =
-          Tables.deltaCutoff(e, "vec_id")
-        val baseSv = subVectors(e.filter(col("vec_id") < cutoff), m)
-          .localCheckpoint()
-        val cb = trainCodebooks(baseSv, m, ks, iters, seed)
-        val deltaSv = subVectors(e.filter(col("vec_id") >= cutoff), m)
-        val codes = assign(baseSv, cb)
-          .unionByName(assign(deltaSv, cb)) // O(delta): one frozen pass
-          .select(col("vec_id"), col("sub"), col("cid"))
-          .localCheckpoint()
-        (cb, codes)
-      })
+      : (DataFrame, DataFrame) =
+    memo.get(spark, Caches.md5Tag(
+      s"pqdelta|$dir|$m|$ks|$iters|$seed|${Tables.fingerprint(spark, dir, "embeddings")}")) {
+      val e = Tables.load(spark, dir, "embeddings")
+      val cutoff = Tables.deltaCutoff(e, "vec_id")
+      val baseSv = subVectors(e.filter(col("vec_id") < cutoff), m)
+        .localCheckpoint()
+      val cb = trainCodebooks(baseSv, m, ks, iters, seed)
+      val deltaSv = subVectors(e.filter(col("vec_id") >= cutoff), m)
+      val codes = assign(baseSv, cb)
+        .unionByName(assign(deltaSv, cb)) // O(delta): one frozen pass
+        .select(col("vec_id"), col("sub"), col("cid"))
+        .localCheckpoint()
+      (cb, codes)
     }
-  }
 
   /** Top-k over the incrementally-maintained codes — the
     * post-delivery serving state ([[TextSim.similarityTopk]]'s

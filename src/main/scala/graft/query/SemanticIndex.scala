@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.ingest.PersistedIndex
 
 /** Incrementally-maintained SemDeDup index — the weekly-delivery
   * regime applied to SEMANTIC dedup, closing the r14 verdict's gap #1:
@@ -45,16 +46,16 @@ import graft.core.Tables
   * store-probe → flag pipeline broke. */
 object SemanticIndex {
 
-  private val indexMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, DataFrame]]
+  /** The cell-partitioned CELLS store and the served FLAGS, each
+    * committing `versions` versions. */
+  private def semanticIndex[V](name: String, versions: Int) =
+    new PersistedIndex[V](name, "D1", "embeddings", "vec_id",
+      PersistedIndex.Store("cells", versions, partition = Some("cid")),
+      PersistedIndex.Store("flags", versions))
 
-
-  private val LayoutVersion = "D1"
-  private def indexTag(spark: SparkSession, dir: String, k: Int,
-      iters: Int, threshold: Double, seed: Long): String =
-    graft.core.Caches.md5Tag(
-      s"$dir|$k|$iters|$threshold|$seed|$LayoutVersion|" +
-      Tables.fingerprint(spark, dir, "embeddings"))
+  private val DeltaIndex = semanticIndex[DataFrame]("semantic", 2)
+  private val RetrainIndex =
+    semanticIndex[(DataFrame, Boolean)]("semantic-retrain", 1)
 
   /** Store-free core over any (vec_id, embedding) frame — the
     * contract/spec path (twin-augmented corpora are not a loadable
@@ -77,51 +78,38 @@ object SemanticIndex {
 
   /** Build-or-load the incrementally-maintained index for (dir,
     * params): returns the served FLAGS frame (vec_id, cluster,
-    * is_dup) over base ∪ delta. Two-commit build per store,
-    * single-publish across processes via
-    * [[graft.ingest.StoreBootstrap]] — both stores stage under one
-    * root and rename into place atomically, so a crashed or racing
-    * builder can never publish base-only flags or a double-appended
-    * delta. */
+    * is_dup) over base ∪ delta. Two-commit build per store, one
+    * [[PersistedIndex]] — both stores stage under one root and
+    * publish atomically, so a crashed or racing builder can never
+    * publish base-only flags or a double-appended delta. */
   def ensureIndex(spark: SparkSession, dir: String, k: Int = 8,
       iters: Int = 3, threshold: Double = 0.35, seed: Long = 7L)
-      : DataFrame = {
-    val tag = indexTag(spark, dir, k, iters, threshold, seed)
-    val memo = indexMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, DataFrame])
-    memo.synchronized {
-      memo.getOrElseUpdate(tag, {
-        val root = s"target/graft-semantic/$tag"
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark,
-              "cells" -> 2, "flags" -> 2)) { b =>
-          val cellStore = new graft.ingest.SnapshotStore(
-            s"$b/cells", partition = Some("cid"))
-          val flagStore = new graft.ingest.SnapshotStore(s"$b/flags")
-          val e = Tables.load(spark, dir, "embeddings")
-          val cut = Tables.deltaCutoff(e, "vec_id")
-          val base = e.filter(col("vec_id") < cut)
-          val cent = Ivf.trainCentroids(base, k, iters, seed)
-          val baseCells = TextSim.assignCells(base, cent)
-            .localCheckpoint() // assign once, feed both commits
-          cellStore.overwrite(baseCells)
-          flagStore.overwrite(
-            TextSim.cellDupFlags(baseCells, baseCells, threshold))
-          // the delivery: frozen-model assignment of the delta only,
-          // flags probed against the PERSISTED cells ∪ the delta —
-          // one O(delta) append per store
-          val deltaCells = TextSim.assignCells(
-            e.filter(col("vec_id") >= cut), cent).localCheckpoint()
-          val earlier = cellStore.read(spark).get
-            .select("vec_id", "embedding", "cid")
-            .unionByName(deltaCells)
-          cellStore.append(deltaCells)
-          flagStore.append(
-            TextSim.cellDupFlags(deltaCells, earlier, threshold))
-        }
-        new graft.ingest.SnapshotStore(s"$root/flags").read(spark).get
-      })
-    }
+      : DataFrame =
+    DeltaIndex.ensure(spark, dir, k, iters, threshold, seed) { st =>
+      val (base, delta) = st.split(st.source)
+      buildDelta(st, base, delta, k, iters, threshold, seed)
+    }(_.read("flags"))
+
+  /** The frozen delta chain: centroids trained on `base`, base cells
+    * and flags committed, then the delivery's frozen-model assignment
+    * with flags probed against the PERSISTED cells ∪ the delta — one
+    * O(delta) append per store. */
+  private def buildDelta(st: PersistedIndex.Stores, base: DataFrame,
+      delta: DataFrame, k: Int, iters: Int, threshold: Double,
+      seed: Long): Unit = {
+    val cent = Ivf.trainCentroids(base, k, iters, seed)
+    val baseCells = TextSim.assignCells(base, cent)
+      .localCheckpoint() // assign once, feed both commits
+    st("cells").overwrite(baseCells)
+    st("flags").overwrite(
+      TextSim.cellDupFlags(baseCells, baseCells, threshold))
+    val deltaCells = TextSim.assignCells(delta, cent).localCheckpoint()
+    val earlier = st.read("cells")
+      .select("vec_id", "embedding", "cid")
+      .unionByName(deltaCells)
+    st("cells").append(deltaCells)
+    st("flags").append(
+      TextSim.cellDupFlags(deltaCells, earlier, threshold))
   }
 
   /** Driver key `dedup_semantic_delta`: the post-delivery serving
@@ -159,66 +147,26 @@ object SemanticIndex {
     else (dedupSemanticDeltaOf(e, k, iters, threshold), false)
   }
 
-  private val retrainMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, (DataFrame, Boolean)]]
-
   /** Store-backed retrain-on-drift serving state: quiet gauge
     * publishes the frozen two-commit chain (content identical to
     * [[ensureIndex]]); fired gauge publishes a retrained single-commit
     * RESET of both stores. Chain length = the durable decision record
-    * (the [[Ivf.ensureRetrainedIndex]] convention); single-publish via
-    * [[graft.ingest.StoreBootstrap]]. */
+    * (the [[Ivf.ensureRetrainedIndex]] convention); one
+    * [[PersistedIndex]]. */
   def ensureRetrainedIndex(spark: SparkSession, dir: String, k: Int = 8,
       iters: Int = 3, threshold: Double = 0.35, seed: Long = 7L)
-      : (DataFrame, Boolean) = {
-    val tag = indexTag(spark, dir, k, iters, threshold, seed) + "-retrain"
-    val memo = retrainMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, (DataFrame, Boolean)])
-    memo.synchronized {
-      memo.getOrElseUpdate(tag, {
-        val root = s"target/graft-semantic/$tag"
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark,
-              "cells" -> 1, "flags" -> 1)) { b =>
-          val cellStore = new graft.ingest.SnapshotStore(
-            s"$b/cells", partition = Some("cid"))
-          val flagStore = new graft.ingest.SnapshotStore(s"$b/flags")
-          val e = Tables.load(spark, dir, "embeddings")
-          val cut = Tables.deltaCutoff(e, "vec_id")
-          val base = e.filter(col("vec_id") < cut)
-          val delta = e.filter(col("vec_id") >= cut)
-          if (Ivf.driftDecision(base, delta)) {
-            // fired: full refit, chain RESET to a single version
-            val cent = Ivf.trainCentroids(e, k, iters, seed)
-            val cells = TextSim.assignCells(e, cent).localCheckpoint()
-            cellStore.overwrite(cells)
-            flagStore.overwrite(
-              TextSim.cellDupFlags(cells, cells, threshold))
-          } else {
-            // quiet: the frozen two-commit delta chain (ensureIndex's
-            // exact build, restated so the staging root is this one's)
-            val cent = Ivf.trainCentroids(base, k, iters, seed)
-            val baseCells = TextSim.assignCells(base, cent)
-              .localCheckpoint()
-            cellStore.overwrite(baseCells)
-            flagStore.overwrite(
-              TextSim.cellDupFlags(baseCells, baseCells, threshold))
-            val deltaCells = TextSim.assignCells(delta, cent)
-              .localCheckpoint()
-            val earlier = cellStore.read(spark).get
-              .select("vec_id", "embedding", "cid")
-              .unionByName(deltaCells)
-            cellStore.append(deltaCells)
-            flagStore.append(
-              TextSim.cellDupFlags(deltaCells, earlier, threshold))
-          }
-        }
-        val flagStore = new graft.ingest.SnapshotStore(s"$root/flags")
-        (flagStore.read(spark).get,
-          flagStore.versions(spark).size == 1)
-      })
-    }
-  }
+      : (DataFrame, Boolean) =
+    RetrainIndex.ensure(spark, dir, k, iters, threshold, seed) { st =>
+      val e = st.source
+      val (base, delta) = st.split(e)
+      if (Ivf.driftDecision(base, delta)) {
+        // fired: full refit, chain RESET to a single version
+        val cent = Ivf.trainCentroids(e, k, iters, seed)
+        val cells = TextSim.assignCells(e, cent).localCheckpoint()
+        st("cells").overwrite(cells)
+        st("flags").overwrite(TextSim.cellDupFlags(cells, cells, threshold))
+      } else buildDelta(st, base, delta, k, iters, threshold, seed)
+    }(st => (st.read("flags"), st("flags").versions(spark).size == 1))
 
   /** Serving query over the retrain-on-drift state — identical to
     * [[dedupSemanticDelta]] when the gauge is quiet, the full-refit

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.ingest.PersistedIndex
 
 /** Incrementally-maintained SUBSTRING-dedup index — the delta form of
   * [[TextSim.dedupSubstringApply]], completing the delta family
@@ -45,14 +46,8 @@ import graft.core.Tables
   * that). */
 object SubstringIndex {
 
-  private val indexMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, DataFrame]]
-
-  private val LayoutVersion = "G1"
-  private def tag(spark: SparkSession, dir: String, gramLen: Int)
-      : String =
-    graft.core.Caches.md5Tag(s"$dir|$gramLen|$LayoutVersion|" +
-      Tables.fingerprint(spark, dir, "documents"))
+  private val Index = new PersistedIndex[DataFrame]("grams", "G1",
+    "documents", "doc_id", PersistedIndex.Store("grams", 2))
 
   /** (doc_id, start, gh) gram occurrences of a docs frame — the
     * [[TextSim.dedupSubstringApplyOf]] gram stage. */
@@ -68,6 +63,12 @@ object SubstringIndex {
            |END""".stripMargin)).as("g"))
       .select(col("doc_id"), col("g.start").as("start"),
         xxhash64(col("g.gram")).as("gh"))
+
+  /** (gh, occ) gram occurrence counts of a docs frame — the store's
+    * content for one commit, batch or streamed. */
+  private[graft] def gramCountsOf(docs: DataFrame, gramLen: Int)
+      : DataFrame =
+    gramsOf(docs, gramLen).groupBy("gh").agg(count(lit(1)).as("occ"))
 
   /** Store-free core over any (doc_id, text) frame: clean the delta
     * slice (doc_id ≥ the standard cutoff) against the base slice's
@@ -139,36 +140,14 @@ object SubstringIndex {
     * delivery's counts appended for FUTURE deliveries) and return the
     * BASE-version gram table the current delivery probes. */
   private def ensureStore(spark: SparkSession, dir: String,
-      gramLen: Int): DataFrame = {
-    val t = tag(spark, dir, gramLen)
-    val memo = indexMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, DataFrame])
-    memo.synchronized {
-      memo.getOrElseUpdate(t, {
-        val root = s"target/graft-grams/$t"
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark, "grams" -> 2)) { b =>
-          val st = new graft.ingest.SnapshotStore(s"$b/grams")
-          val docs = Tables.load(spark, dir, "documents")
-          val cut = Tables.deltaCutoff(docs, "doc_id")
-          def counts(d: DataFrame) = gramsOf(d, gramLen)
-            .groupBy("gh").agg(count(lit(1)).as("occ"))
-          st.overwrite(counts(docs.filter(col("doc_id") < cut)))
-          st.append(counts(docs.filter(col("doc_id") >= cut)))
-        }
-        val store = new graft.ingest.SnapshotStore(s"$root/grams")
-        // the probe side is the PRE-delivery state — the version
-        // BEFORE the live one (== the base commit in this two-commit
-        // build; under a longer append chain it stays the immediately
-        // preceding delivery's state, which is exactly what the next
-        // delivery must probe, and it is always retained: the store's
-        // GC keeps live + previous)
-        val vs = store.versions(spark)
-        store.readAt(spark, vs(vs.size - 2)).get
-          .localCheckpoint()
-      })
-    }
-  }
+      gramLen: Int): DataFrame =
+    Index.ensure(spark, dir, gramLen)(
+      _.baseDelivery()(d => Seq(gramCountsOf(d, gramLen))))(
+      // the probe side is the PRE-delivery state (== the base commit
+      // in this two-commit build; under a longer append chain it stays
+      // the immediately preceding delivery's state, which is exactly
+      // what the next delivery must probe)
+      _.previous("grams").localCheckpoint())
 
   /** The persisted PRE-delivery gram table, exposed for compositions
     * ([[TextQuality.curateScrubDelta]] probes it for the curation

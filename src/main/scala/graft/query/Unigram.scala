@@ -45,29 +45,23 @@ object Unigram {
   final case class Model(pieces: Seq[(String, Long)], floor: Long,
       llHistory: Seq[Double])
 
-  private val modelMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, Model]]
+  private val modelMemo = new graft.core.Caches.Keyed[String, Model]
 
   /** The learned model for `dir`'s documents corpus, memoized per
     * session. */
   def model(spark: SparkSession, dir: String, maxVocab: Int = 10000,
       seedSize: Int = 3000, maxPieceLen: Int = 6, emIters: Int = 4,
-      keepSize: Int = 1500): Model = {
-    val memo = modelMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, Model])
-    memo.synchronized {
-      memo.getOrElseUpdate(
-        s"$dir|$maxVocab|$seedSize|$maxPieceLen|$emIters|$keepSize", {
-          // vocabulary from the persisted O(delta) count store —
-          // bit-identical to the direct corpus scan (VocabStoreSpec),
-          // so the trained model (and tokenize_unigram_contract's
-          // hash) is unchanged by the indirection
-          trainFromVocab(
-            VocabStore.cappedVocab(spark, dir, maxVocab).sortBy(_._1),
-            seedSize, maxPieceLen, emIters, keepSize)
-        })
+      keepSize: Int = 1500): Model =
+    modelMemo.get(spark,
+        s"$dir|$maxVocab|$seedSize|$maxPieceLen|$emIters|$keepSize") {
+      // vocabulary from the persisted O(delta) count store —
+      // bit-identical to the direct corpus scan (VocabStoreSpec), so
+      // the trained model (and tokenize_unigram_contract's hash) is
+      // unchanged by the indirection
+      trainFromVocab(
+        VocabStore.cappedVocab(spark, dir, maxVocab).sortBy(_._1),
+        seedSize, maxPieceLen, emIters, keepSize)
     }
-  }
 
   private def logsumexp(a: Double, b: Double): Double =
     if (a == Double.NegativeInfinity) b

@@ -3,7 +3,7 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.ingest.PersistedIndex
 
 /** Incrementally-maintained tokenizer VOCABULARY store — the r14
   * verdict's gap #2: BPE and unigram-LM training both start from the
@@ -33,50 +33,27 @@ import graft.core.Tables
   * and therefore the trained model — is bit-identical either way. */
 object VocabStore {
 
-  private val storeMemo = new graft.core.Caches.PerSession[
-    scala.collection.mutable.Map[String, DataFrame]]
-
-  private val LayoutVersion = "V1"
-  private def storeTag(spark: SparkSession, dir: String): String =
-    graft.core.Caches.md5Tag(s"$dir|$LayoutVersion|" +
-      Tables.fingerprint(spark, dir, "documents"))
+  private val Index = new PersistedIndex[DataFrame]("vocab", "V1",
+    "documents", "doc_id", PersistedIndex.Store("counts", 2))
 
   /** (w, n) word counts of any docs frame — one explode + one hash
     * aggregation, the single corpus-sized pass of tokenizer training. */
-  private[query] def countsOf(docs: DataFrame): DataFrame =
+  private[graft] def countsOf(docs: DataFrame): DataFrame =
     docs.select(explode(TextSim.tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
 
   /** Build-or-load the persisted per-delivery count store and return
     * the MERGED (w, n) frame. Base/delta split is the standard
     * newest-20% delivery model ([[graft.core.Tables.deltaCutoff]]);
-    * single-publish across processes via
-    * [[graft.ingest.StoreBootstrap]] (stage-then-rename — a crashed or
-    * racing builder can never publish a half-built or double-appended
-    * chain). */
-  def mergedCounts(spark: SparkSession, dir: String): DataFrame = {
-    val tag = storeTag(spark, dir)
-    val memo = storeMemo.get(spark)(
-      scala.collection.mutable.Map.empty[String, DataFrame])
-    memo.synchronized {
-      memo.getOrElseUpdate(tag, {
-        val root = s"target/graft-vocab/$tag"
-        new graft.ingest.StoreBootstrap(root).ensure(spark)(
-            graft.ingest.StoreBootstrap.chains(spark, "counts" -> 2)) { b =>
-          val store = new graft.ingest.SnapshotStore(s"$b/counts")
-          val docs = Tables.load(spark, dir, "documents")
-          val cut = Tables.deltaCutoff(docs, "doc_id")
-          store.overwrite(countsOf(docs.filter(col("doc_id") < cut)))
-          // the delivery: count ONLY the delta's text
-          store.append(countsOf(docs.filter(col("doc_id") >= cut)))
-        }
-        new graft.ingest.SnapshotStore(s"$root/counts").read(spark).get
-          .groupBy("w").agg(sum(col("n")).as("n"))
-          .localCheckpoint() // merge once per session, reuse across
-                             // trainer calls and parameterizations
-      })
-    }
-  }
+    * the delivery counts ONLY the delta's text. One
+    * [[PersistedIndex]]: a crashed or racing builder can never publish
+    * a half-built or double-appended chain. */
+  def mergedCounts(spark: SparkSession, dir: String): DataFrame =
+    Index.ensure(spark, dir)(_.baseDelivery()(d => Seq(countsOf(d))))(
+      _.read("counts")
+        .groupBy("w").agg(sum(col("n")).as("n"))
+        .localCheckpoint()) // merge once per session, reuse across
+                            // trainer calls and parameterizations
 
   /** The capped trainer vocabulary from the persisted store — the
     * exact rows the direct `orderBy(n desc, w asc).limit(maxVocab)`

@@ -10,7 +10,7 @@ import graft.core.Tables
 import graft.ingest.SnapshotStore
 import graft.multimodal.{AudioFp, Phash, VideoFp}
 import graft.query.{ChunkIndex, EmbeddingIndex, FuzzyJoin, Sampling,
-  SubstringIndex, TextQuality, TextSim}
+  SubstringIndex, TextQuality, TextSim, VocabStore}
 
 /** STREAMING maintenance of the persisted delivery stores: incremental
   * similarity indexes (minhash buckets + postings, chunk digests,
@@ -217,7 +217,7 @@ object DeliveryStore {
   def chunk(win: Int = 64, stride: Int = 32): Family =
     Family("chkm", Seq(win, stride), "documents", "doc_id", Nil,
       Seq("digests", "occurrences"),
-      base = b => Seq("digests" -> ChunkIndex.digestsOfFrame(b, win, stride)),
+      base = b => Seq("digests" -> ChunkIndex.digestsOf(b, win, stride)),
       delivery = unlessEmpty { b =>
         val ch = Sampling.chunkOf(b, win, stride)
           .select("doc_id", "chunk_idx", "chunk_md5").localCheckpoint()
@@ -253,13 +253,10 @@ object DeliveryStore {
     * per-token sum over the chain, map-side combined before each write,
     * so the store stays at VOCAB grain); serves the retrain-gauge panel
     * of [[TextQuality.vocabDriftCheck]] (`stream_vocab_delta`). */
-  def vocab(topV: Int = 32): Family = {
-    val counts: DataFrame => DataFrame = docs =>
-      docs.select(explode(TextSim.tokens(col("text"))).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("n"))
+  def vocab(topV: Int = 32): Family =
     Family("vocm", Nil, "documents", "doc_id", Nil, Seq("base", "delta"),
-      base = b => Seq("base" -> counts(b)),
-      delivery = unlessEmpty(b => Seq("delta" -> counts(b))),
+      base = b => Seq("base" -> VocabStore.countsOf(b)),
+      delivery = unlessEmpty(b => Seq("delta" -> VocabStore.countsOf(b))),
       serve = run => {
         val base = run.read("base").get
           .select(col("w"), col("n").as("n_base"))
@@ -274,7 +271,6 @@ object DeliveryStore {
             coalesce(col("n_delta"), lit(0L)).as("n_delta"))
         TextQuality.vocabDriftFromCounts(merged, topV)
       })
-  }
 
   /** Below this many delivery rows the phash codec stage stays
     * single-task: r20 measured the fanOut round-robin exchange costing
@@ -377,9 +373,7 @@ object DeliveryStore {
     * base table (`stream_substring_delta`); a replayed count would flip
     * the next delivery's primary-occurrence rule, a silent over-cut. */
   def substring(gramLen: Int = 5): Family = {
-    val counts: DataFrame => DataFrame = b =>
-      SubstringIndex.gramsOf(b, gramLen)
-        .groupBy("gh").agg(count(lit(1)).as("occ"))
+    val counts = SubstringIndex.gramCountsOf(_: DataFrame, gramLen)
     Family("ssm", Seq(gramLen), "documents", "doc_id", Seq("doc_id", "text"),
       Seq("base", "grams"),
       base = b => Seq("base" -> counts(b)),

@@ -38,7 +38,7 @@ class ChunkIndexSpec extends SparkSuite {
       cut: Long) =
     ChunkIndex.dupsAgainst(
       Sampling.chunkOf(docs.filter(col("doc_id") >= cut)),
-      ChunkIndex.digestsOfFrame(docs.filter(col("doc_id") < cut)))
+      ChunkIndex.digestsOf(docs.filter(col("doc_id") < cut)))
 
   test("planted corpus: every rule branch matches the batch form") {
     val passage = (1 to 64).map(i => s"p$i").mkString(" ")
