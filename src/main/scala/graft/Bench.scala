@@ -30,18 +30,13 @@ object Bench {
       SparkEntry.contractKeys(k)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Sessions.sfDir("sf0.1")
+    val spark = Sessions.local(Sessions.cpus)
     // SPARK_GRAFT_BENCH_ONLY=k1,k2 narrows the run to named keys — for
     // re-measuring a flagged key or iterating locally; the full set
-    // (and the tracked artifact) remains the default
+    // (and the tracked artifact) remains the default. A narrowed run
+    // should also set SPARK_GRAFT_BENCH_OUT (e.g. target/bench-only.json)
+    // so it does not overwrite the tracked bench.json.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     // calibration_fixed_work: a CONSTANT-WORK, data-independent pure-
@@ -134,9 +129,9 @@ object Bench {
     // state-store provider (PERF.md r11: RocksDB ×1.13 total vs HDFS).
     // Recording it makes a provider switch VISIBLE to the bench gate
     // (bench_compare.py warns on mismatch) instead of silently moving
-    // the bar. Mirrors DriveSupport's env switch; default = hdfs.
-    val provider = sys.env.get("SPARK_GRAFT_STATE_PROVIDER")
-      .map(_.trim).filter(_.nonEmpty).getOrElse("hdfs")
+    // the bar. DriveSupport's own env switch; default = hdfs.
+    val provider = graft.streaming.DriveSupport.envProviderName
+      .getOrElse("hdfs")
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","provider":"$provider","queries":$qs,"passes":$spread,"errors":$errors,"sf":"$sfDir","causes":$causesJson}"""
     println(json)

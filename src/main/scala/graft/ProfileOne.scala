@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.concurrent.TrieMap
 
@@ -28,7 +27,7 @@ import scala.collection.concurrent.TrieMap
   * instead of printing a partial profile.
   *
   * Usage: runMain graft.ProfileOne <key> [<key> ...]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4).
   */
 object ProfileOne {
   private final case class StageRec(name: String, submitted: Long,
@@ -39,15 +38,8 @@ object ProfileOne {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileOne <key> [<key> ...]")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Sessions.sfDir("sf0.1")
+    val spark = Sessions.local(Sessions.cpus)
 
     val taskMs = new TrieMap[Int, Long] // stageId -> summed task run time
     val stages = new TrieMap[Int, StageRec]

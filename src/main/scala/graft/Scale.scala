@@ -22,24 +22,17 @@ import graft.core.Tables.dec2
   */
 object Scale {
 
+  private val Replicated = Seq("lineitem", "orders", "documents",
+    "embeddings")
+
+  // tagged over EVERY replicated source: a regenerated
+  // documents.parquet must invalidate the cache even when lineitem's
+  // name/len/mtime are unchanged
   private def ensureScaled(spark: SparkSession, sfDir: String, factor: Int)
-      : String = {
-    // tag over EVERY replicated source: a driver-regenerated
-    // documents.parquet must invalidate the cache even when lineitem's
-    // name/len/mtime are unchanged
-    val tag = graft.core.Caches.md5Tag(
-      Seq("lineitem", "orders", "documents", "embeddings")
-        .map(t => Tables.fingerprint(spark, sfDir, t))
-        .mkString(s"$sfDir|", "|", ""))
-    val path = s"target/graft-scale/$tag/f$factor"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // check ALL markers: a crash between writes must trigger a
-    // rebuild, not serve a torn dataset forever
-    val complete = Seq("lineitem", "orders", "documents", "embeddings")
-      .forall(t =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$path/$t/_SUCCESS")))
-    if (!complete) {
+      : String =
+    Tables.ensureDerived(spark, "scale",
+        sfDir +: Replicated.map(Tables.fingerprint(spark, sfDir, _)),
+        sub = s"/f$factor", parts = Replicated) { path =>
       val li = Tables.load(spark, sfDir, "lineitem")
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
           "l_quantity", "l_extendedprice", "l_discount", "l_returnflag",
@@ -77,8 +70,6 @@ object Scale {
         .reduce(_.unionByName(_))
         .write.mode("overwrite").parquet(s"$path/embeddings")
     }
-    path
-  }
 
   private def ops(spark: SparkSession, path: String)
       : Seq[(String, () => Long)] = {
@@ -170,26 +161,9 @@ object Scale {
     graft.query.TextSim.canonicalSurvivors(docs)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // override for quick iteration on one factor, e.g. SPARK_GRAFT_FACTORS=1
-    val factors = sys.env.get("SPARK_GRAFT_FACTORS")
-      .map(_.split(",").toSeq.map { tok =>
-        try tok.trim.toInt catch {
-          case _: NumberFormatException => sys.error(
-            s"SPARK_GRAFT_FACTORS: expected comma-separated ints, got '$tok'")
-        }
-      })
-      .getOrElse(Seq(1, 4, 16, 64))
-    factors.foreach { f =>
+    val sfDir = Sessions.sfDir("sf0.1")
+    val spark = Sessions.local(Sessions.cpus)
+    Sessions.factors.foreach { f =>
       val path = ensureScaled(spark, sfDir, f)
       val results = ops(spark, path).map { case (name, run) =>
         run() // warmup: codegen + footer caches

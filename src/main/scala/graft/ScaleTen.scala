@@ -33,10 +33,12 @@ import graft.core.Tables
   * functions, no UDFs, no driver-side row loops (the only collects are
   * the ~31-word vocabulary and the 5-row language mix).
   *
-  * Output: prints the decade dir (feed it to [[BenchOne]] via
-  * SPARK_GRAFT_SF_DIR) and one JSON audit line per corpus with the
-  * SCALE.md candidate-audit columns — raw shared-shingle pairs, pairs
-  * at the ≥3 floor, pairs after the canonical pre-pass — plus the same
+  * Output: prints the decade dir (feed it to a narrowed [[Bench]] via
+  * SPARK_GRAFT_SF_DIR: `SPARK_GRAFT_BENCH_ONLY=… SPARK_GRAFT_BENCH_OUT=
+  * target/bench-only.json runMain graft.Bench`) and one JSON audit line
+  * per corpus with the SCALE.md candidate-audit columns — raw
+  * shared-shingle pairs, pairs at the ≥3 floor, pairs after the
+  * canonical pre-pass — plus the same
   * counts under a 10× tighter DF cap (maxShingleDf=100), the knob that
   * bounds candidate growth when a fixed-vocabulary corpus outgrows the
   * default cap.
@@ -240,17 +242,11 @@ object ScaleTen {
     * matches the driver fixture (`<dir>/<table>.parquet`) — the FULL
     * table set, so every `SparkEntry.queries` entry (relational keys
     * included) runs against it unchanged. */
-  def ensure(spark: SparkSession, sfDir: String): String = {
-    val tag = graft.core.Caches.md5Tag(
-      DecadeTables
-        .map(t => Tables.fingerprint(spark, sfDir, t))
-        .mkString(s"$sfDir|x$Factor|v$GenVersion|", "|", ""))
-    val path = s"target/graft-scale10/$tag"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val complete = DecadeTables.forall(t =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$t.parquet/_SUCCESS")))
-    if (!complete) {
+  def ensure(spark: SparkSession, sfDir: String): String =
+    Tables.ensureDerived(spark, "scale10",
+        Seq(sfDir, s"x$Factor", s"v$GenVersion") ++
+          DecadeTables.map(Tables.fingerprint(spark, sfDir, _)),
+        parts = DecadeTables.map(t => s"$t.parquet")) { path =>
       def write(df: DataFrame, t: String): Unit =
         df.write.mode("overwrite").parquet(s"$path/$t.parquet")
       val baseDocs = Tables.load(spark, sfDir, "documents")
@@ -285,8 +281,6 @@ object ScaleTen {
       write(Tables.load(spark, sfDir, "nation"), "nation")
       write(Tables.load(spark, sfDir, "region"), "region")
     }
-    path
-  }
 
   private def audit(spark: SparkSession, label: String, dir: String): Unit = {
     import graft.query.TextSim
@@ -320,16 +314,8 @@ object ScaleTen {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Sessions.sfDir("sf0.1")
+    val spark = Sessions.local(Sessions.cpus)
     val path = ensure(spark, sfDir)
     println(s"""{"decade_dir":"$path"}""")
     audit(spark, "base", sfDir)

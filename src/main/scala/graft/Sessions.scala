@@ -1,0 +1,59 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one local-session launcher: every graft main, the shared test
+  * session and the forked test JVMs build their session here, so the
+  * session decision is made in one place:
+  *   - `local[n]` with `spark.sql.shuffle.partitions = n` (one
+  *     post-shuffle partition per core),
+  *   - UTC session time zone (the oracle compares timestamps in UTC),
+  *   - no UI, log level WARN.
+  *
+  * Also the one reader of the mains' environment knobs
+  * (`SPARK_GRAFT_CPUS`, `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_FACTORS`);
+  * each parser is a pure function of the raw value so a spec can cover
+  * it without touching the environment. */
+object Sessions {
+
+  /** `local[cores]` session with the graft defaults plus `confs` (a
+    * forked child's app name and warehouse dir, say). `getOrCreate`:
+    * an already running session in this JVM is returned as is. */
+  def local(cores: Int, confs: (String, String)*): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = confs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** `SPARK_GRAFT_CPUS`: the mains' core count, default 4. */
+  lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** Where the fixture dirs live (TESTDATA.md). */
+  val Fixtures = "/root/testdata"
+
+  /** `SPARK_GRAFT_SF_DIR`, else the main's own default fixture dir,
+    * `<Fixtures>/<scale>` (scale like `sf0.1`). */
+  def sfDir(scale: String): String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", s"$Fixtures/$scale")
+
+  /** `SPARK_GRAFT_FACTORS`: the scaling mains' factor list, default
+    * 1,4,16,64 (e.g. `SPARK_GRAFT_FACTORS=1` to iterate on one). */
+  lazy val factors: Seq[Int] = parseFactors(sys.env.get("SPARK_GRAFT_FACTORS"))
+
+  private[graft] def parseCpus(raw: Option[String]): Int = raw.fold(4) { s =>
+    s.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
+      s"SPARK_GRAFT_CPUS: expected a positive integer, got '$s'"))
+  }
+
+  private[graft] def parseFactors(raw: Option[String]): Seq[Int] =
+    raw.fold(Seq(1, 4, 16, 64))(_.split(",").toSeq.map { tok =>
+      tok.trim.toIntOption.getOrElse(sys.error(
+        s"SPARK_GRAFT_FACTORS: expected comma-separated ints, got '$tok'"))
+    })
+}

@@ -27,33 +27,32 @@ object SparkEntry {
     * against driver testdata. Driver smoke-checks rows > 0. */
   def entry(spark: SparkSession): DataFrame = {
     import graft.ingest.Upload
-    import graft.streaming.IngestStream
-    val ws = java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get("/root/repo/target/graft-entry/" +
-        java.util.UUID.randomUUID()))
-    val landing = ws.resolve("landing").toString
-    Upload.landString(landing, "week1.json",
-      """[{"code":"0001","product_name":"Oat Milk","brands":"Acme"},
-        |{"code":"0002","product_name":"Rye Bread","_id":"drop-me"},
-        |{"product_name":"no code -> counted failed"},
-        |{"code":"0003","product_name":"Green Tea","quantity":"500 g"}]"""
-        .stripMargin, clock = () => 1L)
-    Upload.landString(landing, "week2.json",
-      """[{"code":"0001","product_name":"Oat Milk Deluxe"},
-        |{"code":"0004","product_name":"Dark Chocolate"}]""".stripMargin,
-      clock = () => 2L)
-    val cfg = IngestStream.Config(
-      landingDir = landing,
-      warehouseDir = ws.resolve("wh").toString,
-      checkpointDir = ws.resolve("ckpt").toString)
-    IngestStream.runAvailable(spark, cfg)
-    val products = IngestStream.productsStore(cfg).read(spark).get
-    val hits = Finders.searchPartial(products, "product_name", "oat",
-      "code")
-    // join against driver testdata so the smoke also proves table access
-    val part = graft.core.Tables.load(spark, "/root/testdata/sf0.001",
-      "part").limit(1)
-    hits.crossJoin(part.select(col("p_partkey")))
+    import graft.streaming.{DriveSupport, IngestStream}
+    DriveSupport.withWorkspace("graft-entry") { ws =>
+      val landing = ws.resolve("landing").toString
+      Upload.landString(landing, "week1.json",
+        """[{"code":"0001","product_name":"Oat Milk","brands":"Acme"},
+          |{"code":"0002","product_name":"Rye Bread","_id":"drop-me"},
+          |{"product_name":"no code -> counted failed"},
+          |{"code":"0003","product_name":"Green Tea","quantity":"500 g"}]"""
+          .stripMargin, clock = () => 1L)
+      Upload.landString(landing, "week2.json",
+        """[{"code":"0001","product_name":"Oat Milk Deluxe"},
+          |{"code":"0004","product_name":"Dark Chocolate"}]""".stripMargin,
+        clock = () => 2L)
+      val cfg = IngestStream.Config(
+        landingDir = landing,
+        warehouseDir = ws.resolve("wh").toString,
+        checkpointDir = ws.resolve("ckpt").toString)
+      IngestStream.runAvailable(spark, cfg)
+      val products = IngestStream.productsStore(cfg).read(spark).get
+      val hits = Finders.searchPartial(products, "product_name", "oat",
+        "code")
+      // join against the fixture tables so the smoke also proves table access
+      val part = graft.core.Tables.load(spark,
+        s"${Sessions.Fixtures}/sf0.001", "part").limit(1)
+      DriveSupport.pin(spark, hits.crossJoin(part.select(col("p_partkey"))))
+    }
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

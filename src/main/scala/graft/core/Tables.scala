@@ -103,6 +103,28 @@ object Tables {
       s"${s.getModificationTime}").sorted.mkString(",")
   }
 
+  /** Build-or-reuse a parquet set derived from fixture tables; returns
+    * its root, `target/graft-<name>/<tag><sub>` (relative to the working
+    * directory, so a clone elsewhere works). The tag is the md5 of `key`
+    * joined by `|`: callers put in it the source dir, the
+    * [[fingerprint]] of every table the set derives from and any
+    * generator parameters, so a regenerated source or a changed
+    * generator lands in a new root. `build(root)` runs unless every
+    * `parts` entry under the root ("" = the root itself) already has
+    * its `_SUCCESS` marker — a crash between writes rebuilds instead of
+    * serving a torn set. */
+  def ensureDerived(spark: SparkSession, name: String, key: Seq[String],
+      sub: String = "", parts: Seq[String] = Seq(""))(
+      build: String => Unit): String = {
+    val root = s"target/graft-$name/${Caches.md5Tag(key.mkString("|"))}$sub"
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val complete = parts.forall(p => fs.exists(new org.apache.hadoop.fs.Path(
+      if (p.isEmpty) s"$root/_SUCCESS" else s"$root/$p/_SUCCESS")))
+    if (!complete) build(root)
+    root
+  }
+
   /** Register all tables as temp views (for spark.sql-based operators). */
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))

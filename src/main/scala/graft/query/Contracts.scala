@@ -155,7 +155,8 @@ object Contracts {
     * the LSH key: every query individually retrieves at least the
     * measured floor of the brute-force top-5 at the documented
     * high-recall probe budget. The floors are the MEASURED fixture
-    * minima per scale regime (MeasureContracts r11): 4/5 at the
+    * minima per scale regime (round 11; the one-off measurement main
+    * was retired after commit 42bc2f6): 4/5 at the
     * driver's verify SF and above (sf0.01, sf0.1), 3/5 on the tiny
     * sf0.001 fixture (500 uniform-random rows — the worst case's worst
     * SF, where top-5 distinctions are noise-scale). Corpus-size

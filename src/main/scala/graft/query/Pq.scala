@@ -49,10 +49,14 @@ object Pq {
     * 4 dims, 32 codes each (16 × 5 bits = 10 bytes/vector, ~25× the
     * float rate). Tuned on the UNIFORM-RANDOM fixture — PQ's worst
     * case, no cluster structure for the codebooks to exploit — where
-    * the measured per-query recall floor is 4/5 at every driver SF
-    * (PqSweep protocol, this round): coarser geometries (8×8-dim
-    * subspaces, 16 codes) drop to 1/5 at the 2000-row SF. On clustered
-    * real corpora smaller geometries suffice; these defaults are the
+    * the measured per-query recall floor is 4/5 at sf0.001-sf0.1.
+    * Round-14 sweep (a one-off main, retired after commit 42bc2f6),
+    * min hits/5 vs brute-force top-5 over the 10 standard queries at
+    * sf0.001 / sf0.01 / sf0.1: m=16, ks=32, rerank 128 → 5 / 4 / 5;
+    * m=8, ks=16, rerank 128 → 4 / 5 / 1; m=8, ks=32, rerank 128 → 3 at
+    * sf0.1; m=8, ks=16, rerank 32 → 1 at sf0.01. Coarser geometries
+    * (8×8-dim subspaces, 16 codes) drop to 1/5 at the 2000-row SF. On
+    * clustered real corpora smaller geometries suffice; these defaults are the
     * honest no-structure operating point, the same calibration stance
     * as [[Ivf.HighRecallNprobe]]. */
   val M = 16

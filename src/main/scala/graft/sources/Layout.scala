@@ -47,31 +47,16 @@ object Layout {
       .write.mode("overwrite").parquet(outPath)
 
   // one layout per (session, dir), fingerprint-keyed like the IVF index
-  private val prepared =
-    new graft.core.Caches.PerSession[scala.collection.mutable.Set[String]]
-
-  private def tag(spark: SparkSession, dir: String): String =
-    graft.core.Caches.md5Tag(
-      s"$dir|${Tables.fingerprint(spark, dir, "lineitem")}")
+  private val prepared = new graft.core.Caches.Keyed[Seq[String], String]
 
   /** Build-or-reuse the z-ordered lineitem copy; returns its path. */
   def ensureZordered(spark: SparkSession, dir: String): String = {
-    val t = tag(spark, dir)
-    val path = s"target/graft-zorder/$t"
-    val memo = prepared.get(spark)(
-      scala.collection.mutable.Set.empty[String])
-    memo.synchronized {
-      if (!memo.contains(t)) {
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val done = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-        if (!fs.exists(done))
-          zorderWrite(Tables.load(spark, dir, "lineitem"),
-            "l_partkey", "l_suppkey", path)
-        memo += t
-      }
-    }
-    path
+    val key = Seq(dir, Tables.fingerprint(spark, dir, "lineitem"))
+    prepared.get(spark, key)(
+      Tables.ensureDerived(spark, "zorder", key) { path =>
+        zorderWrite(Tables.load(spark, dir, "lineitem"),
+          "l_partkey", "l_suppkey", path)
+      })
   }
 
   /** Selective two-dimensional box scan over the z-ordered layout —

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-import java.util.Comparator
+import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -49,10 +48,8 @@ object IngestE2E {
     * retained versions — the audit the bounded retention window exists
     * for: week 2 must read as exactly {0001 changed, 0004 added, rest
     * unchanged}. */
-  def run(spark: SparkSession): (DataFrame, DataFrame, DataFrame) = {
-    val ws = Files.createDirectories(Paths.get(
-      "/root/repo/target/graft-e2e/" + java.util.UUID.randomUUID()))
-    try {
+  def run(spark: SparkSession): (DataFrame, DataFrame, DataFrame) =
+    DriveSupport.withWorkspace("graft-e2e") { ws =>
       val landing = Files.createDirectories(ws.resolve("landing"))
       val cfg = IngestStream.Config(
         landingDir = landing.toString,
@@ -87,25 +84,15 @@ object IngestE2E {
       // other drive result
       def pin(df: DataFrame): DataFrame = DriveSupport.pin(spark, df)
       (pin(products), pin(control), pin(diffed))
-    } finally {
-      Files.walk(ws).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.deleteIfExists(p))
     }
-  }
 
   // one pipeline run serves all three query keys within a session (Verify
   // and Bench call them back-to-back); tests wanting a fresh run call run().
-  @volatile private var cached
-      : Option[(SparkSession, (DataFrame, DataFrame, DataFrame))] = None
+  private val cached =
+    new graft.core.Caches.PerSession[(DataFrame, DataFrame, DataFrame)]
 
   private def memo(spark: SparkSession): (DataFrame, DataFrame, DataFrame) =
-    synchronized {
-      cached match {
-        case Some((s, r)) if s eq spark => r
-        case _ =>
-          val r = run(spark); cached = Some((spark, r)); r
-      }
-    }
+    cached.get(spark)(run(spark))
 
   def products(spark: SparkSession, dir: String): DataFrame =
     memo(spark)._1

@@ -86,15 +86,10 @@ object StreamScale {
     * keyed by the base fixture's fingerprint. Also writes the
     * purchases/views split the interval join stages. */
   private def ensureScaled(spark: SparkSession, sfDir: String,
-      factor: Int): String = {
-    val tag = graft.core.Caches.md5Tag(
-      s"$sfDir|${Tables.fingerprint(spark, sfDir, "events")}|c$Chunks")
-    val path = s"target/graft-stream-scale/$tag/f$factor"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val complete = Seq("events", "p", "v").forall(t =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$t/_SUCCESS")))
-    if (!complete) {
+      factor: Int): String =
+    Tables.ensureDerived(spark, "stream-scale",
+        Seq(sfDir, Tables.fingerprint(spark, sfDir, "events"), s"c$Chunks"),
+        sub = s"/f$factor", parts = Seq("events", "p", "v")) { path =>
       val e = Tables.load(spark, sfDir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts").cast("timestamp").as("ts"), col("value"))
@@ -125,8 +120,6 @@ object StreamScale {
         .repartition(col("chunk"))
         .write.mode("overwrite").partitionBy("chunk").parquet(s"$path/v")
     }
-    path
-  }
 
   private case class Trigger(in: Long, ms: Long, stateRows: Long,
       stateBytes: Long)
@@ -288,24 +281,8 @@ object StreamScale {
     }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val factors = sys.env.get("SPARK_GRAFT_FACTORS")
-      .map(_.split(",").toSeq.map { tok =>
-        try tok.trim.toInt catch {
-          case _: NumberFormatException => sys.error(
-            s"SPARK_GRAFT_FACTORS: expected comma-separated ints, got '$tok'")
-        }
-      })
-      .getOrElse(Seq(1, 4, 16, 64))
+    val sfDir = graft.Sessions.sfDir("sf0.01")
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     val machines = sys.env.get("SPARK_GRAFT_MACHINES")
       .map(_.split(",").toSeq.map(_.trim))
       .getOrElse(Seq("tumbling", "ivj_inner", "ivj_left", "ivj_full",
@@ -313,7 +290,7 @@ object StreamScale {
         "tws_ttl"))
 
     val lines = scala.collection.mutable.ArrayBuffer[String]()
-    factors.foreach { f =>
+    graft.Sessions.factors.foreach { f =>
       val pre = ensureScaled(spark, sfDir, f)
       machines.foreach { m =>
         val triggers = runMachine(spark, pre, m)

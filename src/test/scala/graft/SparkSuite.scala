@@ -8,17 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * once). Mirrors the driver's Verify session: UTC, small shuffle
   * fan-out, quiet UI. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    Sessions.local(4, "spark.app.name" -> "graft-test")
 
   /** Smallest driver-provided fixture tables. */
   val sfDir = "/root/testdata/sf0.001"
@@ -49,16 +40,6 @@ object PlanNodes {
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
-  def withTmpDir[A](f: java.nio.file.Path => A): A = {
-    val dir = java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get("/root/repo/target/test-tmp/" +
-        java.util.UUID.randomUUID()))
-    try f(dir)
-    finally {
-      import java.util.Comparator
-      java.nio.file.Files.walk(dir)
-        .sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
+  def withTmpDir[A](f: java.nio.file.Path => A): A =
+    graft.streaming.DriveSupport.withWorkspace("test-tmp")(f)
 }

@@ -28,16 +28,10 @@ object AppendOnceChild {
 
   def main(args: Array[String]): Unit = {
     val Array(storePath, barrierDir, id, order) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-appendonce-race-$id")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
+    val spark = graft.Sessions.local(2,
+      "spark.app.name" -> s"graft-appendonce-race-$id",
+      "spark.sql.warehouse.dir" ->
         Paths.get(barrierDir, s"warehouse-$id").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val store = new SnapshotStore(storePath) {

@@ -2,8 +2,6 @@ package graft.ingest
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-JVM builder forked by [[BootstrapCrossProcessRaceSpec]] — one
   * of two independent Spark jobs racing the SAME build-or-load
   * bootstrap for one index root. Each child runs the full two-commit
@@ -20,14 +18,8 @@ object BootstrapRaceChild {
 
   def main(args: Array[String]): Unit = {
     val Array(root, barrierDir, id) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-bootstrap-race-child-$id")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(2,
+      "spark.app.name" -> s"graft-bootstrap-race-child-$id")
     import spark.implicits._
 
     val boot = new StoreBootstrap(root) {

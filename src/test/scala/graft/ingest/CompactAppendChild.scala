@@ -26,16 +26,10 @@ object CompactAppendChild {
 
   def main(args: Array[String]): Unit = {
     val Array(storePath, barrierDir, id, mode, order) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-compact-race-$id")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
+    val spark = graft.Sessions.local(2,
+      "spark.app.name" -> s"graft-compact-race-$id",
+      "spark.sql.warehouse.dir" ->
         Paths.get(barrierDir, s"warehouse-$id").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val store = new SnapshotStore(storePath) {

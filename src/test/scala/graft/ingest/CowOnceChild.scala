@@ -2,7 +2,6 @@ package graft.ingest
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Child-JVM committer forked by [[CowOnceRaceSpec]] — one side of the
@@ -28,16 +27,10 @@ object CowOnceChild {
 
   def main(args: Array[String]): Unit = {
     val Array(storePath, barrierDir, id, order) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-cowonce-race-$id")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
+    val spark = graft.Sessions.local(2,
+      "spark.app.name" -> s"graft-cowonce-race-$id",
+      "spark.sql.warehouse.dir" ->
         Paths.get(barrierDir, s"warehouse-$id").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val store = new SnapshotStore(storePath,

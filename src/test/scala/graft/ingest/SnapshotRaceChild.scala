@@ -33,18 +33,12 @@ object SnapshotRaceChild {
   def main(args: Array[String]): Unit = {
     val (Array(storePath, bucketed, barrierDir, id), mode) =
       if (args.length >= 5) (args.take(4), args(4)) else (args, "race")
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-race-child-$id")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Sessions.local(2,
+      "spark.app.name" -> s"graft-race-child-$id",
       // own warehouse: the bucketed path registers a catalog table, and
       // two children must not contend on a shared metastore dir
-      .config("spark.sql.warehouse.dir",
+      "spark.sql.warehouse.dir" ->
         Paths.get(barrierDir, s"warehouse-$id").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     // signal the parent this JVM reached its held stage, then park

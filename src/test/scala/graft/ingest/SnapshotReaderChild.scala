@@ -2,8 +2,6 @@ package graft.ingest
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-JVM READER polled across the cross-process commit race
   * ([[SnapshotCrossProcessRaceSpec]]): a third independent Spark job
   * hammering `read()` on the store while two other JVMs race a commit,
@@ -23,16 +21,10 @@ object SnapshotReaderChild {
 
   def main(args: Array[String]): Unit = {
     val Array(storePath, bucketed, barrierDir, id) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-reader-child-$id")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
+    val spark = graft.Sessions.local(2,
+      "spark.app.name" -> s"graft-reader-child-$id",
+      "spark.sql.warehouse.dir" ->
         Paths.get(barrierDir, s"warehouse-r$id").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val bucket = if (bucketed.toBoolean) Some(("k", 4)) else None
     val store = new SnapshotStore(storePath, bucket)

@@ -10,7 +10,8 @@ import graft.{SparkSuite, SparkEntry}
   * BEFORE the driver runs them: every boolean assertion column is
   * non-null TRUE at sf0.01 (the driver's verify SF) and the row grain
   * matches the oracle's. Thresholds/floors were MEASURED on the
-  * fixtures (graft.MeasureContracts, round 11):
+  * fixtures in round 11 (by a one-off measurement main, retired after
+  * commit 42bc2f6):
   *  - minhash banding misses zero organic n-gram pairs even at
   *    j ≥ 0.3 (all fixture pairs sit in deciles 8–9); the key's 0.8
   *    bar has ≥ 0.97 collision probability per pair and measured 0/25

@@ -2,8 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-JVM ingest pipeline forked by [[IngestCrashSpec]] — the
   * exactly-once claim's last crash seam, executed for real. The pipeline
   * runs normally until `killBatchId`'s micro-batch has COMMITTED all of
@@ -25,18 +23,12 @@ object IngestCrashChild {
 
   def main(args: Array[String]): Unit = {
     val Array(landing, wh, ckpt, barrierDir, bucketed, killBatch) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ingest-crash-child")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Sessions.local(2,
+      "spark.app.name" -> "graft-ingest-crash-child",
       // own warehouse: the bucketed products store registers catalog
       // tables; the parent JVM must never contend on them
-      .config("spark.sql.warehouse.dir",
+      "spark.sql.warehouse.dir" ->
         Paths.get(barrierDir, "warehouse-child").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val cfg = IngestStream.Config(
       landingDir = landing,
