@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.sum
 
 /** Benchmark main: per-query wall-clock over the SF-scaled test tables.
   *
@@ -29,6 +30,41 @@ object Bench {
       k == "stream_session_window_restart" ||
       SparkEntry.contractKeys(k)
 
+  /** The calibration keys' version, recorded in `bench.json`:
+    * tools/bench_compare.py normalizes by the calibration ratio only
+    * between artifacts of the same version. Version 1 timed frames
+    * whose `.count()` pruned the hashing away; version 2 keeps it. */
+  val CalibrationVersion = 2
+
+  /** Constant-work, data-independent keys recorded with the same
+    * warmup + 3-pass-median protocol as the field. They measure the
+    * BOX, not the engine: their cross-run ratio IS the run-level shift
+    * bench_compare.py would otherwise infer from the key field.
+    *   - `calibration_fixed_work`: pure Catalyst (range → xxhash64 →
+    *     bit_xor, fully codegen'd, no I/O; a sum of 3.2e9 hashes
+    *     overflows a long, which ANSI mode raises).
+    *   - `calibration_shuffle_work`: the same idea routed through a
+    *     real exchange (hash repartition + wide-key aggregate), for
+    *     the shuffle/scheduler path: the box once ran pure-CPU work
+    *     faster (fixed_work ×0.72) while every exchange-bearing key
+    *     ran ×1.3–2 slower, a drift the CPU-only key cannot see.
+    * Bench times a key by `.count()`, which prunes every column the
+    * count does not read; the `IS NOT NULL` filter on each aggregate
+    * makes the row count depend on it, so the hashing (and the
+    * exchange) actually runs. Always included. */
+  private[graft] val calibrationKeys
+      : Map[String, (SparkSession, String) => DataFrame] = Map(
+    "calibration_fixed_work" -> ((s: SparkSession, _: String) =>
+      s.range(0L, 3L << 30, 1L, 32)
+        .selectExpr("bit_xor(xxhash64(id)) AS h")
+        .where("h IS NOT NULL")),
+    "calibration_shuffle_work" -> ((s: SparkSession, _: String) =>
+      s.range(0L, 1L << 24, 1L, 32)
+        .selectExpr("pmod(xxhash64(id), 65536) AS k", "id AS v")
+        .groupBy("k").agg(sum("v").as("sv"))
+        .agg(sum("sv").as("t"))
+        .where("t IS NOT NULL")))
+
   def main(args: Array[String]): Unit = {
     val sfDir = Sessions.sfDir("sf0.1")
     val spark = Sessions.local(Sessions.cpus)
@@ -39,34 +75,9 @@ object Bench {
     // so it does not overwrite the tracked bench.json.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // calibration_fixed_work: a CONSTANT-WORK, data-independent pure-
-    // Catalyst key (range → xxhash64 → sum, fully codegen'd, no I/O)
-    // recorded with the same warmup+3-pass-median protocol. It
-    // measures the BOX, not the engine: its cross-run ratio IS the
-    // run-level shift bench_compare.py previously had to infer from
-    // the key field, so the regression gate can normalize by a
-    // measured quantity as the raw margin narrows. Always included.
-    val calibration: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      (s, _) => s.range(0L, 3L << 30, 1L, 32)
-        .selectExpr("sum(xxhash64(id)) AS h")
-    // calibration_shuffle_work: the same idea for the SHUFFLE/
-    // scheduler path — constant work, data-independent, but routed
-    // through a real exchange (hash repartition + wide-key aggregate).
-    // Added after the r17 continuation gate caught the box in a state
-    // where pure-CPU throughput was FASTER (fixed_work ×0.72) while
-    // every exchange-bearing key ran ×1.3–2 slower, including keys
-    // whose code had not changed in weeks — a drift dimension the
-    // CPU-only calibration is blind to by construction. With both
-    // keys in the artifact, bench_compare can normalize each side.
-    val calibrationShuffle: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      (s, _) => s.range(0L, 1L << 24, 1L, 32)
-        .selectExpr("pmod(xxhash64(id), 65536) AS k", "id AS v")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("v").as("sv"))
-        .agg(org.apache.spark.sql.functions.sum("sv").as("t"))
     val benched = SparkEntry.queries.view
-      .filterKeys(k => !excluded(k) && only.forall(_(k))).toMap +
-      ("calibration_fixed_work" -> calibration) +
-      ("calibration_shuffle_work" -> calibrationShuffle)
+      .filterKeys(k => !excluded(k) && only.forall(_(k))).toMap ++
+      calibrationKeys
     require(benched.size > 1, "SPARK_GRAFT_BENCH_ONLY matched no keys")
     // a failing key's cause: printed to stderr and kept (the first per
     // key) for the artifact's `causes` map, so a key that throws is
@@ -133,7 +144,7 @@ object Bench {
     val provider = graft.streaming.DriveSupport.envProviderName
       .getOrElse("hdfs")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","provider":"$provider","queries":$qs,"passes":$spread,"errors":$errors,"sf":"$sfDir","causes":$causesJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","provider":"$provider","queries":$qs,"passes":$spread,"errors":$errors,"sf":"$sfDir","causes":$causesJson,"calibration_version":$CalibrationVersion}"""
     println(json)
     // ALSO write the artifact to a file: the driver captures stdout,
     // which has been observed truncated to a 2,000-char tail (BENCH_r07

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The one local-session launcher: every graft main, the shared test
@@ -20,15 +22,23 @@ object Sessions {
     * forked child's app name and warehouse dir, say). `getOrCreate`:
     * an already running session in this JVM is returned as is. */
   def local(cores: Int, confs: (String, String)*): SparkSession = {
+    logAtWarn()
     val builder = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    val spark = confs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+    confs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+  }
+
+  /** Root log level WARN before the context starts. Spark loads its
+    * INFO-level log4j profile on its first log call, and the context
+    * logs its first lines (version, OS, Java) before `spark.log.level`
+    * would apply; so load the profile here, then lower the root. */
+  private def logAtWarn(): Unit = {
+    new org.apache.spark.internal.Logging { initializeLogIfNecessary(false) }
+    Configurator.setRootLevel(Level.WARN)
   }
 
   /** `SPARK_GRAFT_CPUS`: the mains' core count, default 4. */

@@ -53,6 +53,22 @@ object Tables {
   def deltaCutoff(df: DataFrame, idCol: String): Long =
     deltaSplit(df, idCol)._1
 
+  /** (base, delivery) slices of `df` on `idCol` at `cut`: ids below it
+    * are the base. Pass the cut when it comes from another table (the
+    * perceptual stores cut at [[documentsCutoff]]). */
+  def deltaSlices(df: DataFrame, idCol: String, cut: Long)
+      : (DataFrame, DataFrame) =
+    (df.filter(F.col(idCol) < cut), df.filter(F.col(idCol) >= cut))
+
+  /** (base, delivery) slices of `df` at its own [[deltaCutoff]]. */
+  def deltaSlices(df: DataFrame, idCol: String): (DataFrame, DataFrame) =
+    deltaSlices(df, idCol, deltaCutoff(df, idCol))
+
+  /** The delivery cut of the `documents` table, which the stores
+    * derived from it (the perceptual fingerprints) slice at. */
+  def documentsCutoff(spark: SparkSession, dir: String): Long =
+    deltaCutoff(load(spark, dir, "documents").select("doc_id"), "doc_id")
+
   /** Fan a narrow scan out to the session's parallelism. A small table
     * in one parquet split runs every scan-side heavy stage (shingling,
     * tokenizing, hashing, the countDistinct expand) in ONE task — the

@@ -1,7 +1,6 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.core.{Caches, Tables}
 
@@ -87,11 +86,9 @@ object PersistedIndex {
     def source: DataFrame = Tables.load(spark, dir, table)
 
     /** (base, delivery) slices of `src` at the standard delivery cut
-      * ([[Tables.deltaCutoff]]) on the index's id column. */
-    def split(src: DataFrame): (DataFrame, DataFrame) = {
-      val cut = Tables.deltaCutoff(src, idCol)
-      (src.filter(col(idCol) < cut), src.filter(col(idCol) >= cut))
-    }
+      * ([[Tables.deltaSlices]]) on the index's id column. */
+    def split(src: DataFrame): (DataFrame, DataFrame) =
+      Tables.deltaSlices(src, idCol)
 
     /** The common build: `frames` maps a slice of `select(source)` to
       * one frame per declared store, in declaration order. Every store

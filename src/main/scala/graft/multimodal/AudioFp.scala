@@ -182,8 +182,7 @@ object AudioFp {
     * so the key runs under the same full hash gate as `dedup_audio`. */
   def dedupAudioDelta(spark: SparkSession, dir: String,
       maxHamming: Int = 3): DataFrame = {
-    val cut = Tables.deltaCutoff(
-      Tables.load(spark, dir, "documents").select("doc_id"), "doc_id")
+    val cut = Tables.documentsCutoff(spark, dir)
     Phash.chunkLshPairs(ensureIndex(spark, dir), "afp", Some(cut),
       maxHamming)
   }
@@ -195,10 +194,8 @@ object AudioFp {
     * + full-hash novelty algebra is SHARED — [[Phash.bitDriftOf]]).
     * Store-served: zero WAV decode at gauge time. */
   def audioDriftCheck(spark: SparkSession, dir: String): DataFrame = {
-    val fps = ensureIndex(spark, dir)
-    val cut = Tables.deltaCutoff(
-      Tables.load(spark, dir, "documents").select("doc_id"), "doc_id")
-    Phash.bitDriftOf(fps.filter(col("doc_id") < cut),
-      fps.filter(col("doc_id") >= cut), "afp")
+    val (base, delta) = Tables.deltaSlices(ensureIndex(spark, dir),
+      "doc_id", Tables.documentsCutoff(spark, dir))
+    Phash.bitDriftOf(base, delta, "afp")
   }
 }

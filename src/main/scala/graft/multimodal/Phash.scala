@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ingest.PersistedIndex
+import graft.query.DriftGauge
 
 /** Perceptual-hash IMAGE dedup (`dedup_phash`) — the multimodal and
   * dedup surfaces joined: find images that are the same PICTURE under
@@ -218,8 +219,7 @@ object Phash {
     * sweeps pairs with d2 past the cutoff). */
   def dedupPhashDelta(spark: SparkSession, dir: String,
       maxHamming: Int = 3): DataFrame = {
-    val cut = Tables.deltaCutoff(
-      Tables.load(spark, dir, "documents").select("doc_id"), "doc_id")
+    val cut = Tables.documentsCutoff(spark, dir)
     chunkLshPairs(ensureIndex(spark, dir), "phash", Some(cut),
       maxHamming)
   }
@@ -235,9 +235,8 @@ object Phash {
     * balances) and (2) NOVELTY mass (share of delivery items whose
     * exact fingerprint the base never produced — all-new content ⇒
     * the stored fingerprints stop being representative). Both exact:
-    * occ_shift is the [[graft.query.IndexDrift]] cross-multiplication
-    * (DECIMAL(38,0) / HUGEINT — no division, no wrap at any corpus
-    * size), novelty an integer comparison + one rounded ratio.
+    * occ_shift is [[DriftGauge.occShift]], novelty an integer
+    * comparison + one rounded ratio.
     *
     * Scale shape: the gauge reads the PERSISTED store only — zero
     * decode work at gauge time; one 64-way bit explode over
@@ -246,11 +245,9 @@ object Phash {
     * broadcast-crossed in (the model-scalar shape), a window over 64
     * rows. */
   def phashDriftCheck(spark: SparkSession, dir: String): DataFrame = {
-    val fps = ensureIndex(spark, dir)
-    val cut = Tables.deltaCutoff(
-      Tables.load(spark, dir, "documents").select("doc_id"), "doc_id")
-    phashDriftOf(fps.filter(col("doc_id") < cut),
-      fps.filter(col("doc_id") >= cut))
+    val (base, delta) = Tables.deltaSlices(ensureIndex(spark, dir),
+      "doc_id", Tables.documentsCutoff(spark, dir))
+    phashDriftOf(base, delta)
   }
 
   /** Frame-parameterized core — specs plant shifted fingerprint
@@ -271,9 +268,7 @@ object Phash {
       col(hashCol).as("phash"))
     val delta = delta0.select(col("doc_id"),
       col(hashCol).as("phash"))
-    val tagged = base.withColumn("is_delta", lit(false))
-      .unionByName(delta.withColumn("is_delta", lit(true)))
-    val perBit = tagged
+    val perBit = DriftGauge.tagged(base, delta)
       .select(col("is_delta"), col("phash"),
         explode(expr("sequence(0, 63)")).as("bit"))
       .withColumn("b",
@@ -286,19 +281,17 @@ object Phash {
     val novel = delta.join(base.select("phash").distinct(),
         Seq("phash"), "left_anti")
       .agg(count(lit(1)).as("novel_occ"))
-    val panel = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1))
     perBit.crossJoin(broadcast(novel))
       .select(col("bit").cast("long").as("bit"),
         coalesce(col("n1_base"), lit(0L)).as("n1_base"),
         coalesce(col("n1_delta"), lit(0L)).as("n1_delta"),
-        graft.query.DriftGauge.occShift(col("n1_delta"), col("n1_base"),
+        DriftGauge.occShift(col("n1_delta"), col("n1_base"),
           col("td"), col("tb")).as("occ_shift"),
-        graft.query.DriftGauge.safeRate(col("novel_occ"), col("td"))
+        DriftGauge.safeRate(col("novel_occ"), col("td"))
           .as("novel_rate"),
         (col("novel_occ") * 2 > col("td")).as("novelty_drift"))
       .select(col("*"),
-        (bool_or(col("occ_shift")).over(panel) || col("novelty_drift"))
+        (DriftGauge.anyRow(col("occ_shift")) || col("novelty_drift"))
           .as("fp_retrain"))
       .orderBy("bit")
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ingest.PersistedIndex
+import graft.query.DriftGauge
 
 /** Perceptual VIDEO dedup (`dedup_video`) — completes the multimodal
   * dedup triad beside [[Phash]] (image) and [[AudioFp]] (audio): find
@@ -206,8 +207,7 @@ object VideoFp {
     * the FULL persisted store; no base video is re-demuxed at query
     * time. Runs under the same full hash gate as `dedup_video`. */
   def dedupVideoDelta(spark: SparkSession, dir: String): DataFrame = {
-    val cut = Tables.deltaCutoff(
-      Tables.load(spark, dir, "documents").select("doc_id"), "doc_id")
+    val cut = Tables.documentsCutoff(spark, dir)
     seqPairs(ensureIndex(spark, dir), Some(cut))
   }
 
@@ -222,20 +222,17 @@ object VideoFp {
     * the base never produced). Store-served: zero demux/decode at
     * gauge time. */
   def videoDriftCheck(spark: SparkSession, dir: String): DataFrame = {
-    val seqs = ensureIndex(spark, dir)
-    val cut = Tables.deltaCutoff(
-      Tables.load(spark, dir, "documents").select("doc_id"), "doc_id")
-    videoDriftOf(seqs.filter(col("doc_id") < cut),
-      seqs.filter(col("doc_id") >= cut))
+    val (base, delta) = Tables.deltaSlices(ensureIndex(spark, dir),
+      "doc_id", Tables.documentsCutoff(spark, dir))
+    videoDriftOf(base, delta)
   }
 
   /** Frame-parameterized core — both frames carry
     * (doc_id, vseq, n_frames). */
   def videoDriftOf(base: DataFrame, delta: DataFrame): DataFrame = {
-    val tagged = base.select(col("doc_id"), col("vseq"),
-        col("n_frames")).withColumn("is_delta", lit(false))
-      .unionByName(delta.select(col("doc_id"), col("vseq"),
-        col("n_frames")).withColumn("is_delta", lit(true)))
+    def cols(df: DataFrame) =
+      df.select(col("doc_id"), col("vseq"), col("n_frames"))
+    val tagged = DriftGauge.tagged(cols(base), cols(delta))
     val perLen = tagged.groupBy("n_frames")
       .agg(count(when(!col("is_delta"), lit(1))).as("n_base"),
         count(when(col("is_delta"), lit(1))).as("n_delta"))
@@ -245,19 +242,14 @@ object VideoFp {
     val novel = delta.join(base.select("vseq").distinct(),
         Seq("vseq"), "left_anti")
       .agg(count(lit(1)).as("novel_occ"))
-    val panel = org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1))
     perLen.crossJoin(broadcast(totals)).crossJoin(broadcast(novel))
       .select(col("n_frames"), col("n_base"), col("n_delta"),
-        (abs(col("n_delta").cast("decimal(38,0)") * col("tb") -
-             col("n_base").cast("decimal(38,0)") * col("td")) * 20 >
-          col("tb").cast("decimal(38,0)") * col("td")).as("occ_shift"),
-        when(col("td") === 0, lit(0.0))
-          .otherwise(round(col("novel_occ").cast("double") / col("td"),
-            6)).as("novel_rate"),
+        DriftGauge.occShift(col("n_delta"), col("n_base"),
+          col("td"), col("tb")).as("occ_shift"),
+        DriftGauge.safeRate(col("novel_occ"), col("td")).as("novel_rate"),
         (col("novel_occ") * 2 > col("td")).as("novelty_drift"))
       .select(col("*"),
-        (bool_or(col("occ_shift")).over(panel) || col("novelty_drift"))
+        (DriftGauge.anyRow(col("occ_shift")) || col("novelty_drift"))
           .as("seq_retrain"))
       .orderBy("n_frames")
   }

@@ -1,7 +1,6 @@
 package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -44,14 +43,9 @@ import graft.core.Tables
   *
   * Flag algebra (the [[Profile.profileDriftOf]] convention — integer
   * cross-multiplication where exactness matters, rounded doubles
-  * where a ratio is inherently floating):
-  *   - `occ_shift`: |delta_share − base_share| > 5%, evaluated as
-  *     |n_delta·T_base − n_base·T_delta| · 20 > T_base · T_delta in
-  *     exact wide-integer arithmetic (Spark DECIMAL(38,0), DuckDB
-  *     HUGEINT — both exact far past any physical corpus; plain
-  *     BIGINT would silently wrap in Spark's non-ANSI mode once the
-  *     corpus passes ~3e9 vectors while DuckDB raises, diverging the
-  *     engines), no division;
+  * where a ratio is inherently floating; the panel is
+  * [[DriftGauge.distancePanel]]):
+  *   - `occ_shift`: [[DriftGauge.occShift]] over the cell shares;
   *   - `dist_drift`: round(msd_delta,4) > 1.5 · round(msd_base,4)
   *     (evaluated ×2/×3 to stay in exact multiples), with the edge
   *     rules: a cell the base never populated drifts iff the delivery
@@ -81,84 +75,38 @@ object IndexDrift {
         .otherwise(lit(0L))).reduce(_ + _)
 
   /** Driver key `index_drift_check`: the per-cell drift panel for the
-    * standard delivery split (vec_id ≥ max·4/5 + 1 — the
-    * [[Ivf]]/[[SemanticIndex]] cutoff rule) of the embeddings table. */
+    * standard delivery split ([[DriftGauge]]) of the embeddings table. */
   def indexDriftCheck(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.load(spark, dir, "embeddings")
-    val cut = Tables.deltaCutoff(e, "vec_id")
-    indexDriftOf(e.filter(col("vec_id") < cut),
-      e.filter(col("vec_id") >= cut))
+    val (base, delta) =
+      Tables.deltaSlices(Tables.load(spark, dir, "embeddings"), "vec_id")
+    indexDriftOf(base, delta)
   }
 
-  /** Driver key `index_retrain_apply`: the gauge panel AFTER applying
-    * its own decision — the oracle-checkable face of the retrain
-    * action ([[Ivf.ensureRetrainedIndex]] is the store-level act; this
-    * key proves the decision's POST-state semantics). If the
-    * pre-gauge fires, the action resets the chain (the full corpus
-    * becomes the new base, the delta is empty), so the post panel
-    * deterministically reads all-quiet — n_delta 0, every flag false;
-    * if it is quiet, the post panel IS the pre panel. `retrained`
-    * records the decision that was applied. Both stages are exact
-    * column algebra, so DuckDB recomputes the whole loop. */
-  def indexRetrainApply(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.load(spark, dir, "embeddings")
-    val cut = Tables.deltaCutoff(e, "vec_id")
-    val base = e.filter(col("vec_id") < cut)
-    val delta = e.filter(col("vec_id") >= cut)
-    val retrained = indexDriftOf(base, delta)
-      .agg(coalesce(bool_or(col("index_retrain")), lit(false)))
-      .head().getBoolean(0)
-    val (pb, pd) = if (retrained) (e, e.limit(0)) else (base, delta)
-    indexDriftOf(pb, pd).withColumn("retrained", lit(retrained))
-  }
+  /** Driver key `index_retrain_apply`: the gauge panel after applying
+    * its own decision ([[DriftGauge.applied]]) — the oracle-checkable
+    * face of the retrain action ([[Ivf.ensureRetrainedIndex]] is the
+    * store-level act). */
+  def indexRetrainApply(spark: SparkSession, dir: String): DataFrame =
+    DriftGauge.applied(Tables.load(spark, dir, "embeddings"), "vec_id",
+      "index_retrain")(indexDriftOf)
 
   /** Frame-parameterized core — specs drive a planted distribution
     * shift through it to flip the flags. Both frames carry
     * (vec_id, embedding). */
   def indexDriftOf(base: DataFrame, delta: DataFrame): DataFrame = {
-    val tagged = base.select(col("vec_id"), col("embedding"))
-        .withColumn("is_delta", lit(false))
-      .unionByName(delta.select(col("vec_id"), col("embedding"))
-        .withColumn("is_delta", lit(true)))
+    def cols(df: DataFrame) = df.select(col("vec_id"), col("embedding"))
+    val dims = DriftGauge.tagged(cols(base), cols(delta))
       .select(col("vec_id"), col("is_delta"),
         cellOf(col("embedding")).as("cell"),
         col("embedding").cast("array<double>").as("v"))
-    val dims = tagged.select(col("vec_id"), col("is_delta"), col("cell"),
-      posexplode(col("v")).as(Seq("d", "val")))
+      .select(col("vec_id"), col("is_delta"), col("cell"),
+        posexplode(col("v")).as(Seq("d", "val")))
     // frozen centroid = base per-cell mean (one Lloyd half-step from
-    // the deterministic sign partition)
-    val cent = dims.filter(!col("is_delta"))
-      .groupBy("cell", "d").agg(avg(col("val")).as("m"))
-    // squared distance of EVERY vector (base and delta) to its cell's
-    // frozen centroid; a delta-only cell has no centroid => null
-    val sq = dims.join(cent, Seq("cell", "d"), "left")
-      .groupBy("vec_id", "cell", "is_delta")
-      .agg(sum((col("val") - col("m")) * (col("val") - col("m")))
-        .as("sq"))
-    val stats = sq.groupBy("cell").agg(
-      count(when(!col("is_delta"), lit(1))).as("n_base"),
-      count(when(col("is_delta"), lit(1))).as("n_delta"),
-      avg(when(!col("is_delta"), col("sq"))).as("mb"),
-      avg(when(col("is_delta"), col("sq"))).as("md"))
-    val all = Window.partitionBy(lit(1))
-    val withTotals = stats.select(col("cell"), col("n_base"),
-      col("n_delta"),
-      round(col("mb"), 4).as("msd_base"),
-      round(col("md"), 4).as("msd_delta"),
-      sum(col("n_base")).over(all).as("tb"),
-      sum(col("n_delta")).over(all).as("td"))
-    val flagged = withTotals.select(col("cell"), col("n_base"),
-      col("n_delta"), col("msd_base"), col("msd_delta"),
-      DriftGauge.occShift(col("n_delta"), col("n_base"),
-        col("td"), col("tb")).as("occ_shift"),
+    // the deterministic sign partition); occupancy totals panel-wide
+    DriftGauge.distancePanel(dims, Seq("cell"), Nil,
       when(col("n_base") === 0, col("n_delta") > 0)
         .when(col("n_delta") === 0, lit(false))
-        .otherwise(col("msd_delta") * 2 > col("msd_base") * 3)
-        .as("dist_drift"))
-    flagged.select(col("*"),
-        (col("occ_shift") || col("dist_drift")).as("needs_retrain"))
-      .select(col("*"),
-        bool_or(col("needs_retrain")).over(all).as("index_retrain"))
-      .orderBy("cell")
+        .otherwise(col("msd_delta") * 2 > col("msd_base") * 3),
+      "index_retrain")
   }
 }

@@ -76,21 +76,30 @@ object Ivf {
       .withColumn("cid", row_number().over(seedRank).cast("long"))
       .select(col("cid"), col("embedding").as("cvec"))
       .localCheckpoint()
-    for (_ <- 0 until iters) {
-      val assigned = assign(e, cent)
-      cent = assigned
-        .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy("cid", "pos")
-        // exact decimal mean -> order-independent, engine-deterministic
-        .agg((sum(col("v").cast(DecimalType(27, 10))).cast("double") /
-          count(lit(1))).as("m"))
-        .groupBy("cid")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
-          .as("dims"))
-        .select(col("cid"), transform(col("dims"), d => d("m")).as("cvec"))
-        .localCheckpoint() // keep each Lloyd round's plan flat
-    }
+    for (_ <- 0 until iters)
+      cent = lloydMeans(assign(e, cent), Seq("cid"), "embedding")
     cent
+  }
+
+  /** The Lloyd update step of [[trainCentroids]] and
+    * [[Pq.trainCodebooks]]: per centroid (`keys`: `cid`, or `sub, cid`)
+    * the per-dimension mean of its assigned vectors' `vec` column, as
+    * (keys…, cvec). Means go through exact DECIMAL sums, so they are
+    * order-independent and engine-deterministic; the result is
+    * localCheckpointed to keep each round's plan flat. */
+  private[query] def lloydMeans(assigned: DataFrame, keys: Seq[String],
+      vec: String): DataFrame = {
+    val ks = keys.map(col)
+    assigned
+      .select(ks :+ posexplode(col(vec)).as(Seq("pos", "v")): _*)
+      .groupBy(ks :+ col("pos"): _*)
+      .agg((sum(col("v").cast(DecimalType(27, 10))).cast("double") /
+        count(lit(1))).as("m"))
+      .groupBy(ks: _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
+        .as("dims"))
+      .select(ks :+ transform(col("dims"), d => d("m")).as("cvec"): _*)
+      .localCheckpoint()
   }
 
   /** Nearest-centroid assignment: broadcast the model, argmin per row.
@@ -293,14 +302,6 @@ object Ivf {
   // nature — the gauge exists precisely so that cost is paid only when
   // the distribution actually moved, not per delivery.
 
-  /** The gauge's decision bit for a (base, delta) split — true when
-    * any cell flags `needs_retrain` ([[IndexDrift.indexDriftOf]]). */
-  private[query] def driftDecision(base: DataFrame, delta: DataFrame)
-      : Boolean =
-    IndexDrift.indexDriftOf(base, delta)
-      .agg(coalesce(bool_or(col("index_retrain")), lit(false)))
-      .head().getBoolean(0)
-
   /** Frame-level retrain-on-drift core: gauge the split, then either
     * keep the frozen base-trained model (quiet) or retrain on
     * base ∪ delta (fired). Returns (centroids, cell assignments of the
@@ -312,7 +313,8 @@ object Ivf {
   def retrainIfDrifted(base: DataFrame, delta: DataFrame,
       nlist: Int = 16, iters: Int = 2, seed: Long = 7L)
       : (DataFrame, DataFrame, Boolean) = {
-    val retrained = driftDecision(base, delta)
+    val retrained =
+      DriftGauge.fired(IndexDrift.indexDriftOf(base, delta), "index_retrain")
     val full = base.unionByName(delta)
     val cent = trainCentroids(if (retrained) full else base,
       nlist, iters, seed)
@@ -345,7 +347,8 @@ object Ivf {
     RetrainIndex.ensure(spark, dir, nlist, iters, seed) { st =>
       val e = st.source
       val (base, delta) = st.split(e)
-      if (driftDecision(base, delta)) {
+      if (DriftGauge.fired(IndexDrift.indexDriftOf(base, delta),
+          "index_retrain")) {
         val cent = trainCentroids(e, nlist, iters, seed)
         st("centroids").overwrite(cent)
         st("cells").overwrite(assign(e, cent))

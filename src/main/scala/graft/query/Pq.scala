@@ -3,7 +3,6 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
 import graft.core.{Caches, Tables}
 import graft.functions.{cosine_sim, dot_product}
 
@@ -96,21 +95,8 @@ object Pq {
       .select(col("sub"), col("rn").cast("long").as("cid"),
         col("svec").as("cvec"))
       .localCheckpoint()
-    for (_ <- 0 until iters) {
-      cb = assign(sv, cb)
-        .select(col("sub"), col("cid"),
-          posexplode(col("svec")).as(Seq("pos", "v")))
-        .groupBy("sub", "cid", "pos")
-        // exact decimal mean — order-independent, engine-deterministic
-        .agg((sum(col("v").cast(DecimalType(27, 10))).cast("double") /
-          count(lit(1))).as("m"))
-        .groupBy("sub", "cid")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
-          .as("dims"))
-        .select(col("sub"), col("cid"),
-          transform(col("dims"), x => x("m")).as("cvec"))
-        .localCheckpoint() // keep each Lloyd round's plan flat
-    }
+    for (_ <- 0 until iters)
+      cb = Ivf.lloydMeans(assign(sv, cb), Seq("sub", "cid"), "svec")
     cb.withColumn("csq", dot_product(col("cvec"), col("cvec")))
       .localCheckpoint()
   }
@@ -163,12 +149,11 @@ object Pq {
       : (DataFrame, DataFrame) =
     memo.get(spark, Caches.md5Tag(
       s"pqdelta|$dir|$m|$ks|$iters|$seed|${Tables.fingerprint(spark, dir, "embeddings")}")) {
-      val e = Tables.load(spark, dir, "embeddings")
-      val cutoff = Tables.deltaCutoff(e, "vec_id")
-      val baseSv = subVectors(e.filter(col("vec_id") < cutoff), m)
-        .localCheckpoint()
+      val (base, delta) =
+        Tables.deltaSlices(Tables.load(spark, dir, "embeddings"), "vec_id")
+      val baseSv = subVectors(base, m).localCheckpoint()
       val cb = trainCodebooks(baseSv, m, ks, iters, seed)
-      val deltaSv = subVectors(e.filter(col("vec_id") >= cutoff), m)
+      val deltaSv = subVectors(delta, m)
       val codes = assign(baseSv, cb)
         .unionByName(assign(deltaSv, cb)) // O(delta): one frozen pass
         .select(col("vec_id"), col("sub"), col("cid"))
@@ -194,10 +179,7 @@ object Pq {
     * pair. */
   def similarityPqRetrain(spark: SparkSession, dir: String, k: Int = 5,
       rerank: Int = Rerank): DataFrame = {
-    val fired = PqDrift.pqDriftCheck(spark, dir)
-      .agg(coalesce(bool_or(col("pq_retrain")), lit(false)))
-      .head().getBoolean(0)
-    if (fired) similarityPq(spark, dir, k, rerank)
+    if (DriftGauge.fired(PqDrift.pqDriftCheck(spark, dir), "pq_retrain")) similarityPq(spark, dir, k, rerank)
     else similarityPqDelta(spark, dir, k, rerank)
   }
 
@@ -285,10 +267,8 @@ object Pq {
       k: Int = 5, nprobe: Int = Ivf.HighRecallNprobe,
       rerank: Int = Rerank, m: Int = M, ks: Int = Ks): DataFrame = {
     val (cent, cells, _) = Ivf.ensureRetrainedIndex(spark, dir)
-    val pqFired = PqDrift.pqDriftCheck(spark, dir)
-      .agg(coalesce(bool_or(col("pq_retrain")), lit(false)))
-      .head().getBoolean(0)
-    val pq = if (pqFired) ensureIndex(spark, dir, m, ks)
+    val pq = if (DriftGauge.fired(PqDrift.pqDriftCheck(spark, dir),
+        "pq_retrain")) ensureIndex(spark, dir, m, ks)
       else ensureDeltaIndex(spark, dir, m, ks)
     similarityIvfPqOf(spark, Tables.load(spark, dir, "embeddings"),
       (cent, cells), pq, k, nprobe, rerank, m)

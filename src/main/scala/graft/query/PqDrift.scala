@@ -1,7 +1,6 @@
 package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -90,46 +89,29 @@ object PqDrift {
   /** Driver key `pq_drift_check`: the per-(subspace, cell) drift panel
     * for the standard delivery split of the embeddings table. */
   def pqDriftCheck(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.load(spark, dir, "embeddings")
-    val cut = Tables.deltaCutoff(e, "vec_id")
-    pqDriftOf(e.filter(col("vec_id") < cut),
-      e.filter(col("vec_id") >= cut))
+    val (base, delta) =
+      Tables.deltaSlices(Tables.load(spark, dir, "embeddings"), "vec_id")
+    pqDriftOf(base, delta)
   }
 
-  /** Driver key `pq_retrain_apply`: the gauge panel AFTER applying its
-    * own decision (the [[IndexDrift.indexRetrainApply]] shape): a
-    * firing pre-gauge resets the chain — the full corpus becomes the
-    * new base, the delta is empty, the post panel reads all-quiet; a
-    * quiet pre-gauge keeps the pre panel. `retrained` records the
-    * applied decision. Exact column algebra end-to-end, so DuckDB
-    * recomputes the whole gauge → act → re-gauge loop. */
-  def pqRetrainApply(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.load(spark, dir, "embeddings")
-    val cut = Tables.deltaCutoff(e, "vec_id")
-    val base = e.filter(col("vec_id") < cut)
-    val delta = e.filter(col("vec_id") >= cut)
-    val retrained = pqDriftOf(base, delta)
-      .agg(coalesce(bool_or(col("pq_retrain")), lit(false)))
-      .head().getBoolean(0)
-    val (pb, pd) = if (retrained) (e, e.limit(0)) else (base, delta)
-    pqDriftOf(pb, pd).withColumn("retrained", lit(retrained))
-  }
+  /** Driver key `pq_retrain_apply`: the gauge panel after applying its
+    * own decision ([[DriftGauge.applied]]). */
+  def pqRetrainApply(spark: SparkSession, dir: String): DataFrame =
+    DriftGauge.applied(Tables.load(spark, dir, "embeddings"), "vec_id",
+      "pq_retrain")(pqDriftOf)
 
   /** Frame-parameterized core — PqDriftSpec drives a planted
     * distribution shift through it. Both frames carry
     * (vec_id, embedding). */
   def pqDriftOf(base: DataFrame, delta: DataFrame): DataFrame = {
-    val tagged = base.select(col("vec_id"), col("embedding"))
-        .withColumn("is_delta", lit(false))
-      .unionByName(delta.select(col("vec_id"), col("embedding"))
-        .withColumn("is_delta", lit(true)))
+    def cols(df: DataFrame) = df.select(col("vec_id"), col("embedding"))
+    val dims = DriftGauge.tagged(cols(base), cols(delta))
       .select(col("vec_id"), col("is_delta"),
         col("embedding").cast("array<double>").as("v"))
       // the per-subspace cells ride the dim explode as one array —
       // no extra shuffle to pair a dim row with its subspace's cell
       .withColumn("cells",
         array((0 until Pq.M).map(s => cellOf(col("v"), s)): _*))
-    val dims = tagged
       .select(col("vec_id"), col("is_delta"), col("cells"),
         posexplode(col("v")).as(Seq("d", "val")))
       .withColumn("sub", (col("d") / D).cast("long"))
@@ -137,42 +119,16 @@ object PqDrift {
         element_at(col("cells"), (col("sub") + 1).cast("int")))
       .drop("cells")
     // frozen centroid = base per-(sub, cell) mean, dim-wise (d already
-    // determines sub; both ride the key for the panel's grain)
-    val cent = dims.filter(!col("is_delta"))
-      .groupBy("sub", "cell", "d").agg(avg(col("val")).as("m"))
-    val sq = dims.join(cent, Seq("sub", "cell", "d"), "left")
-      .groupBy("vec_id", "sub", "cell", "is_delta")
-      .agg(sum((col("val") - col("m")) * (col("val") - col("m")))
-        .as("sq"))
-    val stats = sq.groupBy("sub", "cell").agg(
-      count(when(!col("is_delta"), lit(1))).as("n_base"),
-      count(when(col("is_delta"), lit(1))).as("n_delta"),
-      avg(when(!col("is_delta"), col("sq"))).as("mb"),
-      avg(when(col("is_delta"), col("sq"))).as("md"))
-    // occupancy shares are WITHIN-subspace (each vector contributes
+    // determines sub; both ride the key for the panel's grain).
+    // Occupancy shares are WITHIN-subspace (each vector contributes
     // one row per sub, so per-sub totals are the corpus totals — the
-    // window keeps the algebra honest if a geometry ever changes that)
-    val perSub = Window.partitionBy("sub")
-    val withTotals = stats.select(col("sub"), col("cell"),
-      col("n_base"), col("n_delta"),
-      round(col("mb"), 4).as("msd_base"),
-      round(col("md"), 4).as("msd_delta"),
-      sum(col("n_base")).over(perSub).as("tb"),
-      sum(col("n_delta")).over(perSub).as("td"))
-    val flagged = withTotals.select(col("sub"), col("cell"),
-      col("n_base"), col("n_delta"), col("msd_base"), col("msd_delta"),
-      DriftGauge.occShift(col("n_delta"), col("n_base"),
-        col("td"), col("tb")).as("occ_shift"),
+    // per-sub window keeps the algebra honest if a geometry ever
+    // changes that)
+    DriftGauge.distancePanel(dims, Seq("sub", "cell"), Seq("sub"),
       when(col("n_base") === 0, col("n_delta") >= MinDistMass)
         .when(col("n_delta") < MinDistMass ||
           col("n_base") < MinDistMass, lit(false))
-        .otherwise(col("msd_delta") * 2 > col("msd_base") * 3)
-        .as("dist_drift"))
-    val all = Window.partitionBy(lit(1))
-    flagged.select(col("*"),
-        (col("occ_shift") || col("dist_drift")).as("needs_retrain"))
-      .select(col("*"),
-        bool_or(col("needs_retrain")).over(all).as("pq_retrain"))
-      .orderBy("sub", "cell")
+        .otherwise(col("msd_delta") * 2 > col("msd_base") * 3),
+      "pq_retrain")
   }
 }

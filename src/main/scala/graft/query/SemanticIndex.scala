@@ -63,13 +63,10 @@ object SemanticIndex {
     * centroids, base flags, delta flags against base ∪ delta. */
   def dedupSemanticDeltaOf(e: DataFrame, k: Int = 8, iters: Int = 3,
       threshold: Double = 0.35, seed: Long = 7L): DataFrame = {
-    val cut = Tables.deltaCutoff(e, "vec_id")
-    val cent = Ivf.trainCentroids(
-      e.filter(col("vec_id") < cut), k, iters, seed)
-    val baseCells = TextSim.assignCells(
-      e.filter(col("vec_id") < cut), cent)
-    val deltaCells = TextSim.assignCells(
-      e.filter(col("vec_id") >= cut), cent)
+    val (base, delta) = Tables.deltaSlices(e, "vec_id")
+    val cent = Ivf.trainCentroids(base, k, iters, seed)
+    val baseCells = TextSim.assignCells(base, cent)
+    val deltaCells = TextSim.assignCells(delta, cent)
     TextSim.cellDupFlags(baseCells, baseCells, threshold)
       .unionByName(TextSim.cellDupFlags(deltaCells,
         baseCells.unionByName(deltaCells), threshold))
@@ -139,10 +136,9 @@ object SemanticIndex {
     * fired ⇒ bit-identical to the one-shot full refit. */
   def retrainIfDrifted(e: DataFrame, k: Int = 8, iters: Int = 3,
       threshold: Double = 0.35): (DataFrame, Boolean) = {
-    val cut = Tables.deltaCutoff(e, "vec_id")
-    val retrained = Ivf.driftDecision(
-      e.filter(col("vec_id") < cut), e.filter(col("vec_id") >= cut))
-    if (retrained)
+    val (base, delta) = Tables.deltaSlices(e, "vec_id")
+    if (DriftGauge.fired(IndexDrift.indexDriftOf(base, delta),
+        "index_retrain"))
       (TextSim.dedupSemanticKmeansOf(e, k, iters, threshold), true)
     else (dedupSemanticDeltaOf(e, k, iters, threshold), false)
   }
@@ -159,7 +155,8 @@ object SemanticIndex {
     RetrainIndex.ensure(spark, dir, k, iters, threshold, seed) { st =>
       val e = st.source
       val (base, delta) = st.split(e)
-      if (Ivf.driftDecision(base, delta)) {
+      if (DriftGauge.fired(IndexDrift.indexDriftOf(base, delta),
+          "index_retrain")) {
         // fired: full refit, chain RESET to a single version
         val cent = Ivf.trainCentroids(e, k, iters, seed)
         val cells = TextSim.assignCells(e, cent).localCheckpoint()

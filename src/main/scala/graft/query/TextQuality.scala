@@ -846,9 +846,8 @@ object TextQuality {
     * fragment into long byte sequences and inflate sequence lengths)
     * and (2) occupancy shift among the head tokens (a >5-point share
     * migration re-ranks merges/pieces). Both in exact arithmetic:
-    * occ_shift is the [[IndexDrift]] cross-multiplication
-    * (DECIMAL(38,0) / HUGEINT — no division, no wrap), oov_rate a
-    * rounded ratio; thresholds literal so the decision is
+    * occ_shift is [[DriftGauge.occShift]], oov_rate a
+    * rounded ratio ([[DriftGauge.safeRate]]); thresholds literal so the decision is
     * hash-checkable. `vocab_retrain` = any head-token shift OR
     * oov_rate > 1%.
     *
@@ -858,43 +857,25 @@ object TextQuality {
     * model-scalar crossJoin shape), and windows over ≤ topV rows. */
   def vocabDriftCheck(spark: SparkSession, dir: String,
       topV: Int = 32): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val cut = Tables.deltaCutoff(docs, "doc_id")
-    vocabDriftOf(docs.filter(col("doc_id") < cut),
-      docs.filter(col("doc_id") >= cut), topV)
+    val (base, delta) =
+      Tables.deltaSlices(Tables.load(spark, dir, "documents"), "doc_id")
+    vocabDriftOf(base, delta, topV)
   }
 
   /** Driver key `vocab_retrain_apply`: the vocabulary gauge panel
-    * AFTER applying its own decision — [[graft.query.IndexDrift
-    * .indexRetrainApply]]'s shape played for the tokenizer-vocabulary
-    * store. A fired pre-gauge means the trainers re-run over the
-    * merged corpus ([[VocabStore.mergedCounts]] makes that
-    * incremental), so the post-state's base IS the full corpus and
-    * the delta is empty — the post panel deterministically reads
-    * all-quiet (n_delta 0, every flag false, oov_rate 0); a quiet
-    * pre-gauge leaves the frozen vocabulary serving and the post
-    * panel IS the pre panel. `retrained` records the applied
-    * decision. Both stages are exact column algebra, so DuckDB
-    * recomputes the whole gauge→act→re-gauge loop. */
+    * after applying its own decision ([[DriftGauge.applied]]; a fired
+    * gauge re-runs the trainers over the merged corpus, which
+    * [[VocabStore.mergedCounts]] makes incremental). */
   def vocabRetrainApply(spark: SparkSession, dir: String,
-      topV: Int = 32): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val cut = Tables.deltaCutoff(docs, "doc_id")
-    val base = docs.filter(col("doc_id") < cut)
-    val delta = docs.filter(col("doc_id") >= cut)
-    val retrained = vocabDriftOf(base, delta, topV)
-      .agg(coalesce(bool_or(col("vocab_retrain")), lit(false)))
-      .head().getBoolean(0)
-    val (pb, pd) = if (retrained) (docs, docs.limit(0)) else (base, delta)
-    vocabDriftOf(pb, pd, topV).withColumn("retrained", lit(retrained))
-  }
+      topV: Int = 32): DataFrame =
+    DriftGauge.applied(Tables.load(spark, dir, "documents"), "doc_id",
+      "vocab_retrain")(vocabDriftOf(_, _, topV))
 
   /** Frame-parameterized core — specs plant an OOV-heavy delivery
     * through it to flip the flags. Both frames carry (doc_id, text). */
   def vocabDriftOf(base: DataFrame, delta: DataFrame, topV: Int = 32)
       : DataFrame = {
-    val toks = base.withColumn("is_delta", lit(false))
-      .unionByName(delta.withColumn("is_delta", lit(true)))
+    val toks = DriftGauge.tagged(base, delta)
       .select(col("is_delta"),
         explode(TextSim.tokens(col("text"))).as("w"))
     vocabDriftFromCounts(toks.groupBy("w").agg(
@@ -917,7 +898,6 @@ object TextQuality {
         .as("new_tokens"))
     val head = counts.filter(col("n_base") > 0)
       .orderBy(col("n_base").desc, col("w").asc).limit(topV)
-    val panel = Window.partitionBy(lit(1))
     head.crossJoin(broadcast(totals))
       .select(col("w"), col("n_base"), col("n_delta"),
         DriftGauge.occShift(col("n_delta"), col("n_base"),
@@ -926,7 +906,7 @@ object TextQuality {
         col("new_tokens"),
         (col("oov_occ") * 100 > col("td")).as("oov_drift"))
       .select(col("*"),
-        (bool_or(col("occ_shift")).over(panel) || col("oov_drift"))
+        (DriftGauge.anyRow(col("occ_shift")) || col("oov_drift"))
           .as("vocab_retrain"))
       .orderBy("w")
   }

@@ -59,11 +59,11 @@ class IvfPqDeltaSpec extends SparkSuite {
     // the both-quiet case
     val e = graft.core.Tables.load(spark, dir, "embeddings")
     val cut = e.agg(max(col("vec_id"))).head().getLong(0) * 4 / 5 + 1
-    val coarseFired = Ivf.driftDecision(
-      e.filter(col("vec_id") < cut), e.filter(col("vec_id") >= cut))
-    val pqFired = PqDrift.pqDriftCheck(spark, dir)
-      .agg(coalesce(bool_or(col("pq_retrain")), lit(false)))
-      .head().getBoolean(0)
+    val coarseFired = DriftGauge.fired(IndexDrift.indexDriftOf(
+      e.filter(col("vec_id") < cut), e.filter(col("vec_id") >= cut)),
+      "index_retrain")
+    val pqFired =
+      DriftGauge.fired(PqDrift.pqDriftCheck(spark, dir), "pq_retrain")
     info(s"gauge decisions on this fixture: coarse=$coarseFired, " +
       s"pq=$pqFired")
     val coarse = if (coarseFired) Ivf.ensureIndex(spark, dir)
@@ -85,12 +85,10 @@ class IvfPqDeltaSpec extends SparkSuite {
       val d = DriftFixtures.writeCorpus(spark, tmp, shifted = false)
       val e = graft.core.Tables.load(spark, d, "embeddings")
       val cut = e.agg(max(col("vec_id"))).head().getLong(0) * 4 / 5 + 1
-      assert(!Ivf.driftDecision(e.filter(col("vec_id") < cut),
-        e.filter(col("vec_id") >= cut)),
-        "control corpus must keep the IVF gauge quiet")
-      assert(!PqDrift.pqDriftCheck(spark, d)
-        .agg(coalesce(bool_or(col("pq_retrain")), lit(false)))
-        .head().getBoolean(0),
+      assert(!DriftGauge.fired(IndexDrift.indexDriftOf(
+        e.filter(col("vec_id") < cut), e.filter(col("vec_id") >= cut)),
+        "index_retrain"), "control corpus must keep the IVF gauge quiet")
+      assert(!DriftGauge.fired(PqDrift.pqDriftCheck(spark, d), "pq_retrain"),
         "control corpus must keep the PQ gauge quiet")
       val viaRetrain = Pq.similarityIvfPqRetrain(spark, d)
         .collect().map(_.toString).sorted.toSeq
@@ -112,9 +110,8 @@ class IvfPqDeltaSpec extends SparkSuite {
       val (_, _, coarseFired) = Ivf.retrainIfDrifted(
         e.filter(col("vec_id") < cut), e.filter(col("vec_id") >= cut))
       assert(coarseFired, "planted shift must flip the IVF gauge")
-      assert(PqDrift.pqDriftCheck(spark, d)
-        .agg(coalesce(bool_or(col("pq_retrain")), lit(false)))
-        .head().getBoolean(0), "planted shift must flip the PQ gauge")
+      assert(DriftGauge.fired(PqDrift.pqDriftCheck(spark, d), "pq_retrain"),
+        "planted shift must flip the PQ gauge")
       // both fired ⇒ both layers retrain on the full corpus ⇒ the
       // serving state IS the one-shot composition's
       val viaRetrain = Pq.similarityIvfPqRetrain(spark, d)

@@ -11,10 +11,8 @@ import graft.{SparkSuite, TestSpark}
   * delivery must stay quiet. The ACTION re-runs the [[Bpe]]/[[Unigram]]
   * trainers from [[VocabStore.mergedCounts]] — already incremental
   * (O(vocab) merge, VocabStoreSpec); its oracle-checkable face is
-  * [[TextQuality.vocabRetrainApply]] (the indexRetrainApply shape):
-  * a fired gauge makes the merged corpus the new base, so the post
-  * panel reads all-quiet; a quiet gauge leaves the pre panel
-  * standing. */
+  * [[TextQuality.vocabRetrainApply]], whose post-state is
+  * [[DriftGauge]]'s apply step. */
 class VocabDriftSpec extends SparkSuite {
 
   import spark.implicits._

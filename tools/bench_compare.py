@@ -28,6 +28,13 @@ min is an improvement, not a regression.
 Old artifacts from before round 9 have no "passes" field; for those the
 band term drops out and the 1.5x term alone applies.
 
+The calibration keys are comparable only between artifacts of the same
+"calibration_version" (an artifact without the field is version 1, the
+keys as first written; version 2 made them run the work they name).
+Across versions the box shift is not measured, so the gate prints why
+and uses shift 1.0 — the raw gate — rather than a ratio of unlike keys
+or the field-inferred shift.
+
 A key that DISAPPEARS is as much a regression as one that slows down
 (an operator silently dropped from the bench set would otherwise sail
 through the gate) — but the timing comparison over the common keys is
@@ -58,6 +65,8 @@ CAL_KEY = "calibration_fixed_work"
 # this key, its ratio normalizes the gate instead — it dominates the
 # cost profile of the benched field.
 CAL_SHUFFLE_KEY = "calibration_shuffle_work"
+# graft.Bench's CalibrationVersion; absent in artifacts written before it
+CAL_VERSION_FIELD = "calibration_version"
 
 
 def load(path: str) -> dict:
@@ -136,7 +145,11 @@ def main() -> None:
     # asymmetric-drift regime where one single-key shift mis-scales the
     # other cost class and per-key verdicts need a manual read.
     ratios = {}
-    for k in (CAL_SHUFFLE_KEY, CAL_KEY):
+    old_ver = old.get(CAL_VERSION_FIELD, 1)
+    new_ver = new.get(CAL_VERSION_FIELD, 1)
+    # unlike calibration versions measure different work: no ratio
+    cal_keys = (CAL_SHUFFLE_KEY, CAL_KEY) if old_ver == new_ver else ()
+    for k in cal_keys:
         if (k in old["queries"] and k in new["queries"]
                 and old["queries"][k] > 0 and new["queries"][k] > 0):
             ratios[k] = new["queries"][k] / old["queries"][k]
@@ -174,6 +187,11 @@ def main() -> None:
             print("WARNING: field shift and measured box shift disagree "
                   "by >50% — a broad real regression (or speedup) is "
                   "moving the field, not the box")
+    elif old_ver != new_ver:
+        shift = 1.0
+        print(f"calibration version {old_ver} -> {new_ver}: the "
+              "calibration keys measure different work, so the box shift "
+              "is unmeasured — using shift x1.00 (raw gate)")
     else:
         shift = field_shift
         print("no calibration key in both artifacts — "
