@@ -7,29 +7,11 @@ import org.apache.spark.sql.functions.sum
   * Steady-state protocol: one untimed pass of every query first (JVM
   * JIT + whole-stage-codegen compilation + parquet footer caches), then
   * the timed pass. r1 measured cold and billed ~4s of session warmup to
-  * whichever query ran first (join_multi); profiled warm-vs-cold deltas
-  * at sf0.1 are 5-20× for the cheap queries. The ingest_e2e_* keys are
-  * excluded: they run a fixed-size streaming-pipeline fixture whose
-  * latency is independent of the scale factor — correctness queries,
-  * not throughput ones.
+  * whichever query ran first; profiled warm-vs-cold deltas at sf0.1 are
+  * 5-20× for the cheap queries. Only the `Timed` keys are benched
+  * ([[SparkEntry.Role]] says why the others are not).
   */
 object Bench {
-  // ingest_e2e_*: fixed-size streaming fixture, latency independent of
-  // SF. dedup_lev_curated: the canonical→levenshtein composition — its
-  // cost class is exactly dedup_canonical + dedup_levenshtein, both
-  // already benched individually; timing the composition would double-
-  // count without exposing a new regression surface.
-  // stream_session_window_restart: the same session machine as the
-  // benched stream_session_window plus query-restart bookkeeping — a
-  // correctness gate (recovery), not a throughput surface.
-  // contract keys: verification-scale ground-truth sides (all-pairs
-  // sweeps, brute-force top-k) gating the approximate families —
-  // correctness gates, not throughput surfaces (SparkEntry.contractKeys).
-  private def excluded(k: String): Boolean =
-    k.startsWith("ingest_e2e_") || k == "dedup_lev_curated" ||
-      k == "stream_session_window_restart" ||
-      SparkEntry.contractKeys(k)
-
   /** The calibration keys' version, recorded in `bench.json`:
     * tools/bench_compare.py normalizes by the calibration ratio only
     * between artifacts of the same version. Version 1 timed frames
@@ -67,18 +49,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = Sessions.sfDir("sf0.1")
-    val spark = Sessions.local(Sessions.cpus)
     // SPARK_GRAFT_BENCH_ONLY=k1,k2 narrows the run to named keys — for
     // re-measuring a flagged key or iterating locally; the full set
     // (and the tracked artifact) remains the default. A narrowed run
     // should also set SPARK_GRAFT_BENCH_OUT (e.g. target/bench-only.json)
-    // so it does not overwrite the tracked bench.json.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val benched = SparkEntry.queries.view
-      .filterKeys(k => !excluded(k) && only.forall(_(k))).toMap ++
-      calibrationKeys
-    require(benched.size > 1, "SPARK_GRAFT_BENCH_ONLY matched no keys")
+    // so it does not overwrite the tracked bench.json. The calibration
+    // keys always run, so naming one of them alone times just those.
+    val only = Sessions.parseOnly("SPARK_GRAFT_BENCH_ONLY",
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY"),
+      SparkEntry.timed.keySet ++ calibrationKeys.keySet)
+    val benched =
+      SparkEntry.timed.filter(kv => only.forall(_(kv._1))) ++ calibrationKeys
+    val spark = Sessions.local(Sessions.cpus)
     // a failing key's cause: printed to stderr and kept (the first per
     // key) for the artifact's `causes` map, so a key that throws is
     // diagnosable from bench.json alone

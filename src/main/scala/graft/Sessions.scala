@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   *   - no UI, log level WARN.
   *
   * Also the one reader of the mains' environment knobs
-  * (`SPARK_GRAFT_CPUS`, `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_FACTORS`);
+  * (`SPARK_GRAFT_CPUS`, `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_FACTORS`, and
+  * the key selections `SPARK_GRAFT_BENCH_ONLY`/`SPARK_GRAFT_VERIFY_ONLY`);
   * each parser is a pure function of the raw value so a spec can cover
   * it without touching the environment. */
 object Sessions {
@@ -66,4 +67,19 @@ object Sessions {
       tok.trim.toIntOption.getOrElse(sys.error(
         s"SPARK_GRAFT_FACTORS: expected comma-separated ints, got '$tok'"))
     })
+
+  /** A key selection such as `SPARK_GRAFT_BENCH_ONLY=k1,k2`: unset
+    * selects every key; a set value must name at least one key, and
+    * only keys in `known`, so a typo fails the run instead of
+    * narrowing it to nothing. */
+  private[graft] def parseOnly(knob: String, raw: Option[String],
+      known: Set[String]): Option[Set[String]] = raw.map { s =>
+    val names = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    if (names.isEmpty)
+      sys.error(s"$knob: expected comma-separated key names, got '$s'")
+    val unknown = names.filterNot(known).toSeq.sorted
+    if (unknown.nonEmpty) sys.error(s"$knob: not among the ${known.size} " +
+      s"keys it selects from: ${unknown.mkString(", ")}")
+    names
+  }
 }

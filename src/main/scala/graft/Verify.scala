@@ -6,13 +6,13 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Sessions.local(Sessions.cpus)
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=k1,k2 narrows the dump to named keys —
     // local iteration on a new key without the full surface. Unset for
     // driver runs (all keys).
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Sessions.parseOnly("SPARK_GRAFT_VERIFY_ONLY",
+      sys.env.get("SPARK_GRAFT_VERIFY_ONLY"), SparkEntry.queries.keySet)
+    val spark = Sessions.local(Sessions.cpus)
+    new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_(name)) }
       .foreach { case (name, fn) =>

@@ -271,10 +271,10 @@ object Sampling {
 
   /** [[docChunk]]'s core over any (doc_id, text) frame — per-row
     * stateless column algebra, so the SAME plan runs on a batch frame
-    * and inside a streaming micro-batch
-    * ([[graft.streaming.DocChunkStream]]). No ordering here: a stream
-    * cannot globally sort; the batch key adds its presentation ORDER BY
-    * on top. */
+    * and inside a streaming micro-batch (the chunk store's delivery
+    * leg, [[graft.streaming.DeliveryStore.chunk]]). No ordering here: a
+    * stream cannot globally sort; the batch key adds its presentation
+    * ORDER BY on top. */
   def chunkOf(docs: DataFrame, win: Int = 64, stride: Int = 32)
       : DataFrame = {
     require(stride > 0 && stride <= win,
