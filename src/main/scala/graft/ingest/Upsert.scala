@@ -355,6 +355,13 @@ object SnapshotDiff {
   * references more of them. Readers union the listed dirs in one
   * multi-root scan (partition pruning still applies per root).
   *
+  * `schema = Some(s)` reads every version of a plain-layout store with
+  * the writer's known schema instead of inferring it: a parquet schema
+  * inference is a Spark job, paid on every read of the store. Only for
+  * the plain layout (bucketed reads take the catalog's schema,
+  * partitioned ones their sidecar); `s` must be the schema parquet
+  * reads back, so every column nullable.
+  *
   * @param staleTmpMs age after which an orphaned `.manifest-tmp-*`
   *   (a committer killed between tmp write and rename) is GC'd by the
   *   next successful commit. Age-gated because a CONCURRENT committer's
@@ -367,9 +374,12 @@ object SnapshotDiff {
 class SnapshotStore(val path: String,
     val bucket: Option[(String, Int)] = None,
     val partition: Option[String] = None,
-    val staleTmpMs: Long = 3600000L) {
+    val staleTmpMs: Long = 3600000L,
+    val schema: Option[org.apache.spark.sql.types.StructType] = None) {
   require(bucket.isEmpty || partition.isEmpty,
     "bucketed and partitioned layouts are mutually exclusive")
+  require(schema.isEmpty || (bucket.isEmpty && partition.isEmpty),
+    "a known schema applies to the plain layout only")
 
   private val manifestRe = "MANIFEST-(\\d+)".r
 
@@ -442,7 +452,7 @@ class SnapshotStore(val path: String,
         // readers get back exactly what was written
         .select(schema.fieldNames.map(
           org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-    } else spark.read.parquet(paths: _*)
+    } else schema.fold(spark.read)(spark.read.schema).parquet(paths: _*)
   }
 
   def exists(spark: SparkSession): Boolean = manifests(spark).nonEmpty
@@ -450,6 +460,19 @@ class SnapshotStore(val path: String,
   def read(spark: SparkSession): Option[DataFrame] =
     manifests(spark).lastOption.map { case (seq, v) =>
       readVersion(spark, seq, v)
+    }
+
+  /** The live head from ONE manifest listing: its `seq` and a reader
+    * that resolves exactly that version, or None before the first
+    * commit. A seq names one immutable version (dirs are never
+    * rewritten, and a commit only ever adds a higher seq), so a caller
+    * may key anything it derives from the reader on the seq and reuse it
+    * for as long as the seq stays live — the serving memo in
+    * [[graft.Graft]] does. The reader resolves lazily: a caller whose
+    * seq is already memoized pays for the listing only. */
+  def live(spark: SparkSession): Option[(Long, () => DataFrame)] =
+    manifests(spark).lastOption.map { case (seq, v) =>
+      seq -> (() => readVersion(spark, seq, v))
     }
 
   /** Retained snapshot sequence numbers, ascending. Retention keeps the

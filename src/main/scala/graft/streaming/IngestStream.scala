@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 import graft.core.Schemas
 import graft.core.Schemas.Status
@@ -101,7 +101,8 @@ object IngestStream {
       bucket = cfg.productsBuckets.map(("code", _)))
 
   def controlStore(cfg: Config) =
-    new SnapshotStore(cfg.warehouseDir + "/uploaded_files")
+    new SnapshotStore(cfg.warehouseDir + "/uploaded_files",
+      schema = Some(controlSchema))
 
   private def baseName(c: org.apache.spark.sql.Column) =
     regexp_extract(c, "[^/]+$", 0)
@@ -119,10 +120,18 @@ object IngestStream {
       .withColumn("ingest_batch_id", lit(0L))
   }
 
-  /** Control-table columns (graft.core.UploadedFile + batch provenance). */
-  private val controlCols = Seq("file_id", "filename", "location",
-    "content_type", "uploaded_at", "status", "total_records",
-    "records_processed", "records_failed", "ingest_batch_id")
+  /** Control-table schema (graft.core.UploadedFile + batch provenance)
+    * as parquet reads it back, every column nullable: the control
+    * store's reads take it instead of inferring it. */
+  private val controlSchema = StructType(Seq(
+    "file_id" -> StringType, "filename" -> StringType,
+    "location" -> StringType, "content_type" -> StringType,
+    "uploaded_at" -> TimestampType, "status" -> StringType,
+    "total_records" -> LongType, "records_processed" -> LongType,
+    "records_failed" -> LongType, "ingest_batch_id" -> LongType)
+    .map { case (n, t) => StructField(n, t) })
+
+  private val controlCols = controlSchema.fieldNames.toSeq
 
   private def upsertControl(cfg: Config, delta: DataFrame): Unit = {
     val spark = delta.sparkSession
