@@ -2,7 +2,8 @@ package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, MapType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, MapType, StringType,
+  StructField, StructType}
 import graft.core.Schemas
 
 /** Ingest normalization (SURVEY.md §2 A2/A5/A6/A7).
@@ -41,7 +42,14 @@ object Ingest {
     * ARRAY file → whole-file `failed`, A17). CSV has no document-level
     * syntax to break — malformed rows surface as null-padded records
     * that fail `code` validation and count as RECORD failures, not file
-    * poison. */
+    * poison.
+    *
+    * A JSON arm that infers no data column (only poison files, `[]`
+    * arrays or garbage lines) is re-read with the schema
+    * ([[ProbeCol]], `_corrupt_record`): Spark refuses a JSON scan whose
+    * only column is `_corrupt_record`, so the always-null [[ProbeCol]]
+    * keeps the result cacheable and filterable like a healthy batch's.
+    * Callers drop [[ProbeCol]] before [[prepare]]. */
   def readDeliveries(spark: SparkSession, paths: Seq[String]): DataFrame = {
     // loud precondition — the trailing reduce would otherwise surface an
     // unrelated UnsupportedOperationException on an empty path list
@@ -52,12 +60,18 @@ object Ingest {
       p.endsWith(".jsonl") || p.endsWith(".ndjson"))
     def readJson(ps: Seq[String], multiLine: Boolean): Option[DataFrame] =
       if (ps.isEmpty) None
-      else Some(spark.read
-        .option("multiLine", multiLine.toString)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(ps: _*)
-        .withColumn("_source_file", input_file_name()))
+      else {
+        def reader = spark.read
+          .option("multiLine", multiLine.toString)
+          .option("mode", "PERMISSIVE")
+          .option("columnNameOfCorruptRecord", "_corrupt_record")
+        val inferred = reader.json(ps: _*)
+        val df =
+          if (inferred.columns.forall(_ == "_corrupt_record"))
+            reader.schema(probeSchema).json(ps: _*)
+          else inferred
+        Some(df.withColumn("_source_file", input_file_name()))
+      }
     val csvDfs = csv.map(p => spark.read
       .option("header", "true")
       .option("mode", "PERMISSIVE")
@@ -70,6 +84,13 @@ object Ingest {
       readJson(jsonl, multiLine = false).toSeq ++ csvDfs)
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
+
+  /** The always-null data column of a JSON arm that inferred none. */
+  val ProbeCol = "_graft_probe"
+
+  private val probeSchema = StructType(Seq(
+    StructField(ProbeCol, StringType),
+    StructField("_corrupt_record", StringType)))
 
   /** Normalize an arbitrary-schema record DataFrame into the canonical
     * product shape: core columns + `extras` map + retained `raw` JSON +

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * app/api/main.py:59-103): constant-memory chunked copy (1 MiB chunks,
   * main.py:73-75) to a unique, TIMESTAMP-PREFIXED name
   * `{epochMillis}_{token}_{originalName}` (main.py:65-69). The prefix is
-  * load-bearing downstream: [[Upsert.mergeFields]] orders same-key
+  * load-bearing downstream: [[Upsert.commitDeltaCow]] orders same-key
   * records by file name, so lexicographic order == arrival order.
   *
   * Deliberately out of Spark: upload is a byte-stream boundary, not a

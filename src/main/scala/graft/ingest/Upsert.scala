@@ -212,8 +212,10 @@ object Upsert {
     * post-merge content is its current content — exactness, not an
     * approximation. Idempotent under replay like the full-merge path
     * (re-merging an already-applied delivery converges: the version
-    * vector decides winners, not arrival order). Returns the touched
-    * bucket ids (observability; ≤ n by construction — the collect is
+    * vector decides winners, not arrival order). A delta that touches
+    * no bucket and carries no tag publishes nothing: the live version
+    * would be republished byte for byte. Returns the touched bucket ids
+    * (observability; ≤ n by construction — the collect is
     * bucket-count-bounded, never data-bounded). */
   def commitDeltaCow(store: SnapshotStore, snapshot: DataFrame,
       delta: DataFrame, key: String, version: Seq[Column] = Nil,
@@ -226,6 +228,7 @@ object Upsert {
     val bucketOf = pmod(hash(col(key)), lit(n))
     val touched = delta.select(bucketOf.as("__b")).distinct()
       .collect().map(_.getInt(0)).toSet
+    if (touched.isEmpty && tags.isEmpty) return touched
     val merged = mergeFieldsJoin(
       snapshot.filter(bucketOf.isin(touched.toSeq: _*)), delta, key,
       version, mergeWholly)

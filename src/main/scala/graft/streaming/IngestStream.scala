@@ -27,18 +27,23 @@ import graft.ingest.{Ingest, SnapshotStore, Tracker, Upsert}
   *      METADATA (path, modificationTime); content is never read here
   *      (column pruning keeps the scan metadata-only). File arrival is the
   *      signal, as in SURVEY §1.1.
-  *   2. control journey: file rows upserted as `uploaded`, then
-  *      `processing` (reference file_splitter.py:62-66) — the 5-state
-  *      machine's transient states are observable mid-batch.
+  *   2. control journey: the landing dir is the queue, so a landed file
+  *      has no control row until its batch starts; then its row is
+  *      upserted as `processing` (reference file_splitter.py:62-66),
+  *      observable mid-batch.
   *   3. parse: one distributed batch read of the batch's files (top-level
   *      JSON arrays, PERMISSIVE). A malformed file yields a corrupt marker
   *      row → the whole file flips to `failed` and contributes no records,
   *      while healthy files in the same batch proceed (A17; reference
   *      file_splitter.py:74-93 keeps poison files and marks them failed).
-  *   4. upsert: `Ingest.prepare` → validate → `Upsert.mergeFields` into the
-  *      products [[SnapshotStore]] (field-level `$set` parity). The
-  *      version vector (file name, which the reference prefixes with an
-  *      upload timestamp — main.py:65-69) makes later deliveries win
+  *      Empty and poison-only batches take the same path (the read adds
+  *      an always-null probe column, [[Ingest.readDeliveries]]).
+  *   4. upsert: `Ingest.prepare` → validate → `Upsert.commitDeltaCow`
+  *      into the bucketed products [[SnapshotStore]] (field-level `$set`
+  *      parity; only the buckets the delivery touches are rewritten, and
+  *      a batch with no valid record publishes no version). The version
+  *      vector (file name, which the reference prefixes with an upload
+  *      timestamp — main.py:65-69) makes later deliveries win
   *      deterministically even inside one batch.
   *   5. completion: per-file counters (Tracker) → terminal status
   *      (`processed` / `processed_with_errors` / `failed`) upserted into
@@ -51,13 +56,18 @@ import graft.ingest.{Ingest, SnapshotStore, Tracker, Upsert}
   *
   * Scale: discovery is metadata-only; parsing distributes across files
   * (one task per array file — deliveries arrive many-files-per-week at
-  * 100 TB, so parallelism is per-file); the merge is one hash shuffle of
-  * delta ∪ snapshot on the key (bucketed snapshot would remove even that,
-  * see Upsert). The control table is O(#files) — tiny by construction.
+  * 100 TB, so parallelism is per-file); the merge shuffles only the
+  * delta — the snapshot is bucketed on the key and joined in place, and
+  * only the touched buckets are rewritten (Upsert.commitDeltaCow). The
+  * control table is O(#files) — tiny by construction.
   */
 object IngestStream {
 
-  /** @param landingDir   directory uploads land in (the reference's
+  /** Where the pipeline reads, writes and checkpoints, and how it
+    * batches. The store layouts are fixed: products bucketed on `code`
+    * ([[productsStore]]), the control store plain ([[controlStore]]).
+    *
+    * @param landingDir   directory uploads land in (the reference's
     *                     FILES_DIRECTORY, settings.py:17-20)
     * @param warehouseDir root for the `products` and `uploaded_files`
     *                     snapshot stores
@@ -67,9 +77,6 @@ object IngestStream {
     * @param maxFilesPerTrigger bound files per micro-batch (the batching
     *                     knob replacing the reference's BATCH_SIZE=100,
     *                     SURVEY §2 A3)
-    * @param productsBuckets bucket count for the products snapshot
-    *                     (None = plain parquet layout — lets the crash
-    *                     suite prove the replay seam on BOTH layouts)
     * @param arraySplitBytes JSON-array deliveries above this size are
     *                     stream-split into JSONL shards before the
     *                     distributed parse ([[graft.ingest.ArraySplitter]])
@@ -88,7 +95,6 @@ object IngestStream {
       checkpointDir: String,
       archiveDir: Option[String] = None,
       maxFilesPerTrigger: Int = 16,
-      productsBuckets: Option[Int] = Some(8),
       arraySplitBytes: Long = 256L << 20,
       afterBatchCommit: Long => Unit = _ => ())
 
@@ -98,7 +104,7 @@ object IngestStream {
     * 8 buckets locally; production sizes toward size/target-partition. */
   def productsStore(cfg: Config) =
     new SnapshotStore(cfg.warehouseDir + "/products",
-      bucket = cfg.productsBuckets.map(("code", _)))
+      bucket = Some(("code", 8)))
 
   def controlStore(cfg: Config) =
     new SnapshotStore(cfg.warehouseDir + "/uploaded_files",
@@ -230,9 +236,9 @@ object IngestStream {
       .withColumn("records_failed", lit(0L))
       .select(controlCols.map(col): _*)
 
-    // uploaded → processing journey (reference file_splitter.py:62-66);
-    // each is an atomic control-store commit an observer can read.
-    upsertControl(cfg, withStatus(Status.Uploaded))
+    // the batch's files enter `processing` (reference
+    // file_splitter.py:62-66): an atomic control-store commit an
+    // observer can read until the terminal rows replace it
     upsertControl(cfg, withStatus(Status.Processing))
 
     // distributed parse of this batch's files; cached because it feeds
@@ -252,87 +258,6 @@ object IngestStream {
       .cache()
     val hasCorrupt = raw.columns.contains("_corrupt_record")
 
-    // degenerate batch: NO data columns inferred at all — every file is
-    // either unparseable (corrupt marker only) or an empty delivery.
-    // Spark (rightly) refuses queries that touch only the corrupt
-    // column of such a relation, and there is nothing to merge anyway —
-    // but status is still PER FILE (A17): a healthy empty delivery
-    // ([] array) batched with a poison file stays `processed`; only the
-    // files that actually produced corrupt markers fail (array formats)
-    // or count record failures (line formats).
-    val dataCols = raw.columns
-      .filterNot(Set("_corrupt_record", "_source_file", "_file_id"))
-    if (dataCols.isEmpty) {
-      val statusRows =
-        if (!hasCorrupt) withStatus(Status.Processed)
-        else {
-          // `raw` is unusable here: its ONLY real column is the corrupt
-          // marker, and the JSON scan (rightly) refuses corrupt-only
-          // reads — even cache materialization is one.
-          val (jsonlF, arrayF) = files.map(_._1)
-            .filterNot(_.endsWith(".csv"))
-            .partition(p => p.endsWith(".jsonl") || p.endsWith(".ndjson"))
-          // ARRAY files: re-probe with an explicit schema carrying a
-          // dummy data column (the scan must never be corrupt-only);
-          // any corrupt marker ⇒ whole-file poison.
-          val probeSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("__probe",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("_corrupt_record",
-              org.apache.spark.sql.types.StringType)))
-          val poisonIds =
-            if (arrayF.isEmpty)
-              Seq.empty[String].toDF("_file_id")
-            else spark.read.schema(probeSchema)
-              .option("multiLine", "true")
-              .option("mode", "PERMISSIVE")
-              .option("columnNameOfCorruptRecord", "_corrupt_record")
-              .json(arrayF: _*)
-              .withColumn("_file_id", baseName(input_file_name()))
-              // vacuous __probe disjunct keeps a data column in the
-              // scan's required schema (corrupt-only would be refused)
-              .filter(col("_corrupt_record").isNotNull ||
-                col("__probe").isNotNull)
-              .select("_file_id").distinct()
-          // LINE files: in a degenerate batch, EVERY line is a failed
-          // record (unparseable, or parseable-but-empty ⇒ no `code`),
-          // so the honest counters are the nonblank line counts — via
-          // a text read, which has no corrupt-column legality problem.
-          val lineCnts =
-            if (jsonlF.isEmpty)
-              Seq.empty[(String, Long)].toDF("_file_id", "__n_lines")
-            else spark.read.text(jsonlF: _*)
-              .withColumn("_file_id", baseName(input_file_name()))
-              .filter(trim(col("value")) =!= "")
-              .groupBy("_file_id")
-              .agg(count(lit(1)).as("__n_lines"))
-          val isLineFmt = col("file_id").rlike("\\.(jsonl|ndjson)$")
-          fileMeta
-            .join(broadcast(poisonIds.withColumn("__poison", lit(true))),
-              col("file_id") === poisonIds("_file_id"), "left")
-            .drop("_file_id")
-            .join(broadcast(lineCnts),
-              col("file_id") === lineCnts("_file_id"), "left")
-            .drop("_file_id")
-            .withColumn("status",
-              when(col("__poison").isNotNull, lit(Status.Failed))
-                .when(isLineFmt && coalesce(col("__n_lines"), lit(0L)) > 0,
-                  lit(Status.ProcessedWithErrors))
-                .otherwise(lit(Status.Processed)))
-            .withColumn("total_records",
-              when(isLineFmt, coalesce(col("__n_lines"), lit(0L)))
-                .otherwise(lit(0L)))
-            .withColumn("records_processed", lit(0L))
-            .withColumn("records_failed",
-              when(isLineFmt, coalesce(col("__n_lines"), lit(0L)))
-                .otherwise(lit(0L)))
-            .select(controlCols.map(col): _*)
-        }
-      upsertControl(cfg, statusRows)
-      raw.unpersist()
-      return
-    }
-
     // A17: a malformed JSON-ARRAY file yields corrupt marker rows → the
     // whole file is failed and none of its rows are ingested (the
     // reference's ijson stream-parse failure, file_splitter.py:74-93).
@@ -350,29 +275,22 @@ object IngestStream {
     val healthy = raw.join(broadcast(failedFileIds), Seq("_file_id"),
       "left_anti")
 
-    val prepared = Ingest.prepare(healthy.drop("_file_id"))
+    val prepared = Ingest.prepare(healthy.drop("_file_id", Ingest.ProbeCol))
       .withColumn("file_id",
         regexp_replace(baseName(col("file_id")),
           graft.ingest.ArraySplitter.ShardSuffixRe, ""))
 
     // upsert valid records into the products snapshot; later file names
-    // (timestamp-prefixed by the reference's upload naming) win. Join
-    // form: only the delivery shuffles, the bucketed snapshot is read
-    // in place (the 100 TB merge shape).
+    // (timestamp-prefixed by the reference's upload naming) win.
+    // Bucket-grain copy-on-write: only the delivery shuffles, only the
+    // buckets it touches are rewritten and the rest are inherited —
+    // O(delta) write volume, the Mongo-parity cost
+    // (data_processor.py:95-113). A batch with no valid record touches
+    // no bucket and publishes no products version.
     val store = productsStore(cfg)
-    store.read(spark) match {
-      case Some(snapshot) if store.bucket.isDefined =>
-        // bucket-grain copy-on-write: write only the delivery-touched
-        // buckets, inherit the rest — O(delta) write volume, the
-        // Mongo-parity cost (data_processor.py:95-113)
-        Upsert.commitDeltaCow(store, snapshot, Ingest.valid(prepared),
-          key = "code", version = Seq(col("file_id")))
-      case other =>
-        val snapshot = other.getOrElse(emptyProducts(spark))
-        store.overwrite(Upsert.mergeFieldsJoin(snapshot,
-          Ingest.valid(prepared), key = "code",
-          version = Seq(col("file_id"))))
-    }
+    Upsert.commitDeltaCow(store,
+      store.read(spark).getOrElse(emptyProducts(spark)),
+      Ingest.valid(prepared), key = "code", version = Seq(col("file_id")))
 
     // terminal control rows: counters for healthy files, `failed` for
     // poison files (total unknown ⇒ 0, matching the reference which never
@@ -386,14 +304,9 @@ object IngestStream {
         "records_failed"))
       .na.fill(Status.Processed, Seq("status"))
       .select(controlCols.map(col): _*)
-    val failedRows = fileMeta
+    val failedRows = withStatus(Status.Failed)
       .join(broadcast(failedFileIds),
         col("file_id") === col("_file_id"), "left_semi")
-      .withColumn("status", lit(Status.Failed))
-      .withColumn("total_records", lit(0L))
-      .withColumn("records_processed", lit(0L))
-      .withColumn("records_failed", lit(0L))
-      .select(controlCols.map(col): _*)
     upsertControl(cfg, healthyRows.unionByName(failedRows))
     raw.unpersist()
   }

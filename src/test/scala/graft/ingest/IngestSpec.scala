@@ -105,4 +105,22 @@ class IngestSpec extends SparkSuite {
       } finally raw.unpersist()
     }
   }
+
+  test("readDeliveries: poison-only and empty-array files can be cached and filtered on _corrupt_record") {
+    withTmpDir { dir =>
+      val poison = dir.resolve("poison.json")
+      val empty = dir.resolve("empty.json")
+      java.nio.file.Files.writeString(poison, """[{"code": oops""")
+      java.nio.file.Files.writeString(empty, "[]")
+      def corruptFiles(p: java.nio.file.Path): Set[String] = {
+        val raw = Ingest.readDeliveries(spark, Seq(p.toString)).cache()
+        try raw.filter(col("_corrupt_record").isNotNull)
+          .select(regexp_extract(col("_source_file"), "[^/]+$", 0))
+          .as[String].collect().toSet
+        finally raw.unpersist()
+      }
+      assert(corruptFiles(poison) === Set("poison.json"))
+      assert(corruptFiles(empty) === Set.empty)
+    }
+  }
 }

@@ -14,15 +14,14 @@ import java.nio.file.{Files, Paths}
   * redelivery-after-ack window, mq.py:162-181); the parent then proves
   * the replay converges instead of double-applying.
   *
-  * args: landingDir warehouseDir checkpointDir barrierDir
-  *       bucketed(true|false) killBatchId
+  * args: landingDir warehouseDir checkpointDir barrierDir killBatchId
   * Never exits on its own in the kill path — the SIGKILL is the point;
   * reaching the end is a loud failure the spec surfaces via exit code.
   */
 object IngestCrashChild {
 
   def main(args: Array[String]): Unit = {
-    val Array(landing, wh, ckpt, barrierDir, bucketed, killBatch) = args
+    val Array(landing, wh, ckpt, barrierDir, killBatch) = args
     val spark = graft.Sessions.local(2,
       "spark.app.name" -> "graft-ingest-crash-child",
       // own warehouse: the bucketed products store registers catalog
@@ -35,7 +34,6 @@ object IngestCrashChild {
       warehouseDir = wh,
       checkpointDir = ckpt,
       maxFilesPerTrigger = 1,
-      productsBuckets = if (bucketed.toBoolean) Some(4) else None,
       afterBatchCommit = { batchId =>
         if (batchId == killBatch.toLong) {
           // signal the parent the seam is reached: stores committed,

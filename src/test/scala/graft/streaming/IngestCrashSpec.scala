@@ -23,7 +23,10 @@ import graft.ingest.ForkedJvm
   * upsert). Until now this was argued from the ScalaCheck-proven merge
   * idempotence; here it is executed.
   *
-  * Invariants, on both products-store layouts:
+  * Invariants, on the bucketed products store (the one layout
+  * [[IngestStream.productsStore]] has; the plain `SnapshotStore.overwrite`
+  * replay stays covered by the control store, which every batch commits
+  * here, and by SnapshotCrashSpec and the race specs):
   *  - the kill verifiably landed IN the seam: batch 0's offsets logged,
   *    its commit log entry absent, its products version already live;
   *  - after restart + drain, the products table is row-identical to a
@@ -63,12 +66,11 @@ class IngestCrashSpec extends SparkSuite {
     }
   }
 
-  private def cfgFor(ws: Path, bucketed: Boolean) = IngestStream.Config(
+  private def cfgFor(ws: Path) = IngestStream.Config(
     landingDir = ws.resolve("landing").toString,
     warehouseDir = ws.resolve("wh").toString,
     checkpointDir = ws.resolve("ckpt").toString,
-    maxFilesPerTrigger = 1,
-    productsBuckets = if (bucketed) Some(4) else None)
+    maxFilesPerTrigger = 1)
 
   /** The run-time stamp (current_timestamp at prepare) is the one
     * legitimately run-dependent column; everything else must match.
@@ -96,18 +98,15 @@ class IngestCrashSpec extends SparkSuite {
         s"  missing rows: ${missing.mkString("; ")}")
   }
 
-  for ((label, bucketed) <- Seq("plain parquet" -> false,
-      "bucketed" -> true))
   test("SIGKILL the ingest query between snapshot commit and offset " +
-      s"commit: the replayed micro-batch lands idempotently ($label)") {
+      "commit: the replayed micro-batch lands idempotently (bucketed)") {
     withTmpDir { dir =>
       val ws = dir.resolve("crashed")
       writeLanding(ws.resolve("landing"))
       val barrier = Files.createDirectories(dir.resolve("barrier"))
       val child = forkChild("graft.streaming.IngestCrashChild",
         Seq(ws.resolve("landing").toString, ws.resolve("wh").toString,
-          ws.resolve("ckpt").toString, barrier.toString,
-          bucketed.toString, "0"),
+          ws.resolve("ckpt").toString, barrier.toString, "0"),
         barrier, 0)
       try {
         awaitFile(barrier.resolve("killpoint"),
@@ -119,7 +118,7 @@ class IngestCrashSpec extends SparkSuite {
         // its commit entry is absent (the engine never acknowledged),
         // yet its products upsert is already a live committed version —
         // exactly the replay window under test
-        val cfg = cfgFor(ws, bucketed)
+        val cfg = cfgFor(ws)
         assert(Files.exists(ws.resolve("ckpt/offsets/0")),
           "precondition: batch 0's offsets must be logged before the kill")
         assert(!Files.exists(ws.resolve("ckpt/commits/0")),
@@ -137,7 +136,7 @@ class IngestCrashSpec extends SparkSuite {
         // clean twin: same bytes, fresh warehouse + checkpoint
         val cleanWs = dir.resolve("clean")
         writeLanding(cleanWs.resolve("landing"))
-        val cleanCfg = cfgFor(cleanWs, bucketed)
+        val cleanCfg = cfgFor(cleanWs)
         IngestStream.runAvailable(spark, cleanCfg)
 
         val got = productsOf(cfg)

@@ -174,6 +174,33 @@ class IngestStreamSpec extends SparkSuite {
     }
   }
 
+  test("a poison array file batched with a healthy JSONL delivery fails alone") {
+    withTmpDir { ws =>
+      val landing = Files.createDirectories(ws.resolve("landing"))
+      // the array arm alone infers no data column; the batch must not
+      // fail on it, and the JSONL delivery must land
+      Files.writeString(landing.resolve("d1.jsonl"),
+        "{\"code\":\"A\"}\n{\"code\":\"B\"}")
+      Files.writeString(landing.resolve("d2_poison.json"), poison)
+      val cfg = IngestStream.Config(
+        landingDir = landing.toString,
+        warehouseDir = ws.resolve("wh").toString,
+        checkpointDir = ws.resolve("ckpt").toString)
+      IngestStream.runAvailable(spark, cfg)
+      val snap = IngestStream.productsStore(cfg).read(spark).get
+      assert(snap.select("code").as[String].collect().sorted.toSeq
+        === Seq("A", "B"))
+      val ctl = IngestStream.controlStore(cfg).read(spark).get
+        .collect().map(r => r.getAs[String]("file_id") ->
+          ((r.getAs[String]("status"), r.getAs[Long]("total_records"),
+            r.getAs[Long]("records_processed"),
+            r.getAs[Long]("records_failed")))).toMap
+      assert(ctl === Map(
+        "d1.jsonl" -> ((Status.Processed, 2L, 2L, 0L)),
+        "d2_poison.json" -> ((Status.Failed, 0L, 0L, 0L))))
+    }
+  }
+
   test("batching invariance: maxFilesPerTrigger=1 (3 micro-batches) ends in the same state as one batch") {
     def runWith(maxFiles: Int): (Seq[String], Map[String, (String, Long, Long, Long)]) =
       withTmpDir { ws =>
@@ -203,7 +230,7 @@ class IngestStreamSpec extends SparkSuite {
     assert(ctlPer === ctlOne)
   }
 
-  test("status journey: control table passes through uploaded and processing") {
+  test("status journey: control table passes through processing to the terminal status") {
     withTmpDir { ws =>
       val landing = Files.createDirectories(ws.resolve("landing"))
       Files.writeString(landing.resolve("one.json"), """[{"code":"1"}]""")
@@ -211,17 +238,46 @@ class IngestStreamSpec extends SparkSuite {
         landingDir = landing.toString,
         warehouseDir = ws.resolve("wh").toString,
         checkpointDir = ws.resolve("ckpt").toString)
-      // drive processBatch in stages is internal; instead assert the
-      // terminal state and that the control store committed ≥3 manifests
-      // (uploaded → processing → terminal), proving the journey happened.
+      // the landing dir is the queue: a landed file has no control row
+      // until its batch starts, then two commits — `processing`, then
+      // the terminal row — and both versions are retained
+      IngestStream.runAvailable(spark, cfg)
+      val store = IngestStream.controlStore(cfg)
+      assert(store.versions(spark) === Seq(0L, 1L))
+      def statusAt(seq: Long) = store.readAt(spark, seq).get
+        .select("status").as[String].collect().toSeq
+      assert(statusAt(0L) === Seq(Status.Processing))
+      assert(statusAt(1L) === Seq(Status.Processed))
+    }
+  }
+
+  test("an all-invalid delivery after a healthy one ends processed_with_errors and publishes no products version") {
+    withTmpDir { ws =>
+      val landing = Files.createDirectories(ws.resolve("landing"))
+      val cfg = IngestStream.Config(
+        landingDir = landing.toString,
+        warehouseDir = ws.resolve("wh").toString,
+        checkpointDir = ws.resolve("ckpt").toString)
+      Files.writeString(landing.resolve("d1_week1.json"), week1)
+      IngestStream.runAvailable(spark, cfg)
+      val products = IngestStream.productsStore(cfg)
+      val versions = products.versions(spark)
+      def rows() = products.read(spark).get
+        .collect().map(_.toString).sorted.toSeq
+      val before = rows()
+
+      Files.writeString(landing.resolve("d2_nocode.json"),
+        """[{"product_name":"no code"},{"brands":"Acme","code":""}]""")
       IngestStream.runAvailable(spark, cfg)
       val ctl = IngestStream.controlStore(cfg).read(spark).get
-      assert(ctl.select("status").as[String].collect().toSeq
-        === Seq(Status.Processed))
-      val manifests = new java.io.File(
-        ws.resolve("wh").resolve("uploaded_files").toString)
-        .listFiles().map(_.getName).filter(_.startsWith("MANIFEST-"))
-      assert(manifests.map(_.stripPrefix("MANIFEST-").toLong).max >= 2L)
+        .filter(col("file_id") === "d2_nocode.json")
+        .select("status", "total_records", "records_processed",
+          "records_failed")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).toSeq
+      assert(ctl === Seq((Status.ProcessedWithErrors, 2L, 0L, 2L)))
+      assert(products.versions(spark) === versions)
+      assert(rows() === before)
     }
   }
 
